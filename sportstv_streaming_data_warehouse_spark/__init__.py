@@ -17,6 +17,15 @@ batch ETL; see /root/reference), re-expressed idiomatically on Spark:
 
 __version__ = "0.1.0"
 
-from .session import get_spark
-
 __all__ = ["get_spark", "__version__"]
+
+
+def __getattr__(name):
+    # lazy (PEP 562): importing the package must not import pyspark, so
+    # the worker daemon (``daemon.py``, run as ``python -m``) can filter
+    # sys.path before pyspark loads
+    if name == "get_spark":
+        from .session import get_spark
+
+        return get_spark
+    raise AttributeError(f"module {__name__!r} has no attribute {name!r}")

@@ -23,6 +23,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from ..functions.calendar import calendar_keys, date_spine
 from ..functions.inference import SPORT_RULES, infer_with_precedence
@@ -301,7 +302,13 @@ def run_etl(
         if timings is not None:
             timings["fact_write_sec"] = round(_time.perf_counter() - _t0, 2)
         bounds = obs.get
-        fact = spark.read.parquet(out_path)
+        # read back with the schema the plan already knows (partition
+        # column last, as the partitioned layout returns it): inferring
+        # it would cost a footer-reading job on every reload
+        schema = fact.schema
+        fact = spark.read.schema(
+            StructType([f for f in schema if f.name != "year"] + [schema["year"]])
+        ).parquet(out_path)
     else:
         _t0 = _time.perf_counter()
         bounds = txns.agg(

@@ -16,15 +16,15 @@ this sandbox — so this adapter gives the same semantics over stdlib
   table is split into ``num_partitions`` range slices using Spark's own
   JDBC stride convention (first/last slices unbounded, NULLs in slice
   0), and EACH SLICE is read by an executor-side task through its own
-  connection via ``mapInPandas`` — the LIMIT/OFFSET single-connection
+  connection via ``mapInArrow`` — the LIMIT/OFFSET single-connection
   loop, distributed. OFFSET pagination is O(n²) in SQLite (every batch
   re-scans from row 0); range predicates on an indexed column are
   O(rows returned).
 
 Scale posture: ``sqlite3`` is stdlib on every executor, so this runs on
 a real cluster whenever the .db file is on a shared filesystem; each
-task holds one read-only connection for its slice, and the Arrow batch
-path (mapInPandas) keeps rows off the Python row-at-a-time path. On a
+task holds one read-only connection for its slice and hands its rows to
+Spark as Arrow batches built straight from the cursor (no pandas). On a
 production warehouse swap in sources/jdbc.read_jdbc — the signature is
 deliberately parallel.
 """
@@ -32,7 +32,14 @@ deliberately parallel.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql.types import StructType
+from pyspark.sql.types import (
+    DataType,
+    DoubleType,
+    LongType,
+    StringType,
+    StructField,
+    StructType,
+)
 
 
 def _quote(identifier: str) -> str:
@@ -86,6 +93,65 @@ def build_slice_sql(
     return sql
 
 
+def _declared_type(declared: str) -> DataType | None:
+    """The Spark type of a column from its declared SQLite type, by
+    SQLite's own affinity rules; None for a column without a declared
+    type or with BLOB/NUMERIC affinity (those are typed by the probe)."""
+    t = declared.upper()
+    if "INT" in t:
+        return LongType()
+    if any(k in t for k in ("CHAR", "CLOB", "TEXT")):
+        return StringType()
+    if any(k in t for k in ("REAL", "FLOA", "DOUB")):
+        return DoubleType()
+    return None
+
+
+def _infer_schema(
+    db_path: str,
+    table: str,
+    columns: list[str] | None = None,
+    predicate: str | None = None,
+) -> StructType:
+    """The schema a read of ``columns`` (default: every column) returns:
+    declared column types first (``PRAGMA table_info``); a column with no
+    usable declared type is typed from a 100-row probe of its values."""
+    import sqlite3
+    from contextlib import closing
+
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import from_arrow_type
+
+    with closing(sqlite3.connect(db_path)) as con:
+        info = con.execute(f"PRAGMA table_info({_quote(table)})").fetchall()
+        if not info:
+            raise ValueError(f"no table {table!r} in {db_path}")
+        declared = {row[1]: _declared_type(row[2]) for row in info}
+        names = columns or [row[1] for row in info]
+        types = [declared.get(n) for n in names]
+        untyped = [i for i, t in enumerate(types) if t is None]
+        if untyped:
+            sql = build_slice_sql(
+                table, [names[i] for i in untyped], predicate, "1=1"
+            )
+            rows = con.execute(f"{sql} LIMIT 100").fetchall()
+    for j, i in enumerate(untyped):
+        arrow = pa.array([r[j] for r in rows]).type
+        if pa.types.is_null(arrow):
+            raise ValueError(
+                f"cannot infer a type for {table}.{names[i]}: it has no "
+                "declared type and the 100-row probe holds no non-NULL value "
+                "(empty table, or the predicate matches nothing early) — "
+                "pass an explicit schema="
+            )
+        types[i] = from_arrow_type(arrow)
+    return StructType([StructField(n, t) for n, t in zip(names, types)])
+
+
+#: rows per Arrow batch a slice reader hands to Spark
+_BATCH_ROWS = 10_000
+
+
 def read_sqlite(
     spark: SparkSession,
     db_path: str,
@@ -108,14 +174,14 @@ def read_sqlite(
     task (the single-connection trap — fine for dimension tables, wrong
     for the 1M-row fact, exactly as with spark.read.jdbc).
 
-    ``schema`` pins the result types; when omitted it is inferred from a
-    driver-side 100-row probe (SQLite is dynamically typed — pass an
-    explicit schema when early rows are unrepresentative or a column can
-    be all-NULL in the probe window).
+    ``schema`` pins the result types; when omitted they come from the
+    declared column types (INT → bigint, CHAR/CLOB/TEXT → string,
+    REAL/FLOA/DOUB → double, SQLite's affinity rules), so NULLs never
+    change a column's type. Only a column without such a declared type
+    is typed from a driver-side 100-row probe — pass an explicit schema
+    when its early rows are unrepresentative or all NULL.
     """
-    import sqlite3
-
-    import pandas as pd
+    from pyspark.sql.pandas.types import to_arrow_schema
 
     if partition_column is not None:
         if lower_bound is None or upper_bound is None:
@@ -132,63 +198,36 @@ def read_sqlite(
         clauses = ["1=1"]
 
     if schema is None:
-        from contextlib import closing
-
-        probe_sql = build_slice_sql(table, columns, predicate, "1=1")
-        with closing(sqlite3.connect(db_path)) as con:
-            probe = pd.read_sql_query(f"{probe_sql} LIMIT 100", con)
-        if probe.empty:
-            raise ValueError(
-                f"cannot infer a schema for {table!r}: the 100-row probe "
-                "returned no rows (empty table, or the predicate matches "
-                "nothing early) — pass an explicit schema="
-            )
-        schema = spark.createDataFrame(probe).schema
-
-    names = [f.name for f in schema.fields]
-    # Per-field pandas NULLABLE dtypes: a slice whose rows have NULLs in a
-    # column the driver probe saw as all-integer comes back from pandas as
-    # float64/NaN and would fail (or coerce lossily) against the declared
-    # LongType at the mapInPandas Arrow boundary — coercing each slice to
-    # the extension dtype (Int64 etc., NULL-capable) makes slice-local
-    # dtype drift impossible by construction.
-    _NULLABLE = {
-        "tinyint": "Int8",
-        "smallint": "Int16",
-        "int": "Int32",
-        "bigint": "Int64",
-        "float": "Float32",
-        "double": "Float64",
-        "boolean": "boolean",
-    }
-    coerce = {
-        f.name: _NULLABLE[f.dataType.simpleString()]
-        for f in schema.fields
-        if f.dataType.simpleString() in _NULLABLE
-    }
+        schema = _infer_schema(db_path, table, columns, predicate)
+    select = columns or schema.fieldNames()
+    arrow_schema = to_arrow_schema(schema)
 
     def read_slices(batches):
         # sqlite3's context manager only manages TRANSACTIONS — closing()
-        # actually releases the file handle per slice (round-8 review
-        # finding: long-lived python workers otherwise hold the .db open)
-        from contextlib import closing as _closing
+        # actually releases the file handle per slice (long-lived python
+        # workers otherwise hold the .db open)
+        import sqlite3
+        from contextlib import closing
 
-        import pandas as _pd
-        import sqlite3 as _sqlite3
+        import pyarrow as pa
 
-        for pdf in batches:
-            for clause in pdf["clause"]:
-                sql = build_slice_sql(table, columns, predicate, clause)
-                with _closing(_sqlite3.connect(db_path)) as con:
-                    out = _pd.read_sql_query(sql, con)
-                for c, dt in coerce.items():
-                    if str(out[c].dtype) != dt:
-                        out[c] = out[c].astype(dt)
-                yield out[names]
+        for batch in batches:
+            for i in batch.column(0).to_pylist():
+                sql = build_slice_sql(table, select, predicate, clauses[i])
+                with closing(sqlite3.connect(db_path)) as con:
+                    cur = con.execute(sql)
+                    while rows := cur.fetchmany(_BATCH_ROWS):
+                        # inferred then safely cast: a value the declared
+                        # type cannot hold raises instead of truncating
+                        yield pa.RecordBatch.from_arrays(
+                            [
+                                pa.array(values).cast(field.type)
+                                for values, field in zip(zip(*rows), arrow_schema)
+                            ],
+                            schema=arrow_schema,
+                        )
 
-    # one row per slice, round-robin repartitioned so every slice is its
-    # own task (hash-repartitioning on the clause could collide slices)
-    slices = spark.createDataFrame(
-        [(c,) for c in clauses], "clause string"
-    ).repartition(len(clauses))
-    return slices.mapInPandas(read_slices, schema=schema)
+    # slice i is partition i: range() splits evenly, so no shuffle is
+    # needed to give every slice its own task
+    slices = spark.range(len(clauses), numPartitions=len(clauses))
+    return slices.mapInArrow(read_slices, schema)

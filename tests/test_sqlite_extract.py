@@ -11,6 +11,7 @@ reads per Spark's JDBC partitioning convention.
 """
 
 import sqlite3
+from contextlib import closing
 
 import pytest
 from pyspark.sql import functions as F
@@ -176,15 +177,92 @@ def test_predicate_pushdown_filters_at_the_source(spark, db_path):
     assert len(rows) == n
 
 
-def test_empty_probe_raises_a_schema_pointer(spark, db_path):
-    # schema inference needs rows; an empty probe must point the caller
-    # at the schema= parameter, not crash inside createDataFrame
-    with pytest.raises(ValueError, match="schema="):
-        read_sqlite(
-            spark, db_path, "streaming_txns",
-            columns=["transaction_id"],
-            predicate="minutes_streamed > 1000000",
+def _untyped_db(tmp_path):
+    path = str(tmp_path / "untyped.db")
+    with closing(sqlite3.connect(path)) as con:
+        con.execute("CREATE TABLE notes (k INTEGER, v, blank)")
+        con.executemany(
+            "INSERT INTO notes VALUES (?, ?, NULL)",
+            [(i, f"note-{i}") for i in range(1, 11)],
         )
+        con.commit()
+    return path
+
+
+def test_empty_probe_raises_a_schema_pointer(spark, tmp_path):
+    # a column without a declared type is typed from the 100-row probe;
+    # an empty probe (or an all-NULL one) must point the caller at the
+    # schema= parameter, not crash or guess
+    path = _untyped_db(tmp_path)
+    with pytest.raises(ValueError, match="schema="):
+        read_sqlite(spark, path, "notes", columns=["v"], predicate="k > 1000")
+    with pytest.raises(ValueError, match="schema="):
+        read_sqlite(spark, path, "notes", columns=["blank"])
+    df = read_sqlite(spark, path, "notes", columns=["k", "v"])
+    assert [f.dataType.simpleString() for f in df.schema] == ["bigint", "string"]
+    assert df.count() == 10
+
+
+def test_typed_read_matching_nothing_has_the_declared_schema(spark, db_path):
+    # declared types need no probe: a predicate that matches nothing is
+    # an empty result, not an error
+    df = read_sqlite(
+        spark, db_path, "streaming_txns",
+        columns=["transaction_id", "asset_id"],
+        predicate="minutes_streamed > 1000000",
+    )
+    assert [(f.name, f.dataType.simpleString()) for f in df.schema] == [
+        ("transaction_id", "bigint"), ("asset_id", "string"),
+    ]
+    assert df.count() == 0
+
+
+def test_nulls_in_the_probe_window_keep_declared_integer_types(spark, tmp_path):
+    # minutes_streamed/completed are NULL within the first 100 rows;
+    # their declared INTEGER type must still come back bigint, not a
+    # NULL-widened double
+    path = str(tmp_path / "nulls.db")
+    with closing(sqlite3.connect(path)) as con:
+        con.execute(
+            "CREATE TABLE streaming_txns (transaction_id INTEGER, "
+            "minutes_streamed INTEGER, completed INTEGER, rating REAL, "
+            "note VARCHAR(20))"
+        )
+        con.executemany(
+            "INSERT INTO streaming_txns VALUES (?, ?, ?, ?, NULL)",
+            [
+                (i, None if i % 10 == 0 else i, None if i == 3 else i % 2, i / 2)
+                for i in range(1, 301)
+            ],
+        )
+        con.commit()
+    df = read_sqlite(
+        spark, path, "streaming_txns",
+        partition_column="transaction_id",
+        lower_bound=1, upper_bound=300, num_partitions=3,
+    )
+    assert [(f.name, f.dataType.simpleString()) for f in df.schema] == [
+        ("transaction_id", "bigint"), ("minutes_streamed", "bigint"),
+        ("completed", "bigint"), ("rating", "double"), ("note", "string"),
+    ]
+    rows = {r["transaction_id"]: r for r in df.collect()}
+    assert len(rows) == 300
+    assert rows[10]["minutes_streamed"] is None
+    assert rows[11]["minutes_streamed"] == 11
+    assert rows[3]["completed"] is None and rows[5]["completed"] == 1
+    assert rows[7]["rating"] == 3.5 and rows[7]["note"] is None
+
+
+def test_value_the_declared_type_cannot_hold_fails_loudly(spark, tmp_path):
+    # SQLite keeps 2.5 as REAL in an INTEGER column; truncating it to 2
+    # would be silent corruption
+    path = str(tmp_path / "lossy.db")
+    with closing(sqlite3.connect(path)) as con:
+        con.execute("CREATE TABLE t (k INTEGER)")
+        con.executemany("INSERT INTO t VALUES (?)", [(1,), (2.5,)])
+        con.commit()
+    with pytest.raises(Exception, match="truncated"):
+        read_sqlite(spark, path, "t").collect()
 
 
 def test_unsharded_read_is_one_task_with_probe_schema(spark, db_path):
@@ -197,12 +275,9 @@ def test_unsharded_read_is_one_task_with_probe_schema(spark, db_path):
 
 
 def test_probe_clean_column_with_nulls_in_a_later_slice(spark, db_path):
-    # user_id is non-NULL for the first 100 rows (the driver probe
-    # window) so it infers LongType — but the very last row has a NULL
-    # user_id, and pandas hands that slice back as float64/NaN. Without
-    # per-slice coercion to the nullable Int64 extension dtype the Arrow
-    # boundary rejects (or lossily coerces) the drifted slice; with it,
-    # the NULL lands as a proper SQL NULL and every other value is exact.
+    # user_id is non-NULL for the first 100 rows but the very last row
+    # has a NULL user_id: the slice holding it must land that NULL as a
+    # proper SQL NULL in the bigint column with every other value exact.
     df = read_sqlite(
         spark, db_path, "streaming_txns",
         columns=["transaction_id", "user_id"],

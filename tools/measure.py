@@ -1,19 +1,20 @@
-"""Round-14 optimization measurement harness.
+"""Per-query plan capture and timing for optimization work.
 
 Captures `.explain("formatted")` for headline queries into
-plans/r14/<name>_<tag>.txt and times each with the bench's own
+<outdir>/<name>_<tag>.txt and times each with the bench's own
 hash-force probe (same methodology as bench.py: discarded warm-up, N
 timed iterations, min3-median). Usage:
 
-    python tools/r14_measure.py before                # all headline queries
-    python tools/r14_measure.py after q1 q2 ...       # a subset, tagged 'after'
-    SPARK_GRAFT_R14_ITERS=3 python tools/r14_measure.py before
+    python tools/measure.py plans/r15 before              # all headline queries
+    python tools/measure.py plans/r15 after q1 q2 ...     # a subset, tagged 'after'
+    python tools/measure.py --iters 5 plans/r15 before
 
 Prints one JSON line {"tag": ..., "queries": {name: sec}} plus per-query
 plan-shape stats (Exchange count, join strategies, BatchEvalPython) to
 stderr so plan diffs are quick to eyeball.
 """
 
+import argparse
 import json
 import os
 import re
@@ -23,7 +24,8 @@ import time
 from contextlib import redirect_stdout
 import io
 
-sys.path.insert(0, ".")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 from sportstv_streaming_data_warehouse_spark.plans.catalog import QUERIES  # noqa: E402
 from sportstv_streaming_data_warehouse_spark.session import get_spark  # noqa: E402
@@ -59,14 +61,18 @@ def plan_shape(text: str) -> dict:
 
 
 def main() -> None:
-    tag = sys.argv[1] if len(sys.argv) > 1 else "before"
-    names = sys.argv[2:] or headline()
+    p = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
+    p.add_argument("outdir", help="directory for the captured plans")
+    p.add_argument("tag", nargs="?", default="before")
+    p.add_argument("queries", nargs="*", help="default: the headline set")
+    p.add_argument("--iters", type=int, default=3)
+    a = p.parse_args()
+    tag, iters, outdir = a.tag, a.iters, a.outdir
+    names = a.queries or headline()
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    iters = int(os.environ.get("SPARK_GRAFT_R14_ITERS", "3"))
-    outdir = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "plans", "r14")
     os.makedirs(outdir, exist_ok=True)
 
-    spark = get_spark(app_name="r14-measure")
+    spark = get_spark(app_name="measure")
     spark.sparkContext.setLogLevel("ERROR")
     from pyspark.sql import functions as F
 
@@ -82,7 +88,7 @@ def main() -> None:
     results: dict[str, float] = {}
     shapes: dict[str, dict] = {}
     for name in names:
-        spark.sparkContext.setJobDescription(f"r14:{tag}:{name}")
+        spark.sparkContext.setJobDescription(f"measure:{tag}:{name}")
         df = QUERIES[name](spark, sf_dir)
         text = plan_text(df)
         with open(os.path.join(outdir, f"{name}_{tag}.txt"), "w") as f:
