@@ -26,20 +26,19 @@ the headline total).
 Load gating (round 5, tightened round 7): if the 1-minute loadavg
 exceeds $SPARK_GRAFT_BENCH_MAX_LOAD (default 8) the run waits and
 retries up to 3 times; if the box is still busy it emits its stdout
-record (the driver contract) with `"contaminated": true` and REFUSES to
-stamp BENCH_history.jsonl, so the round-over-round medians stay
-trustworthy.
+record (the driver contract) with `"contaminated": true` and does not
+append to BENCH_history.jsonl.
 Every clean run appends its full record (including raw per-iteration
 samples) to BENCH_history.jsonl so rounds can be diffed
 median-to-median.
 
-Representative stamping (round 11): the stdout record carries
-`representative` — false when this run's own empty_job_ms or fixed-work
-cpu probe exceeds 1.5x the history medians (hypervisor contention the
-load gate cannot see), in which case `representative_run` points at the
-latest qualifying quiet-box history entry so a stamped BENCH_rN.json
-can never silently be the inflated run (round-10 verdict: the stamped
-86.6 s artifact hid the round's real 41.5 s).
+The record reports this run and nothing else: `value`, `queries` and
+the tiers are always the live measurements, `cores` is the session's
+default parallelism, and the box probes (empty_job_ms, cpu_speed_probe,
+ref_query_probe, mt_speed_probe) are context for a reader comparing
+runs. The bench never reads BENCH_history.jsonl. Comparing two commits
+is the job of an interleaved A/B on one box (tools/ab_compare.py) or
+of perfbench/.
 """
 
 from __future__ import annotations
@@ -48,6 +47,7 @@ import json
 import os
 import statistics
 import subprocess
+import sys
 import time
 
 from sportstv_streaming_data_warehouse_spark.plans.catalog import QUERIES
@@ -118,8 +118,7 @@ HEADLINE = [
 
 # the round-6 51-query prefix — the set every history entry up to round
 # 12 timed; its subtotal keeps cross-round totals comparable after the
-# round-13 additions (the __total__ noise-audit normalization only uses
-# same-set entries, so it self-heals as new-set history accumulates)
+# round-13 additions
 R6_SET = HEADLINE[:51]
 
 # Queries whose history shows multi-second shared-box variance get more
@@ -142,26 +141,6 @@ OUTLIER_SPREAD = 3.0
 # samples instead of poisoning the reported statistic
 ADAPTIVE_SPREAD = 1.5
 ADAPTIVE_MAX_EXTRA = 4
-# queries that moved in some past round with NO code change; audited
-# against history below so each bench record carries an explicit
-# noise-vs-real verdict instead of leaving the judge to diff rounds
-# (six from round 6; x_knn_bruteforce 1.37x and x_salted_skew_join
-# 1.25x moved un-verdicted in round 8 — round-9 verdict task 2)
-NOISE_AUDIT = [
-    "x_global_shuffle",
-    "x_dedup_minhash_lsh",
-    "x_range_join_value_bands",
-    "x_knn_bruteforce",
-    "x_dedup_embedding_cosine",
-    "x_hard_negatives",
-    "x_salted_skew_join",
-    # round-10 (round-9 verdict task 2): the two numbers every reader
-    # of BENCH_rN looks at first — both moved ~20% in round 9 with zero
-    # code changes (untouched paths at the top of their historical
-    # bands); give them an explicit verdict line every round
-    "flagship_daily_rollup",
-    "a4_global_summary",
-]
 
 
 def robust_stat(times: list[float]) -> float:
@@ -194,14 +173,14 @@ def cpu_speed_probe() -> float:
 
 def spark_ref_probe(spark, sf_dir: str) -> float | None:
     """Seconds (min of 3) for a FROZEN Spark reference workload — scan
-    lineitem, one hash aggregate. Round-11 lesson: a run whose queries
-    read a uniform 1.37x the quiet twin passed the guard because BOTH
-    existing signals stayed in band (empty_job_ms 1.17x the median,
-    cpu probe 1.05x) — that inflation mode lives in the IO/shuffle
-    path, which neither an empty job nor a pure-Python loop exercises.
-    This probe has the same execution shape as the workload (parquet
-    scan → whole-stage codegen → hash agg) with none of the engine's
-    own code in it, so it moves with the box, never with a code change.
+    lineitem, one hash aggregate. Round-11 lesson: a run's queries read
+    a uniform 1.37x slower while the empty-job floor (1.17x) and the cpu
+    probe (1.05x) stayed nearly flat — that inflation mode lives in the
+    IO/shuffle path, which neither an empty job nor a pure-Python loop
+    exercises. This probe has the same execution shape as the workload
+    (parquet scan → whole-stage codegen → hash agg) with none of the
+    engine's own code in it, so it moves with the box, never with a code
+    change.
     FROZEN: never edit this query — cross-round comparability is the
     entire point."""
     try:
@@ -231,8 +210,10 @@ def mt_speed_probe(spark) -> float | None:
     parallel stages 15-30% while the scheduling floor, the
     single-threaded python loop, AND the small reference scan all stay
     flat. A 32-partition fixed-work aggregate saturates every core the
-    headline queries use, so it moves with exactly that mode. FROZEN
-    like the other probes."""
+    headline queries use, so it moves with exactly that mode. Its 32
+    partitions run in ceil(32 / cores) waves, so it reads slower on a
+    smaller session by design: compare it only between runs with the
+    same `cores`. FROZEN like the other probes."""
     try:
         def once() -> float:
             t0 = time.perf_counter()
@@ -247,281 +228,25 @@ def mt_speed_probe(spark) -> float | None:
         return None
 
 
-# band beyond which a run's own box-speed signals (empty_job_ms, the
-# fixed-work cpu probe) vs the history medians mark the record
-# non-representative (round-10 verdict task 3)
-REPRESENTATIVE_BAND = 1.5
-# round-13 (round-12 ADVICE, medium): excluding flagged entries from the
-# band medians anchors the band forever — after a persistent legitimate
-# slowdown (code or hardware) every future run reads >1.5x the frozen
-# quiet medians, is flagged, is excluded, and the loop never converges
-# (observed round 12: three consecutive flagged runs). Escape hatch:
-# once REANCHOR_STREAK consecutive history entries are flagged, the
-# medians re-anchor over the most recent REANCHOR_WINDOW entries
-# REGARDLESS of their flags, so the band follows the box/code to its
-# new level and the verdicts become meaningful again.
-REANCHOR_STREAK = 6
-REANCHOR_WINDOW = 8
+def hash_force(df) -> None:
+    """Force the COMPLETE plan of `df`: hash every column of every
+    output row into one scalar. count() is NOT a valid probe — Catalyst
+    prunes every expression count doesn't need, including aggregate
+    VALUES under a count-of-groupBy (measured: the flagship rollup timed
+    0.3 s under count vs 1.9 s forced — count skipped the exact
+    countDistinct and the decimal sums) and whole projections of narrow
+    queries. The noop sink agrees with this probe within noise; the
+    hash-reduce is kept because it also exercises every output value
+    without write-path configuration."""
+    from pyspark.sql import functions as F
+
+    df.select(
+        F.bit_xor(F.xxhash64(F.struct(*df.columns))).alias("h")
+    ).collect()
 
 
-def _flag_streak(hist_records: list[dict]) -> int:
-    """Trailing run of consecutive representative:false history entries
-    — the re-anchor trigger, also surfaced in every record so a judge
-    sees a stuck band instead of inferring it from the file."""
-    streak = 0
-    for r in reversed(hist_records):
-        if r.get("representative") is False:
-            streak += 1
-        else:
-            break
-    return streak
-
-
-def _band_reanchored(hist_records: list[dict]) -> bool:
-    """Whether the band medians run in re-anchored (sliding last-N
-    window, flags-and-all) mode. Round-14 (round-13 ADVICE): the mode
-    is STICKY — once any history entry carries band_reanchored, every
-    later run stays in sliding-window mode. Without stickiness the
-    guard oscillated at ~1 representative run per REANCHOR_STREAK+1:
-    the first re-anchored run stamps representative, the streak resets
-    to 0, the band snaps back to the frozen old-level quiet medians
-    (one new-level entry cannot move the median), and the next ~6 runs
-    are flagged all over again. Sliding-window medians track the box's
-    real recent level, which is the steady-state behavior wanted once
-    the old all-history quiet band has ever proven stale."""
-    return _flag_streak(hist_records) >= REANCHOR_STREAK or any(
-        r.get("band_reanchored") for r in hist_records
-    )
-
-
-def representative_verdict(
-    hist_records: list[dict],
-    headline_set: set[str],
-    empty_job_ms: float | None,
-    speed_probe: float,
-    quiet: bool,
-    ref_probe: float | None = None,
-    mt_probe: float | None = None,
-    golden_etl: float | None = None,
-    golden_stages: dict | None = None,
-) -> tuple[bool, list[str], dict | None]:
-    """Decide whether THIS run may stamp the round artifact.
-
-    A run is non-representative when its own empty-job floor or
-    fixed-work cpu probe exceeds REPRESENTATIVE_BAND x the history
-    medians — hypervisor contention the loadavg gate cannot see
-    (round-10: the stamped artifact's empty_job_ms was 3.4x the quiet
-    floor and every query read 1.5-14x slow). Returns
-    ``(representative, evidence, fallback)`` where fallback is the
-    QUIETEST-BOX qualifying history entry (same headline set, not
-    contaminated, own signals inside the band; among those, the lowest
-    empty-job floor with the cpu probe as tie-break, latest wins exact
-    ties) — the round's real numbers for a cross-round reader. The
-    selection key is the BOX signals, never the total, so this cannot
-    cherry-pick performance; "latest qualifying" (the round-10 design)
-    was measured pointing at a 1.37x-inflated run that sat in band on
-    the pre-ref-probe signals. Needs >=2 historical values per signal
-    so a single early record cannot set the band.
-
-    Band medians are computed over history entries NOT flagged
-    non-representative at their own record time (the flag is stamped
-    into each history row): a noisy week would otherwise drift every
-    median upward until genuinely inflated runs sit back inside the
-    band — observed round 12, where three flagged runs raised the
-    empty-job median from 82.9 to 89.8 ms. Pre-flag entries (no key)
-    count as quiet — UNLESS the trailing REANCHOR_STREAK entries are
-    all flagged, in which case the band re-anchors over the most
-    recent REANCHOR_WINDOW entries flags-and-all (round-12 ADVICE: the
-    frozen quiet band otherwise flags every run after a persistent
-    legitimate slowdown, forever). Round 14: re-anchor mode is STICKY
-    (see _band_reanchored) — without it the guard oscillated at ~1
-    representative run per streak cycle."""
-    if _band_reanchored(hist_records):
-        hist_records = hist_records[-REANCHOR_WINDOW:]
-    else:
-        hist_records = [
-            r for r in hist_records if r.get("representative") is not False
-        ]
-    hist_ej = [
-        r["empty_job_ms"] for r in hist_records
-        if isinstance(r.get("empty_job_ms"), (int, float))
-    ]
-    hist_probe = [
-        r["cpu_speed_probe"] for r in hist_records
-        if isinstance(r.get("cpu_speed_probe"), (int, float))
-    ]
-    hist_ref = [
-        r["ref_query_probe"] for r in hist_records
-        if isinstance(r.get("ref_query_probe"), (int, float))
-    ]
-    checks = []
-    if empty_job_ms is not None and len(hist_ej) >= 2:
-        checks.append(
-            ("empty_job_ms", empty_job_ms, statistics.median(hist_ej))
-        )
-    if len(hist_probe) >= 2:
-        checks.append(
-            ("cpu_speed_probe", speed_probe, statistics.median(hist_probe))
-        )
-    # round 11+: the frozen Spark reference workload (scan + hash agg)
-    # — catches IO/shuffle-path inflation the other two signals miss;
-    # self-activates once 2 history entries carry it
-    if ref_probe is not None and len(hist_ref) >= 2:
-        checks.append(
-            ("ref_query_probe", ref_probe, statistics.median(hist_ref))
-        )
-    # round 11+: the 32-way fixed-work probe — catches multi-core
-    # throughput degradation (the box's documented dominant mode) that
-    # every single-job signal above sits flat through
-    hist_mt = [
-        r["mt_speed_probe"] for r in hist_records
-        if isinstance(r.get("mt_speed_probe"), (int, float))
-    ]
-    if mt_probe is not None and len(hist_mt) >= 2:
-        checks.append(
-            ("mt_speed_probe", mt_probe, statistics.median(hist_mt))
-        )
-    # round 12+: the golden-tier ETL wall itself — a real workload
-    # measured MID-RUN every run, so it catches a load spike that lands
-    # after the start probes and decays before the end ones (the r12
-    # miss: start loadavg 0.16, golden 51 s against a 5-7 s quiet band,
-    # representative:true). End-of-run loadavg is NOT used: the bench's
-    # own 32-thread queries push it to 4-7 on a silent box.
-    hist_golden = [
-        r["golden_tier"]["etl_sec"] for r in hist_records
-        if isinstance(r.get("golden_tier"), dict)
-        and isinstance(r["golden_tier"].get("etl_sec"), (int, float))
-    ]
-    if golden_etl is not None and len(hist_golden) >= 2:
-        checks.append(
-            ("golden_tier.etl_sec", golden_etl, statistics.median(hist_golden))
-        )
-    # round 13+: the golden tier's per-stage walls (verdict task 4) —
-    # sub-signals that LOCALIZE a mid-run spike (the fused
-    # enrich+aggregate+write job vs the residual: plan analysis, dim
-    # Arrow transfer, parquet re-open). Evidence-only: they inform the
-    # verdict but are not candidate-completeness gates (pre-r13 history
-    # lacks them; the same-commit stamping rule already bounds what a
-    # candidate can be). Round 14 (round-13 ADVICE): bounds_scan_sec
-    # was dropped — after the round-13 Observation fusion the write
-    # path never records it, so its band could never form; other_sec
-    # is the live second signal.
-    for stage_key in ("fact_write_sec", "other_sec"):
-        cur = (golden_stages or {}).get(stage_key)
-        hist_stage = [
-            r["golden_tier"]["stage_sec"][stage_key] for r in hist_records
-            if isinstance(r.get("golden_tier"), dict)
-            and isinstance(r["golden_tier"].get("stage_sec"), dict)
-            and isinstance(
-                r["golden_tier"]["stage_sec"].get(stage_key), (int, float)
-            )
-        ]
-        if isinstance(cur, (int, float)) and len(hist_stage) >= 2:
-            checks.append(
-                (
-                    f"golden_tier.stage_sec.{stage_key}",
-                    cur,
-                    statistics.median(hist_stage),
-                )
-            )
-    evidence = [
-        f"{k} {v} = {v / ref:.2f}x history median {round(ref, 3)}"
-        for k, v, ref in checks
-        if v > REPRESENTATIVE_BAND * ref
-    ]
-    if not evidence:
-        return quiet, [], None
-    fallback = None
-    fallback_key = None
-    ej_ref = statistics.median(hist_ej) if hist_ej else None
-    ref_ref = statistics.median(hist_ref) if hist_ref else None
-    mt_ref = statistics.median(hist_mt) if hist_mt else None
-    for r in reversed(hist_records):
-        if set(r.get("queries", {})) != headline_set:
-            continue
-        if r.get("contaminated"):
-            continue
-        # round-13 (round-12 ADVICE, low): a candidate must CARRY every
-        # currently-active signal, not merely avoid failing the ones it
-        # happens to have — BENCH_r12's stamped_from had ref_query_probe
-        # and mt_speed_probe both null, i.e. quietness unverified on the
-        # two signals that catch the box's dominant inflation mode.
-        r_ej = r.get("empty_job_ms")
-        if ej_ref is not None and (
-            not isinstance(r_ej, (int, float))
-            or r_ej > REPRESENTATIVE_BAND * ej_ref
-        ):
-            continue
-        r_ref = r.get("ref_query_probe")
-        if ref_ref is not None and (
-            not isinstance(r_ref, (int, float))
-            or r_ref > REPRESENTATIVE_BAND * ref_ref
-        ):
-            continue
-        r_mt = r.get("mt_speed_probe")
-        if mt_ref is not None and (
-            not isinstance(r_mt, (int, float))
-            or r_mt > REPRESENTATIVE_BAND * mt_ref
-        ):
-            continue
-        r_cpu = r.get("cpu_speed_probe")
-        cpu_ref = statistics.median(hist_probe) if len(hist_probe) >= 2 else None
-        if cpu_ref is not None and (
-            not isinstance(r_cpu, (int, float))
-            or r_cpu > REPRESENTATIVE_BAND * cpu_ref
-        ):
-            continue  # cpu-inflated entries are no better a pointer
-            # than ej/ref/mt-inflated ones (review finding: the skip
-            # loop previously banded every signal EXCEPT this one)
-        r_golden = (
-            r["golden_tier"].get("etl_sec")
-            if isinstance(r.get("golden_tier"), dict)
-            else None
-        )
-        golden_ref = (
-            statistics.median(hist_golden) if len(hist_golden) >= 2 else None
-        )
-        if golden_ref is not None and (
-            not isinstance(r_golden, (int, float))
-            or r_golden > REPRESENTATIVE_BAND * golden_ref
-        ):
-            continue  # mid-run-spiked entries (quiet start probes,
-            # inflated golden) cannot be the pointer either
-        # quietest box among the qualifiers; strict < keeps the LATEST
-        # entry on exact ties (reversed iteration sees it first)
-        key = (
-            r_ej if isinstance(r_ej, (int, float)) else float("inf"),
-            r_cpu if isinstance(r_cpu, (int, float)) else float("inf"),
-        )
-        if fallback_key is None or key < fallback_key:
-            fallback_key = key
-            fallback = {
-                k: r.get(k)
-                for k in (
-                    "value", "queries", "empty_job_ms", "cpu_speed_probe",
-                    "ref_query_probe", "mt_speed_probe", "git",
-                    "wall_clock", "golden_tier", "report_tier",
-                )
-            }
-    return False, evidence, fallback
-
-
-#: hard cap on the emitted one-line stdout record. Advisory blobs are
-#: dropped (in _RECORD_ADVISORY order) until the line fits — the core
-#: contract fields (metric/value/unit/queries/sf + tiers) always stay.
+#: hard cap on the emitted one-line stdout record
 RECORD_MAX_BYTES = 262144
-
-#: advisory keys, dropped first-to-last when the record is oversized;
-#: every one of them also reaches BENCH_history.jsonl (or stderr via
-#: `detail`), so nothing is lost — only the stdout line slims down
-_RECORD_ADVISORY = (
-    "inflation_evidence",
-    "live_queries",
-    "representative_run",
-    "stamped_from",
-    "quiet_floor",
-    "live_value",
-)
 
 
 def emit_record(out: dict) -> str:
@@ -533,136 +258,19 @@ def emit_record(out: dict) -> str:
       json.dumps never emits raw newlines, asserted anyway);
     - it round-trips through json.loads (asserted before printing, so a
       non-serializable value fails HERE, loudly, not driver-side);
-    - it stays under RECORD_MAX_BYTES: advisory keys are dropped in
-      _RECORD_ADVISORY order until it fits (they all live on in
-      BENCH_history.jsonl / stderr)."""
-    rec = dict(out)
-    for drop in (None,) + _RECORD_ADVISORY:
-        if drop is not None:
-            rec.pop(drop, None)
-        line = json.dumps(rec)
-        if len(line.encode("utf-8")) <= RECORD_MAX_BYTES:
-            break
+    - it stays under RECORD_MAX_BYTES: an oversized record raises
+      ValueError rather than printing a line the driver may truncate.
+      Every key is a measurement of this run, so none may be dropped."""
+    line = json.dumps(out)
+    size = len(line.encode("utf-8"))
+    if size > RECORD_MAX_BYTES:
+        raise ValueError(
+            f"bench record is {size} bytes, over the {RECORD_MAX_BYTES}-byte cap"
+        )
     assert "\n" not in line and "\r" not in line
     parsed = json.loads(line)
-    assert parsed["metric"] == rec["metric"] and parsed["queries"]
+    assert parsed["metric"] == out["metric"] and parsed["queries"]
     return line
-
-
-def stamp_record(
-    record: dict,
-    representative: bool,
-    rep_fallback: dict | None,
-    current_git: str | None = None,
-) -> dict:
-    """Round-12 (verdict task 5): when the run is NON-representative and
-    a qualifying quiet-box twin exists, the stdout record — the line the
-    driver stamps as BENCH_r{N}.json — carries the FALLBACK's
-    value/queries outright instead of a pointer a reader must follow
-    (round 11 stamped a uniformly 1.35x-inflated vector with the
-    representative numbers one indirection away). The live run's numbers
-    move to live_value/live_queries, provenance goes under stamped_from,
-    and the HISTORY append still records the live run untouched (history
-    is the raw record; the promotion is presentation of the round
-    artifact only). Representative runs pass through unchanged.
-
-    Round-13 (round-12 verdict task 3 / ADVICE high): the promotion is
-    allowed ONLY when the fallback was measured at the SAME commit as
-    this run — BENCH_r12.json's headline came from a mid-round-11
-    commit, so the artifact misrepresented HEAD and the guard could not
-    distinguish box inflation from a real ~25-30% regression (once a
-    quiet historical run exists, the old ratchet would stamp it
-    forever). A fallback from any other commit stays a POINTER
-    (representative_run) and the live numbers remain the artifact's
-    primary fields, flagged representative:false with the evidence."""
-    if (
-        representative
-        or rep_fallback is None
-        or not isinstance(rep_fallback.get("value"), (int, float))
-        or not rep_fallback.get("queries")
-        or current_git is None
-        or rep_fallback.get("git") != current_git
-    ):
-        return record
-    out = dict(
-        record,
-        value=rep_fallback["value"],
-        queries=rep_fallback["queries"],
-        live_value=record["value"],
-        live_queries=record["queries"],
-        stamped_from={
-            k: rep_fallback.get(k)
-            for k in (
-                "git", "wall_clock", "empty_job_ms", "cpu_speed_probe",
-                "ref_query_probe", "mt_speed_probe",
-            )
-        },
-    )
-    # the golden/report tiers are box-speed measurements too — an
-    # inflated live value in the round artifact is the same phantom
-    # regression the query promotion fixes (the round-12 live run's
-    # golden ETL read 62 s against a 5-7 s quiet history band)
-    for tier in ("golden_tier", "report_tier"):
-        if rep_fallback.get(tier):
-            out[f"live_{tier}"] = record.get(tier)
-            out[tier] = rep_fallback[tier]
-    return out
-
-
-def quiet_floor(
-    hist_records: list[dict],
-    headline_set: set[str],
-    current_git: str | None,
-    live_record: dict | None = None,
-) -> dict | None:
-    """Round-14 (round-13 verdict task 2): the round's quiet-box truth,
-    carried IN the artifact next to the banded verdict. BENCH_r13
-    stamped `representative: true` on a 79.5 s contended sample —
-    honest under the re-anchored band, but the round's real quiet
-    numbers (~53 s suite, golden 2.6-4.7 s) lived only in the session
-    log. The floor is the MINIMUM suite total over SAME-COMMIT samples
-    that are quiet-qualified (not contaminated, not flagged
-    non-representative), including the live run itself when it
-    qualifies — so a future regression cannot hide inside a
-    re-anchored band: the floor only rises when the code at THIS
-    commit never ran fast on a quiet box.
-
-    Same-commit is a hard gate, mirroring stamp_record's lineage rule:
-    a floor inherited from another commit's quiet run would
-    reintroduce the BENCH_r12 hole where the artifact described code
-    that was not HEAD. Returns None when no qualifying sample exists
-    (first run at a commit on a loud box)."""
-    if current_git is None:
-        return None
-    cands = [
-        r
-        for r in hist_records
-        if r.get("git") == current_git
-        and not r.get("contaminated")
-        and r.get("representative") is not False
-        and set(r.get("queries", {})) == headline_set
-        and isinstance(r.get("value"), (int, float))
-    ]
-    if (
-        live_record is not None
-        and not live_record.get("contaminated")
-        and live_record.get("representative") is not False
-        and isinstance(live_record.get("value"), (int, float))
-    ):
-        cands.append(live_record)
-    if not cands:
-        return None
-    best = min(cands, key=lambda r: r["value"])
-    golden = best.get("golden_tier") or {}
-    return {
-        "value": best["value"],
-        "r6_comparable_total": best.get("r6_comparable_total"),
-        "golden_etl_sec": golden.get("etl_sec"),
-        "git": current_git,
-        "source": "live" if best is live_record else "history",
-        "wall_clock": best.get("wall_clock"),
-        "n_samples": len(cands),
-    }
 
 
 def wait_for_quiet_box(max_load: float, attempts: int = 3, wait_s: int = 30) -> bool:
@@ -703,8 +311,8 @@ def run_golden_tier(spark) -> dict:
         with sqlite3.connect(db_path) as con:
             # transaction_id is an INTEGER PRIMARY KEY (SQLite rowid
             # alias — costs nothing to maintain), as any operational DB
-            # would have. Without it each of the 32 shard readers'
-            # `transaction_id BETWEEN lo AND hi` predicates full-scans
+            # would have. Without it each shard reader's
+            # `transaction_id BETWEEN lo AND hi` predicate full-scans
             # the whole table — O(shards x N), measured 1.55x
             # SUPER-linear at a 10x corpus (SCALE.md round-13 linearity
             # run). With it a shard reads only its own slice: O(N).
@@ -786,7 +394,9 @@ def run_golden_tier(spark) -> dict:
         t0 = time.perf_counter()
         out = os.path.join(workdir, "fact")
         stage: dict[str, float] = {}
-        etl(int(os.environ.get("SPARK_GRAFT_CPUS", "32")), out, timings=stage)
+        # one SQLite shard per core the session actually has — the
+        # number the record reports as `cores`
+        etl(spark.sparkContext.defaultParallelism, out, timings=stage)
         wall = round(time.perf_counter() - t0, 2)
         # per-stage walls (round-12 verdict task 4): since the round-13
         # Observation fusion the timed region has ONE action — the
@@ -838,6 +448,7 @@ def main() -> None:
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
     spark = get_spark(app_name="sportstv-bench")
     spark.sparkContext.setLogLevel("ERROR")
+    cores = spark.sparkContext.defaultParallelism
 
     # JVM/codegen warmup outside the timed region: exercise the parquet
     # reader + hash-agg + distinct codepaths on the tiny SF so the timed
@@ -846,22 +457,8 @@ def main() -> None:
     QUERIES["flagship_daily_rollup"](spark, "/root/testdata/sf0.001").count()
     QUERIES["x_dedup_minhash_lsh"](spark, "/root/testdata/sf0.001").count()
 
-    from pyspark.sql import functions as F
-
     def run_full(name: str) -> None:
-        # Force the COMPLETE plan: hash every column of every output row
-        # into one scalar. count() is NOT a valid probe — Catalyst prunes
-        # every expression count doesn't need, including aggregate VALUES
-        # under a count-of-groupBy (measured: the flagship rollup timed
-        # 0.3 s under count vs 1.9 s forced — count skipped the exact
-        # countDistinct and the decimal sums) and whole projections of
-        # narrow queries. The noop sink agrees with this probe within
-        # noise; the hash-reduce is kept because it also exercises every
-        # output value without write-path configuration.
-        df = QUERIES[name](spark, sf_dir)
-        df.select(
-            F.bit_xor(F.xxhash64(F.struct(*df.columns))).alias("h")
-        ).collect()
+        hash_force(QUERIES[name](spark, sf_dir))
 
     per_query: dict[str, float] = {}
     per_query_min: dict[str, float] = {}
@@ -907,7 +504,7 @@ def main() -> None:
     # subtotal over the 16 queries round 1 benched. NOTE: comparable only
     # between entries with the SAME `probe` field — rounds 1-3 timed
     # under count(), which under-measures pruned expressions (see
-    # run_full); bench_diff warns on cross-probe comparisons.
+    # hash_force); bench_diff warns on cross-probe comparisons.
     r1_set = HEADLINE[:16]
     r1_total = round(sum(per_query[n] for n in r1_set), 3)
     # subtotal over the round-6 51-query prefix — every history entry
@@ -926,98 +523,6 @@ def main() -> None:
     # compact JSON line (totals + per-query medians); the DETAIL record
     # (min/spread/outliers/loadavg — anything a human diffing rounds
     # wants) goes to stderr and, for clean runs, BENCH_history.jsonl.
-    # Noise-vs-real audit (round-6 verdict task 4): the six queries whose
-    # r6 medians inflated with no code change are checked against the
-    # best historical hash-force value — if today's robust value is back
-    # within 25% of the historical best, the r6 number was shared-box
-    # noise; if the inflation reproduces on this (bottom-3, adaptive)
-    # statistic, it is flagged for investigation instead of explained away.
-    noise_audit: dict[str, str] = {}
-    hist_records: list[dict] = []  # comparable history (also feeds the
-    # representative-stamping guard below)
-    try:
-        hist_path = os.path.join(
-            os.path.dirname(os.path.abspath(__file__)), "BENCH_history.jsonl"
-        )
-        hist_vals: dict[str, list[float]] = {}
-        cur_sf = float(sf) if sf.replace(".", "").isdigit() else sf
-        with open(hist_path) as f:
-            for line in f:
-                rec = json.loads(line)
-                if rec.get("probe") != "hash-force":
-                    continue
-                if rec.get("stat") != "min3-median":
-                    # same-statistic records only (round-7 advisor
-                    # finding): min3-median reads systematically faster
-                    # than the plain medians of rounds <=6, so letting
-                    # those set the reference would bias the verdicts
-                    # the audit exists to separate
-                    continue
-                if rec.get("sf") != cur_sf:
-                    continue  # cross-sf values are not comparable
-                hist_records.append(rec)
-                for n, v in rec.get("queries", {}).items():
-                    if n in NOISE_AUDIT:
-                        hist_vals.setdefault(n, []).append(v)
-                # __total__ is only comparable across records that timed
-                # the SAME headline set — when the set grows or shrinks
-                # between rounds, mixed totals would quietly skew the
-                # run-normalization below for every audited query
-                # (round-9 ADVICE). Per-query medians are immune; only
-                # the run-level total has this coupling.
-                if set(rec.get("queries", {})) == set(per_query):
-                    hist_vals.setdefault("__total__", []).append(rec["value"])
-        # Run-level normalization: hypervisor contention can slow the
-        # whole box 15-25% while the single-threaded cpu probe stays
-        # flat (it is multi-core throughput that degrades), inflating
-        # EVERY query together — e.g. a round-9 window ran the identical
-        # code at 47.4 s vs 38.1 s with probes 0.44/0.44. A query that
-        # moves WITH the run total is box noise; only movement beyond
-        # the run's own inflation is a candidate regression.
-        run_norm = 1.0
-        if hist_vals.get("__total__"):
-            run_norm = max(
-                total / statistics.median(hist_vals["__total__"]), 1.0
-            )
-        else:
-            # fail-visible (round-10 ADVICE): with no same-set history —
-            # exactly the round a headline query debuts — the audit loses
-            # its global-inflation correction, biasing verdicts toward
-            # 'investigate' on an inflated box. Say so in the record
-            # instead of silently normalizing by 1.0.
-            noise_audit["__run_norm__"] = (
-                "un-normalized: no same-headline-set __total__ history "
-                "(set changed this round) — verdicts below lack the "
-                "global-inflation correction"
-            )
-        for n in NOISE_AUDIT:
-            if n not in per_query or n not in hist_vals:
-                continue
-            # reference = MEDIAN of same-stat history, not the all-time
-            # best: best-of-N strictly improves with N (order
-            # statistics), so a best-ever denominator drifts every
-            # noisy-but-stable query into "investigate" eventually —
-            # round-9 example: x_range_join_value_bands spans
-            # 0.29-0.45 s across same-code quiet runs with flat cpu
-            # probes, and 1.25x-of-best flagged a value sitting at
-            # 1.07x of its own median. The best stays in the message
-            # for context.
-            ref = statistics.median(hist_vals[n])
-            best = min(hist_vals[n])
-            ratio = per_query[n] / ref
-            norm_ratio = ratio / run_norm
-            noise_audit[n] = (
-                f"noise: inflation not reproduced ({per_query[n]}s vs "
-                f"median {round(ref, 3)}s / best {best}s, {ratio:.2f}x, "
-                f"{norm_ratio:.2f}x run-normalized)"
-                if norm_ratio <= 1.25
-                else f"investigate: persists at {norm_ratio:.2f}x of "
-                f"history median after normalizing for this run's "
-                f"{run_norm:.2f}x global inflation ({per_query[n]}s vs "
-                f"{round(ref, 3)}s, best {best}s)"
-            )
-    except Exception:
-        noise_audit = {"error": "history unavailable"}
 
     # Report-tier bench (round-7 verdict task #4): BASELINE.md's <100 ms
     # claim is measured against the reference's PRE-AGGREGATED MySQL
@@ -1033,7 +538,7 @@ def main() -> None:
     from sportstv_streaming_data_warehouse_spark.plans import report as R
 
     # guarded end-to-end: a failure here must not discard the completed
-    # headline measurements above (the stdout record and history stamp
+    # headline measurements above (the stdout record and history append
     # still happen), and the materialized fact must not leak in /tmp
     # (round-8 review finding)
     fact_dir = tempfile.mkdtemp(prefix="bench-report-fact-")
@@ -1130,42 +635,6 @@ def main() -> None:
     # multi-core throughput signal
     mt_probe = mt_speed_probe(spark)
 
-    # Representative-run stamping guard (round-10 verdict task 3): the
-    # stamped BENCH_r10.json was a box-inflated run (empty_job_ms 261.8
-    # vs the round's ~77 ms quiet floor; every query 1.5-14x its quiet
-    # twin) while the representative 41.5 s run lived only in history —
-    # a cross-round reader of the round artifacts saw a phantom
-    # regression. The run's own box-speed signals (empty_job_ms, the
-    # fixed-work cpu probe) are compared against the history medians;
-    # beyond REPRESENTATIVE_BAND the record is explicitly marked
-    # non-representative and carries a pointer to the latest qualifying
-    # history entry (same headline set, quiet, its own empty_job_ms in
-    # band) so the round stamp re-points instead of misleading.
-    try:
-        representative, rep_evidence, rep_fallback = representative_verdict(
-            hist_records, set(per_query), empty_job_ms, speed_probe_start,
-            quiet, ref_probe, mt_probe,
-            golden_etl=(golden_tier or {}).get("etl_sec"),
-            golden_stages=(golden_tier or {}).get("stage_sec"),
-        )
-        flag_streak = _flag_streak(hist_records)
-    except Exception:
-        # the guard is advisory; the stdout contract must not break
-        representative, rep_evidence, rep_fallback = quiet, [], None
-        flag_streak = 0
-
-    # the run's own commit — the lineage gate for fallback stamping
-    # (round-12 ADVICE high: BENCH_r12's headline was a mid-round-11
-    # commit's measurement); also reused by the history append below
-    try:
-        rev = subprocess.run(
-            ["git", "-C", os.path.dirname(os.path.abspath(__file__)),
-             "rev-parse", "--short", "HEAD"],
-            capture_output=True, text=True, timeout=10,
-        ).stdout.strip() or None
-    except Exception:
-        rev = None
-
     detail = {
         "metric": "headline_queries_detail",
         "queries_min": per_query_min,
@@ -1174,7 +643,6 @@ def main() -> None:
         "queries_spread": per_query_spread,
         "outlier_spread_threshold": OUTLIER_SPREAD,
         "outliers": outliers,
-        "noise_audit": noise_audit,
         "round1_comparable_total": r1_total,
         # shared-box context: 1/5/15-min load averages at start and end of
         # the run, so a contaminated sample window is diagnosable from the
@@ -1198,6 +666,9 @@ def main() -> None:
         "rollup_rows_per_sec": throughput,
         "rollup_input_rows": n_rows,
         "iters": iters,
+        # the session's default parallelism: the core count every number
+        # in this record was measured on
+        "cores": cores,
         # round 7+: median of the 3 fastest samples with adaptive top-up
         # (see robust_stat) — rounds 4-6 history entries carry
         # stat:"median"; bench_diff warns on cross-stat comparisons
@@ -1205,9 +676,6 @@ def main() -> None:
         # round 13+: the frozen round-6 51-query subtotal (see R6_SET)
         "r6_comparable_total": r6_total,
         "max_spread": max(per_query_spread.values()),
-        "noise_verdicts": sum(
-            1 for v in noise_audit.values() if v.startswith("noise")
-        ),
         # forcing probe (round 4+: full-plan hash-reduce; earlier history
         # entries used count(), which under-measured pruned expressions)
         "probe": "hash-force",
@@ -1228,52 +696,17 @@ def main() -> None:
         # hard lower bound on this box; see the BASELINE.md note
         "empty_job_ms": empty_job_ms,
         # round 11+: frozen scan+hash-agg reference workload (s) — the
-        # IO/shuffle-path box-speed signal (see spark_ref_probe); the
-        # guard activates on it once 2 history entries carry it
+        # IO/shuffle-path box-speed signal (see spark_ref_probe)
         "ref_query_probe": ref_probe,
         # round 11+: 32-way fixed-work codegen aggregate (s) — the
         # multi-core throughput signal (see mt_speed_probe), the box's
-        # documented dominant inflation mode; same 2-entry activation
+        # documented dominant inflation mode; scales with `cores`
         "mt_speed_probe": mt_probe,
-        # round 11+: representative-stamping guard verdict. False means
-        # this run's own box-speed signals sit >1.5x the history medians
-        # — read `representative_run` (the latest qualifying quiet-box
-        # history entry) for the round's real numbers instead.
-        "representative": representative,
     }
-    if rep_evidence:
-        record["inflation_evidence"] = rep_evidence
-    if rep_fallback is not None:
-        record["representative_run"] = rep_fallback
     if not quiet:
         # the box never went quiet: still honor the JSON-line stdout
-        # contract, but mark the record and refuse to stamp history below
+        # contract, but mark the record and skip the history append below
         record["contaminated"] = True
-    import sys
-
-    # round 13+: a stuck band (N consecutive flagged runs) is visible in
-    # the record itself; round 14: the marker is STICKY — once the band
-    # re-anchors, every later record in sliding-window mode carries it
-    # too, so _band_reanchored keeps the mode on (see its docstring for
-    # the oscillation this fixes)
-    record["flag_streak"] = flag_streak
-    try:
-        if _band_reanchored(hist_records):
-            record["band_reanchored"] = True
-    except Exception:
-        if flag_streak >= REANCHOR_STREAK:
-            record["band_reanchored"] = True
-
-    # round 14+ (round-13 verdict task 2): the same-commit quiet floor
-    # rides in the artifact next to the banded verdict — see quiet_floor
-    try:
-        floor = quiet_floor(hist_records, set(per_query), rev, record)
-        if floor is not None:
-            record["quiet_floor"] = floor
-    except Exception:
-        pass  # advisory; the stdout contract must not break
-
-    out = stamp_record(record, representative, rep_fallback, current_git=rev)
 
     print(json.dumps(detail), file=sys.stderr)
     # the one-line record is the contract, and it must be the LAST thing
@@ -1283,12 +716,20 @@ def main() -> None:
     # round 14 its entire round-over-round PERF table (VERDICT r14 item 4)
     spark.stop()
     sys.stdout.flush()
-    print(emit_record(out), flush=True)
+    print(emit_record(record), flush=True)
 
     if not quiet:
         return
 
     # bench history: append out-of-band metadata for round-over-round diffs
+    here = os.path.dirname(os.path.abspath(__file__))
+    try:
+        rev = subprocess.run(
+            ["git", "-C", here, "rev-parse", "--short", "HEAD"],
+            capture_output=True, text=True, timeout=10,
+        ).stdout.strip() or None
+    except Exception:
+        rev = None
     try:
         hist = dict(
             record,
@@ -1299,8 +740,7 @@ def main() -> None:
             # line slim) so spread questions are answerable after the fact
             queries_times=raw_samples,
         )
-        path = os.path.join(os.path.dirname(os.path.abspath(__file__)), "BENCH_history.jsonl")
-        with open(path, "a") as f:
+        with open(os.path.join(here, "BENCH_history.jsonl"), "a") as f:
             f.write(json.dumps(hist) + "\n")
     except Exception:
         pass  # history is best-effort; the stdout contract must not break

@@ -1,552 +1,30 @@
-"""Representative-run stamping guard (round-10 verdict task 3).
+"""bench.py's stdout record: its one-line JSON contract, and that it
+reports the run that produced it.
 
-BENCH_r10.json was stamped from a box-inflated run (its own
-empty_job_ms 261.8 ms vs the round's ~77 ms quiet floor) while the
-representative 41.5 s run lived only in BENCH_history.jsonl — a
-cross-round reader of the round artifacts saw a phantom regression.
-`bench.representative_verdict` compares the run's own box-speed
-signals to the history medians and, when inflated, re-points the
-record at the latest qualifying quiet history entry. Pure-Python —
-no SparkSession."""
+The record is the line a reader (or a driver parsing stdout) takes as
+the bench result, so `emit_record` must print exactly one line that
+round-trips through JSON and stays under RECORD_MAX_BYTES. And every
+primary field must be this run's own measurement: `value`, `queries`,
+the tiers and `cores` describe the session that ran, whatever
+BENCH_history.jsonl holds. An 8-core run's 32-way `mt_speed_probe`
+reads about 4x a 32-core run's by design; the record must still carry
+the 8-core numbers, so core-count scaling is visible rather than
+overwritten by another run's. The end-to-end case drives `bench.main`
+with a stand-in session whose queries cost a fixed few milliseconds, so
+it needs no real query work."""
 
 from __future__ import annotations
 
-from bench import (
-    REANCHOR_STREAK,
-    REPRESENTATIVE_BAND,
-    representative_verdict,
-)
+import collections
+import json
+import subprocess
+import time
 
-HEADLINE = {"q_a", "q_b"}
+import pytest
 
 
-def _rec(ej, probe, value, queries=None, contaminated=False, git="abc"):
-    r = {
-        "empty_job_ms": ej,
-        "cpu_speed_probe": probe,
-        "value": value,
-        "queries": queries if queries is not None else {q: 1.0 for q in HEADLINE},
-        "git": git,
-        "wall_clock": "2026-08-15T12:00:00",
-    }
-    if contaminated:
-        r["contaminated"] = True
-    return r
-
-
-HIST = [
-    _rec(77.0, 0.44, 41.5, git="r10a"),
-    _rec(80.0, 0.45, 41.9, git="r10b"),
-    _rec(75.0, 0.43, 41.2, git="r10c"),
-]
-
-
-def test_quiet_in_band_run_is_representative():
-    ok, evidence, fallback = representative_verdict(
-        HIST, HEADLINE, empty_job_ms=82.0, speed_probe=0.46, quiet=True
-    )
-    assert ok is True and evidence == [] and fallback is None
-
-
-def test_inflated_empty_job_floor_is_flagged_with_fallback():
-    # 261.8 ms vs the ~77 ms median — the literal round-10 stamp
-    ok, evidence, fallback = representative_verdict(
-        HIST, HEADLINE, empty_job_ms=261.8, speed_probe=0.44, quiet=True
-    )
-    assert ok is False
-    assert any("empty_job_ms" in e and "3.4" in e for e in evidence)
-    # fallback = the LATEST qualifying entry (r10c is last in file order)
-    assert fallback is not None and fallback["git"] == "r10c"
-    assert fallback["value"] == 41.2
-
-
-def test_inflated_cpu_probe_alone_is_flagged():
-    ok, evidence, _ = representative_verdict(
-        HIST, HEADLINE, empty_job_ms=78.0, speed_probe=0.70, quiet=True
-    )
-    assert ok is False and any("cpu_speed_probe" in e for e in evidence)
-
-
-def test_fallback_skips_contaminated_inflated_and_foreign_set_entries():
-    hist = HIST + [
-        _rec(76.0, 0.44, 40.0, queries={"q_a": 1.0}, git="other-set"),
-        _rec(250.0, 0.44, 60.0, git="inflated"),
-        _rec(77.0, 0.44, 41.0, contaminated=True, git="dirty"),
-    ]
-    ok, _, fallback = representative_verdict(
-        hist, HEADLINE, empty_job_ms=400.0, speed_probe=0.44, quiet=True
-    )
-    assert ok is False and fallback["git"] == "r10c"
-
-
-def test_thin_history_never_verdicts():
-    # <2 values per signal: a single early record must not set the band
-    ok, evidence, fallback = representative_verdict(
-        HIST[:1], HEADLINE, empty_job_ms=500.0, speed_probe=5.0, quiet=True
-    )
-    assert ok is True and evidence == [] and fallback is None
-    # ... and the loadavg gate's own verdict still passes through
-    ok, _, _ = representative_verdict(
-        HIST[:1], HEADLINE, empty_job_ms=500.0, speed_probe=5.0, quiet=False
-    )
-    assert ok is False
-
-
-def test_missing_empty_job_signal_degrades_to_probe_only():
-    ok, evidence, _ = representative_verdict(
-        HIST, HEADLINE, empty_job_ms=None, speed_probe=0.44, quiet=True
-    )
-    assert ok is True and evidence == []
-
-
-def test_band_boundary_is_exclusive():
-    med_ej = 77.0  # median of HIST's empty_job_ms
-    ok, evidence, _ = representative_verdict(
-        HIST, HEADLINE,
-        empty_job_ms=med_ej * REPRESENTATIVE_BAND, speed_probe=0.44,
-        quiet=True,
-    )
-    assert ok is True and evidence == []
-
-
-def _rec_ref(ej, probe, ref, value, git="abc"):
-    r = _rec(ej, probe, value, git=git)
-    r["ref_query_probe"] = ref
-    return r
-
-
-HIST_REF = [
-    _rec_ref(77.0, 0.44, 0.30, 41.5, git="r11a"),
-    _rec_ref(80.0, 0.45, 0.32, 41.9, git="r11b"),
-    _rec_ref(75.0, 0.43, 0.29, 41.2, git="r11c"),
-]
-
-
-def test_inflated_ref_query_probe_alone_is_flagged():
-    # the round-11 miss: empty job and cpu probe in band, but the
-    # IO/shuffle path (and every real query) inflated
-    ok, evidence, fallback = representative_verdict(
-        HIST_REF, HEADLINE, empty_job_ms=82.0, speed_probe=0.45,
-        quiet=True, ref_probe=0.55,
-    )
-    assert ok is False
-    assert any("ref_query_probe" in e for e in evidence)
-    assert fallback is not None and fallback["git"] == "r11c"
-
-
-def test_ref_probe_in_band_stays_representative():
-    ok, evidence, _ = representative_verdict(
-        HIST_REF, HEADLINE, empty_job_ms=80.0, speed_probe=0.45,
-        quiet=True, ref_probe=0.33,
-    )
-    assert ok is True and evidence == []
-
-
-def test_ref_probe_check_self_activates_only_with_history():
-    # old history entries lack the field: a single carrying entry must
-    # not set the band
-    hist = HIST + [_rec_ref(77.0, 0.44, 0.30, 41.5, git="one")]
-    ok, evidence, _ = representative_verdict(
-        hist, HEADLINE, empty_job_ms=80.0, speed_probe=0.45,
-        quiet=True, ref_probe=9.9,
-    )
-    assert ok is True and evidence == []
-
-
-def test_fallback_skips_entries_with_inflated_ref_probe():
-    hist = HIST_REF + [_rec_ref(78.0, 0.44, 0.95, 55.0, git="inflated")]
-    ok, _, fallback = representative_verdict(
-        hist, HEADLINE, empty_job_ms=300.0, speed_probe=0.45,
-        quiet=True, ref_probe=0.31,
-    )
-    assert ok is False
-    # the latest entry is ref-probe-inflated; fall back past it
-    assert fallback is not None and fallback["git"] == "r11c"
-
-
-def test_fallback_prefers_the_quietest_qualifying_box_over_the_latest():
-    # a later run can sit inside the band yet be measurably slower-box
-    # than the round's quiet twin (the round-11 54.3s-vs-37.8s case):
-    # the pointer must pick the quietest signals, not recency
-    hist = HIST + [_rec(105.0, 0.46, 54.3, git="in_band_but_louder")]
-    ok, _, fallback = representative_verdict(
-        hist, HEADLINE, empty_job_ms=300.0, speed_probe=0.45, quiet=True
-    )
-    assert ok is False
-    assert fallback is not None and fallback["git"] == "r10c"
-
-
-def _rec_mt(ej, probe, ref, mt, value, git="abc"):
-    r = _rec_ref(ej, probe, ref, value, git=git)
-    r["mt_speed_probe"] = mt
-    return r
-
-
-HIST_MT = [
-    _rec_mt(77.0, 0.44, 0.30, 0.35, 38.0, git="m1"),
-    _rec_mt(80.0, 0.45, 0.32, 0.36, 38.4, git="m2"),
-    _rec_mt(75.0, 0.43, 0.29, 0.34, 37.8, git="m3"),
-]
-
-
-def test_multicore_inflation_alone_is_flagged():
-    # the documented dominant mode: scheduling floor, python loop, and
-    # the small reference scan all flat — only parallel throughput down
-    ok, evidence, fallback = representative_verdict(
-        HIST_MT, HEADLINE, empty_job_ms=78.0, speed_probe=0.44,
-        quiet=True, ref_probe=0.31, mt_probe=0.62,
-    )
-    assert ok is False
-    assert any("mt_speed_probe" in e for e in evidence)
-    assert fallback is not None and fallback["git"] == "m3"
-
-
-def test_multicore_probe_in_band_stays_representative():
-    ok, evidence, _ = representative_verdict(
-        HIST_MT, HEADLINE, empty_job_ms=78.0, speed_probe=0.44,
-        quiet=True, ref_probe=0.31, mt_probe=0.40,
-    )
-    assert ok is True and evidence == []
-
-
-def test_fallback_skips_mt_inflated_entries():
-    hist = HIST_MT + [_rec_mt(74.0, 0.43, 0.29, 0.80, 49.0, git="mt_inflated")]
-    ok, _, fallback = representative_verdict(
-        hist, HEADLINE, empty_job_ms=300.0, speed_probe=0.44,
-        quiet=True, ref_probe=0.30, mt_probe=0.35,
-    )
-    assert ok is False
-    # the newest entry has the QUIETEST ej but an inflated mt probe —
-    # it must be disqualified before the quietest-key selection
-    assert fallback is not None and fallback["git"] == "m3"
-
-
-def test_fallback_skips_cpu_inflated_entries():
-    # review finding: the skip loop banded ej/ref/mt but not the cpu
-    # probe, so a cpu-inflated run with the quietest ej could be
-    # stamped as the round pointer
-    hist = HIST + [_rec(74.0, 0.95, 60.0, git="cpu_inflated_quietest_ej")]
-    ok, _, fallback = representative_verdict(
-        hist, HEADLINE, empty_job_ms=300.0, speed_probe=0.44, quiet=True
-    )
-    assert ok is False
-    assert fallback is not None and fallback["git"] == "r10c"
-
-
-def test_fallback_carries_every_signal_field():
-    ok, _, fallback = representative_verdict(
-        HIST_MT, HEADLINE, empty_job_ms=300.0, speed_probe=0.44,
-        quiet=True, ref_probe=0.30, mt_probe=0.35,
-    )
-    assert ok is False
-    for field in ("empty_job_ms", "cpu_speed_probe", "ref_query_probe",
-                  "mt_speed_probe", "value", "git"):
-        assert field in fallback
-    assert fallback["mt_speed_probe"] == 0.34
-
-
-def test_stamp_record_promotes_the_fallback_numbers():
-    """round-12 (verdict task 5): a non-representative run's stdout
-    record carries the fallback's value/queries OUTRIGHT; the live
-    numbers move aside with provenance."""
-    from bench import stamp_record
-
-    live = {"value": 50.9, "queries": {"q_a": 25.0, "q_b": 25.9},
-            "representative": False}
-    fb = _rec(77.0, 0.44, 37.8, git="quiet1")
-    fb["ref_query_probe"] = 0.17
-    fb["mt_speed_probe"] = 1.1
-    out = stamp_record(live, False, fb, current_git="quiet1")
-    assert out["value"] == 37.8
-    assert out["queries"] == fb["queries"]
-    assert out["live_value"] == 50.9
-    assert out["live_queries"] == {"q_a": 25.0, "q_b": 25.9}
-    assert out["stamped_from"]["git"] == "quiet1"
-    assert out["stamped_from"]["ref_query_probe"] == 0.17
-    # the input record is NOT mutated — history appends the live run
-    assert live["value"] == 50.9 and "stamped_from" not in live
-
-
-def test_stamp_record_passes_through_when_representative_or_no_fallback():
-    from bench import stamp_record
-
-    live = {"value": 40.0, "queries": {"q_a": 20.0, "q_b": 20.0}}
-    assert stamp_record(live, True, _rec(77.0, 0.44, 37.8), "abc") is live
-    assert stamp_record(live, False, None, "abc") is live
-    # a fallback without numbers cannot stamp
-    assert stamp_record(live, False, {"git": "abc", "value": None}, "abc") is live
-
-
-def test_stamp_record_refuses_fallbacks_from_another_commit():
-    """round-12 ADVICE (high) / verdict task 3: BENCH_r12.json's headline
-    was stamped from a mid-round-11 commit, so the artifact
-    misrepresented HEAD and a real regression could hide behind a quiet
-    historical run forever. A fallback measured at any commit other than
-    the run's own passes through — the live numbers stay primary and the
-    representative_run pointer (kept by main) is the only reference."""
-    from bench import stamp_record
-
-    live = {"value": 50.9, "queries": {"q_a": 25.0, "q_b": 25.9},
-            "representative": False}
-    fb = _rec(77.0, 0.44, 37.8, git="9a82b1c")  # the literal r12 stamp
-    assert stamp_record(live, False, fb, current_git="bd9f0ec") is live
-    # an unknown current commit (rev-parse failed) can never stamp either
-    assert stamp_record(live, False, fb, current_git=None) is live
-    assert stamp_record(live, False, fb) is live
-
-
-def test_stamp_record_promotes_the_measurement_tiers_too():
-    """golden/report tiers are box-speed measurements: the promoted
-    record must carry the fallback's, with the live ones set aside."""
-    from bench import stamp_record
-
-    live = {
-        "value": 56.9, "queries": {"q_a": 28.0, "q_b": 28.9},
-        "golden_tier": {"etl_sec": 62.4}, "report_tier": {"ms": 300},
-    }
-    fb = _rec(58.1, 0.43, 37.8, git="quiet")
-    fb["golden_tier"] = {"etl_sec": 5.1}
-    fb["report_tier"] = {"ms": 95}
-    out = stamp_record(live, False, fb, current_git="quiet")
-    assert out["golden_tier"] == {"etl_sec": 5.1}
-    assert out["live_golden_tier"] == {"etl_sec": 62.4}
-    assert out["report_tier"] == {"ms": 95}
-    assert out["live_report_tier"] == {"ms": 300}
-    # a fallback without tier data leaves the live tiers in place
-    out2 = stamp_record(live, False, _rec(58.1, 0.43, 37.8, git="quiet"),
-                        current_git="quiet")
-    assert out2["golden_tier"] == {"etl_sec": 62.4}
-    assert "live_golden_tier" not in out2
-
-
-def _rec_golden(ej, probe, golden, value, git="abc"):
-    r = _rec(ej, probe, value, git=git)
-    r["golden_tier"] = {"etl_sec": golden}
-    return r
-
-
-HIST_GOLDEN = [
-    _rec_golden(77.0, 0.44, 5.8, 38.0, git="g1"),
-    _rec_golden(80.0, 0.45, 6.2, 38.4, git="g2"),
-    _rec_golden(75.0, 0.43, 5.1, 37.8, git="g3"),
-]
-
-
-def test_mid_run_spike_is_caught_by_the_golden_tier_signal():
-    """round-12 live miss: start probes quiet, but a load spike landed
-    MID-RUN — golden ETL 51s against a 5-7s history band — and the run
-    passed representative:true. The golden tier is a real workload
-    measured every run, so it bands like the probes."""
-    ok, evidence, fallback = representative_verdict(
-        HIST_GOLDEN, HEADLINE, empty_job_ms=82.0, speed_probe=0.45,
-        quiet=True, golden_etl=51.0,
-    )
-    assert ok is False
-    assert any("golden_tier.etl_sec" in e for e in evidence)
-    assert fallback is not None and fallback["git"] == "g3"
-
-
-def test_golden_in_band_stays_representative():
-    ok, evidence, _ = representative_verdict(
-        HIST_GOLDEN, HEADLINE, empty_job_ms=80.0, speed_probe=0.45,
-        quiet=True, golden_etl=6.9,
-    )
-    assert ok is True and evidence == []
-
-
-def test_stage_walls_band_and_localize_a_mid_run_spike():
-    """round-13 (verdict task 4): the golden tier's per-stage walls are
-    guard sub-signals once 2 history entries carry them — a spike names
-    the stage that absorbed it. Round 14 (round-13 ADVICE): the banded
-    keys are fact_write_sec and other_sec — after the Observation
-    fusion the write path never records bounds_scan_sec, so that
-    sub-signal could never activate and was dropped."""
-    hist = []
-    for git, (w, o) in zip("abc", [(2.1, 0.6), (2.4, 0.7), (2.0, 0.5)]):
-        r = _rec_golden(77.0, 0.44, 5.8, 38.0, git=git)
-        r["golden_tier"]["stage_sec"] = {
-            "fact_write_sec": w, "other_sec": o,
-        }
-        hist.append(r)
-    ok, evidence, _ = representative_verdict(
-        hist, HEADLINE, empty_job_ms=78.0, speed_probe=0.44, quiet=True,
-        golden_etl=6.0,
-        golden_stages={"fact_write_sec": 2.2, "other_sec": 9.3},
-    )
-    assert ok is False
-    assert any("stage_sec.other_sec" in e for e in evidence)
-    assert not any("stage_sec.fact_write_sec" in e for e in evidence)
-    # a dead key in the run's stages can never fire (no band forms)
-    assert not any("bounds_scan_sec" in e for e in evidence)
-    # absent stage history (pre-r13 entries): the sub-signal stays off
-    ok2, evidence2, _ = representative_verdict(
-        HIST_GOLDEN, HEADLINE, empty_job_ms=78.0, speed_probe=0.44,
-        quiet=True, golden_etl=6.0,
-        golden_stages={"fact_write_sec": 2.2, "other_sec": 9.3},
-    )
-    assert ok2 is True and evidence2 == []
-
-
-def test_fallback_skips_golden_inflated_entries():
-    hist = HIST_GOLDEN + [_rec_golden(74.0, 0.43, 53.4, 56.9, git="spiked")]
-    ok, _, fallback = representative_verdict(
-        hist, HEADLINE, empty_job_ms=300.0, speed_probe=0.45,
-        quiet=True, golden_etl=6.0,
-    )
-    assert ok is False
-    assert fallback is not None and fallback["git"] == "g3"
-
-
-def _noisy(n, ej=280.0, value=60.0):
-    out = []
-    for i in range(n):
-        r = _rec(ej, 0.44, value, git=f"noisy{i}")
-        r["representative"] = False
-        out.append(r)
-    return out
-
-
-def test_flagged_history_entries_do_not_drift_the_band_medians():
-    """round-12: three flagged-but-stamped runs raised the empty-job
-    median 82.9 -> 89.8 ms. Entries recorded with representative:false
-    are excluded from the medians (below the REANCHOR_STREAK boundary),
-    so a noisy stretch cannot talk the guard into accepting it."""
-    hist = HIST + _noisy(REANCHOR_STREAK - 1)  # would dominate if counted
-    ok, evidence, fallback = representative_verdict(
-        hist, HEADLINE, empty_job_ms=261.8, speed_probe=0.44, quiet=True
-    )
-    assert ok is False  # 261.8 still reads against the ~77 ms quiet band
-    assert any("empty_job_ms" in e for e in evidence)
-    assert fallback is not None and fallback["git"] == "r10c"
-
-
-def test_band_reanchors_after_a_sustained_flag_streak():
-    """round-12 ADVICE (medium): with flagged entries excluded forever,
-    a persistent legitimate slowdown (code or hardware) leaves the band
-    anchored at the old quiet level and EVERY future run is flagged and
-    stamped from stale history indefinitely. At REANCHOR_STREAK
-    consecutive flagged entries the medians re-anchor over the recent
-    REANCHOR_WINDOW entries flags-and-all, so a run at the new steady
-    level reads representative again."""
-    hist = HIST + _noisy(REANCHOR_STREAK)
-    ok, evidence, fallback = representative_verdict(
-        hist, HEADLINE, empty_job_ms=275.0, speed_probe=0.44, quiet=True
-    )
-    assert ok is True and evidence == [] and fallback is None
-    # a run still far above even the re-anchored level keeps flagging
-    ok2, evidence2, _ = representative_verdict(
-        hist, HEADLINE, empty_job_ms=800.0, speed_probe=0.44, quiet=True
-    )
-    assert ok2 is False and any("empty_job_ms" in e for e in evidence2)
-
-
-def test_reanchor_mode_is_sticky_after_the_first_reanchored_entry():
-    """round-13 ADVICE (low): the escape hatch only fired while the
-    trailing streak was >= REANCHOR_STREAK. After one re-anchored run
-    stamped representative the streak reset to 0, the band snapped back
-    to the frozen old-level quiet medians, and the next ~6 runs were
-    flagged again — ~1 representative run per 7 instead of convergence.
-    Round 14: once any history entry carries band_reanchored, the band
-    stays in sliding-window mode."""
-    from bench import _band_reanchored
-
-    # the post-streak state: a re-anchored run stamped representative
-    # at the new ~275 ms level, breaking the streak
-    reanchored_run = _rec(275.0, 0.44, 58.0, git="newlvl0")
-    reanchored_run["band_reanchored"] = True
-    hist = HIST + _noisy(REANCHOR_STREAK) + [reanchored_run]
-    assert _band_reanchored(hist)  # sticky despite streak == 0
-    ok, evidence, fallback = representative_verdict(
-        hist, HEADLINE, empty_job_ms=280.0, speed_probe=0.44, quiet=True
-    )
-    # pre-fix this read against the frozen ~77 ms quiet band and flagged
-    assert ok is True and evidence == [] and fallback is None
-    # stickiness propagates: later new-level quiet entries keep the
-    # marker alive even after the flagged cohort ages out of the window
-    later = [_rec(276.0, 0.44, 58.2, git=f"newlvl{i}") for i in range(1, 9)]
-    for r in later:
-        r["band_reanchored"] = True
-    hist2 = HIST + _noisy(REANCHOR_STREAK) + [reanchored_run] + later
-    ok3, evidence3, _ = representative_verdict(
-        hist2, HEADLINE, empty_job_ms=281.0, speed_probe=0.44, quiet=True
-    )
-    assert ok3 is True and evidence3 == []
-    # and a genuinely inflated run still flags against the new level
-    ok4, evidence4, _ = representative_verdict(
-        hist2, HEADLINE, empty_job_ms=800.0, speed_probe=0.44, quiet=True
-    )
-    assert ok4 is False and any("empty_job_ms" in e for e in evidence4)
-
-
-def test_quiet_floor_same_commit_only_and_includes_live():
-    """round-13 verdict task 2: the artifact carries the round's
-    quiet-box truth. Only SAME-COMMIT quiet-qualified samples are
-    eligible (stamp_record's lineage rule), the live run counts when it
-    qualifies, and flagged/contaminated samples never set the floor."""
-    from bench import quiet_floor
-
-    h1 = _rec(77.0, 0.44, 53.1, git="head1")
-    h1["wall_clock"] = "2026-08-16T10:00:00"
-    h1["r6_comparable_total"] = 52.0
-    h1["golden_tier"] = {"etl_sec": 2.62}
-    other = _rec(75.0, 0.43, 37.8, git="OTHER")  # faster, wrong commit
-    flagged = _rec(300.0, 0.9, 41.0, git="head1")
-    flagged["representative"] = False
-    contaminated = _rec(77.0, 0.44, 40.0, git="head1", contaminated=True)
-    hist = [other, h1, flagged, contaminated]
-    live = {"value": 79.5, "queries": {q: 1.0 for q in HEADLINE},
-            "representative": True}
-    floor = quiet_floor(hist, HEADLINE, "head1", live)
-    assert floor["value"] == 53.1          # never the other-commit 37.8
-    assert floor["git"] == "head1"
-    assert floor["source"] == "history"
-    assert floor["golden_etl_sec"] == 2.62
-    assert floor["n_samples"] == 2         # h1 + qualifying live only
-    # the live run sets the floor when it is the quietest same-commit one
-    live_fast = dict(live, value=48.9)
-    floor2 = quiet_floor(hist, HEADLINE, "head1", live_fast)
-    assert floor2["value"] == 48.9 and floor2["source"] == "live"
-    # a flagged live run cannot
-    live_flagged = dict(live, value=30.0, representative=False)
-    assert quiet_floor(hist, HEADLINE, "head1", live_flagged)["value"] == 53.1
-    # no same-commit qualifier at all -> no floor (never another commit's)
-    assert quiet_floor([other], HEADLINE, "head1", live_flagged) is None
-    assert quiet_floor(hist, HEADLINE, None, live) is None
-
-
-def test_flag_streak_counter_counts_the_trailing_run_only():
-    from bench import _flag_streak
-
-    assert _flag_streak(HIST) == 0
-    assert _flag_streak(HIST + _noisy(3)) == 3
-    # an interleaved quiet entry resets the streak
-    assert _flag_streak(_noisy(4) + HIST[:1] + _noisy(2)) == 2
-
-
-def test_fallback_candidates_must_carry_every_active_signal():
-    """round-12 ADVICE (low): BENCH_r12's stamped_from had
-    ref_query_probe and mt_speed_probe both null — a pre-probe entry
-    with unverified quietness was promoted. A candidate missing ANY
-    signal the band currently checks is skipped."""
-    # ref-probe band is active (2+ history values); r10-era entries
-    # lack the field entirely and must no longer qualify
-    hist = HIST + HIST_REF[:2]
-    ok, _, fallback = representative_verdict(
-        hist, HEADLINE, empty_job_ms=400.0, speed_probe=0.44,
-        quiet=True, ref_probe=0.30,
-    )
-    assert ok is False
-    assert fallback is not None
-    assert fallback["git"] in {"r11a", "r11b"}  # never a pre-probe entry
-
-
-# --- round 15: the one-line stdout record contract (VERDICT r14 item 4:
-# BENCH_r13's record failed the driver's parse at rc 0 and the round lost
-# its whole PERF table) ---
-
-
-def _full_record(n_queries=56, pad=0):
-    rec = {
+def _full_record(n_queries=56):
+    return {
         "metric": "headline_queries_total",
         "value": 85.3,
         "unit": "sec",
@@ -554,14 +32,7 @@ def _full_record(n_queries=56, pad=0):
         "sf": 0.1,
         "golden_tier": {"etl_sec": 5.5},
         "report_tier": {"materialize_sec": 1.9},
-        "representative": True,
     }
-    if pad:
-        # advisory blobs large enough to blow the cap
-        rec["inflation_evidence"] = {"x": "y" * pad}
-        rec["live_queries"] = {f"query_{i:03d}": 1.2 for i in range(n_queries)}
-        rec["quiet_floor"] = {"value": 60.7, "note": "z" * pad}
-    return rec
 
 
 def test_emit_record_round_trips_one_line():
@@ -577,19 +48,18 @@ def test_emit_record_round_trips_one_line():
     assert parsed["golden_tier"]["etl_sec"] == 5.5
 
 
-def test_emit_record_caps_size_by_shedding_advisory_keys_only():
-    import json
-
+def test_emit_record_refuses_an_oversized_record():
     from bench import RECORD_MAX_BYTES, emit_record
 
-    line = emit_record(_full_record(pad=RECORD_MAX_BYTES))
-    assert len(line.encode()) <= RECORD_MAX_BYTES
-    parsed = json.loads(line)
-    # core contract fields survive; advisory blobs were shed
-    for key in ("metric", "value", "unit", "queries", "sf",
-                "golden_tier", "report_tier"):
-        assert key in parsed, key
-    assert "inflation_evidence" not in parsed
+    rec = _full_record()
+    rec["note"] = ""
+    rec["note"] = "x" * (RECORD_MAX_BYTES - len(json.dumps(rec).encode()))
+    # a record exactly at the cap prints whole
+    assert len(emit_record(rec).encode()) == RECORD_MAX_BYTES
+    # one byte over raises: no key is dropped to make it fit
+    rec["note"] += "x"
+    with pytest.raises(ValueError, match="cap"):
+        emit_record(rec)
 
 
 def test_emit_record_fails_loudly_on_unserializable_values():
@@ -601,3 +71,123 @@ def test_emit_record_fails_loudly_on_unserializable_values():
     rec["queries"] = {"q": object()}
     with pytest.raises(TypeError):
         emit_record(rec)
+
+
+# --- the varied-core case: an 8-core run next to faster 32-core history ---
+
+QUERY_SEC = 0.004    # what every stand-in query costs on the 8-core run
+HISTORY_SEC = 0.001  # the same query on the 32-core history runs
+HISTORY_MT = 0.35    # the 32-core runs' 32-way probe; the live run reads 4x
+
+
+class _Frame:
+    """Just enough DataFrame for bench.main's calls: the hash-force
+    select/collect costs QUERY_SEC, everything else is free."""
+
+    columns = ["h"]
+
+    def select(self, *cols):
+        return self
+
+    def selectExpr(self, *exprs):
+        return self
+
+    def collect(self):
+        time.sleep(QUERY_SEC)
+        return []
+
+    def count(self):
+        return 60_000
+
+
+class _Session:
+    class sparkContext:
+        defaultParallelism = 8
+
+        @staticmethod
+        def setLogLevel(level):
+            pass
+
+    def range(self, *args):
+        return _Frame()
+
+    def stop(self):
+        pass
+
+
+def _git_checkout(path) -> str:
+    """A one-commit repository at `path`; returns its short HEAD."""
+    def git(*args):
+        return subprocess.run(
+            ["git", "-C", str(path), "-c", "user.name=bench",
+             "-c", "user.email=bench@example.com", *args],
+            check=True, capture_output=True, text=True,
+        ).stdout.strip()
+
+    git("init", "-q")
+    git("commit", "-q", "--allow-empty", "-m", "bench")
+    return git("rev-parse", "--short", "HEAD")
+
+
+def test_eight_core_run_reports_its_own_numbers(spark, tmp_path, monkeypatch, capsys):
+    # `spark` only makes pyspark.sql.functions usable: hash_force builds
+    # its real hash expression, which the stand-in frame then ignores
+    import bench
+    from sportstv_streaming_data_warehouse_spark.sources import fixtures
+
+    rev = _git_checkout(tmp_path)
+    history = tmp_path / "BENCH_history.jsonl"
+    # three quiet same-commit 32-core runs, every query 4x faster
+    hist_lines = [
+        json.dumps({
+            "metric": "headline_queries_total",
+            "value": round(HISTORY_SEC * len(bench.HEADLINE), 3),
+            "unit": "sec",
+            "queries": {n: HISTORY_SEC for n in bench.HEADLINE},
+            "sf": 0.1,
+            "stat": "min3-median",
+            "probe": "hash-force",
+            "cores": 32,
+            "empty_job_ms": 77.0 + i,
+            "cpu_speed_probe": 0.44,
+            "ref_query_probe": 0.30,
+            "mt_speed_probe": HISTORY_MT,
+            "git": rev,
+            "wall_clock": f"2026-10-0{i + 1}T12:00:00",
+        }) + "\n"
+        for i in range(3)
+    ]
+    history.write_text("".join(hist_lines))
+
+    monkeypatch.setattr(bench, "__file__", str(tmp_path / "bench.py"))
+    monkeypatch.setenv("SPARK_GRAFT_SF_DIR", str(tmp_path / "sf0.1"))
+    monkeypatch.setenv("SPARK_GRAFT_BENCH_ITERS", "3")
+    monkeypatch.setenv("SPARK_GRAFT_BENCH_GOLDEN", "0")
+    monkeypatch.setattr(bench, "get_spark", lambda app_name: _Session())
+    monkeypatch.setattr(
+        bench, "QUERIES",
+        collections.defaultdict(lambda: lambda spark, sf_dir: _Frame()),
+    )
+    monkeypatch.setattr(fixtures, "load_table", lambda spark, sf_dir, name: _Frame())
+    monkeypatch.setattr(bench, "wait_for_quiet_box", lambda max_load: True)
+    monkeypatch.setattr(bench, "cpu_speed_probe", lambda: 0.44)
+    monkeypatch.setattr(bench, "spark_ref_probe", lambda spark, sf_dir: 0.30)
+    monkeypatch.setattr(bench, "mt_speed_probe", lambda spark: 4 * HISTORY_MT)
+
+    bench.main()
+
+    record = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    assert record["cores"] == 8
+    assert record["mt_speed_probe"] == 4 * HISTORY_MT
+    # the live 8-core numbers, not the faster history's
+    assert set(record["queries"]) == set(bench.HEADLINE)
+    assert all(v >= QUERY_SEC for v in record["queries"].values())
+    assert record["value"] == pytest.approx(sum(record["queries"].values()), abs=0.01)
+    assert record["value"] > 2 * HISTORY_SEC * len(bench.HEADLINE)
+    # a quiet run appends its own raw record; history is never rewritten
+    lines = history.read_text().splitlines(keepends=True)
+    assert lines[:3] == hist_lines and len(lines) == 4
+    appended = json.loads(lines[3])
+    assert appended["git"] == rev and appended["cores"] == 8
+    assert appended["value"] == record["value"]
+    assert appended["queries"] == record["queries"]

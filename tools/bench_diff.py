@@ -31,9 +31,16 @@ def main() -> None:
         print(f"need two runs at sf={sf} to diff")
         return
     prev, cur = runs[-2], runs[-1]
-    print(f"sf={sf}  prev git={prev.get('git')} probe={prev.get('probe', 'count')} "
-          f"loadavg={prev.get('loadavg')}  cur git={cur.get('git')} "
+    # entries from before the record carried `cores` say "unknown"
+    cp, cc = prev.get("cores", "unknown"), cur.get("cores", "unknown")
+    print(f"sf={sf}  prev git={prev.get('git')} cores={cp} "
+          f"probe={prev.get('probe', 'count')} loadavg={prev.get('loadavg')}  "
+          f"cur git={cur.get('git')} cores={cc} "
           f"probe={cur.get('probe', 'count')} loadavg={cur.get('loadavg')}")
+    if cp != cc:
+        print(f"WARNING: core counts differ ({cp} vs {cc}) — ratios mix "
+              "core-count scaling with any code change; diff same-core "
+              "entries to judge the code.")
     if prev.get("probe") != cur.get("probe"):
         print("WARNING: forcing probes differ between runs — ratios reflect "
               "the METHODOLOGY change (count() under-measures pruned "
@@ -45,14 +52,6 @@ def main() -> None:
               "— min3-median (round 7+) reads systematically FASTER than "
               "the full-sample median on a noisy box. For a like-for-like "
               "diff use queries_median_all from the detail record.")
-    for tag, e in (("prev", prev), ("cur", cur)):
-        # round 11+: bench.representative_verdict stamps this flag when
-        # the run's own box-speed signals sit >1.5x the history medians
-        if e.get("representative") is False:
-            print(f"WARNING: {tag} run is marked NON-REPRESENTATIVE "
-                  f"(evidence: {e.get('inflation_evidence')}) — ratios "
-                  f"against it measure box inflation, not code; diff "
-                  f"against its representative_run pointer instead.")
     sp, sc = prev.get("cpu_speed_probe"), cur.get("cpu_speed_probe")
     if sp and sc:
         # hypervisor-level contention is invisible to loadavg (round-8

@@ -9,6 +9,13 @@ timed iterations, min3-median). Usage:
     python tools/measure.py plans/r15 after q1 q2 ...     # a subset, tagged 'after'
     python tools/measure.py --iters 5 plans/r15 before
 
+`--conf JSON` adds session confs (get_spark's extra_conf). A config
+A/B alternates the two sides in fresh processes, so box drift falls on
+both equally; compare the per-pair ratios:
+
+    for i in 1 2 3; do python tools/measure.py OUT base q1 q2
+      python tools/measure.py --conf '{"spark.sql.shuffle.partitions": "64"}' OUT cand q1 q2; done
+
 Prints one JSON line {"tag": ..., "queries": {name: sec}} plus per-query
 plan-shape stats (Exchange count, join strategies, BatchEvalPython) to
 stderr so plan diffs are quick to eyeball.
@@ -27,14 +34,9 @@ import io
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, ROOT)
 
+import bench  # noqa: E402
 from sportstv_streaming_data_warehouse_spark.plans.catalog import QUERIES  # noqa: E402
 from sportstv_streaming_data_warehouse_spark.session import get_spark  # noqa: E402
-
-
-def headline() -> list[str]:
-    import bench
-
-    return list(bench.HEADLINE)
 
 
 def plan_text(df) -> str:
@@ -66,24 +68,22 @@ def main() -> None:
     p.add_argument("tag", nargs="?", default="before")
     p.add_argument("queries", nargs="*", help="default: the headline set")
     p.add_argument("--iters", type=int, default=3)
+    p.add_argument("--conf", type=json.loads, default={},
+                   help="extra session confs as a JSON object")
     a = p.parse_args()
     tag, iters, outdir = a.tag, a.iters, a.outdir
-    names = a.queries or headline()
+    names = a.queries or bench.HEADLINE
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     os.makedirs(outdir, exist_ok=True)
 
-    spark = get_spark(app_name="measure")
+    spark = get_spark(app_name="measure", extra_conf=a.conf)
     spark.sparkContext.setLogLevel("ERROR")
-    from pyspark.sql import functions as F
 
     # same warmup as bench.py
     spark.range(1_000_000).selectExpr("sum(id)").collect()
 
     def run_full(name: str) -> None:
-        df = QUERIES[name](spark, sf_dir)
-        df.select(
-            F.bit_xor(F.xxhash64(F.struct(*df.columns))).alias("h")
-        ).collect()
+        bench.hash_force(QUERIES[name](spark, sf_dir))
 
     results: dict[str, float] = {}
     shapes: dict[str, dict] = {}
