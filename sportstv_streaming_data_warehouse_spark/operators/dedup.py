@@ -5,13 +5,13 @@ PKs, loadAnalyticsDB.PractII.VarmaA.R:234 → exact_dedup here); the fuzzy
 family is the standard LLM-training-pipeline toolkit, built Spark-first:
 
 - exact:     one hash-aggregate shuffle on the dedup key.
-- MinHash+LSH: shingle → minhash signature → band → bucket join. The
-  PORTABLE (oracle) path is pure JVM-side column expressions so plain
-  SQL replays every signature; the fast path computes the k affine-min
-  slots in a bit-identical integer Arrow twin (minhash_slots_pandas,
-  1.75x at 100x — round 9). Either way the candidate join is an
-  equi-join on (band, band_hash) so Spark hash-partitions buckets —
-  no O(n²) crossJoin at any scale.
+- MinHash+LSH: shingle → minhash signature → band → bucket join, on ONE
+  hash family (polynomial shingle hash mod 2^31-1, affine slots, a
+  polynomial band key) that plain SQL replays bit-for-bit. Signatures
+  run in a batch-vectorised integer Arrow kernel
+  (poly_minhash_slots_pandas) pinned equal to the pure-expression
+  path. The candidate join is an equi-join on (band, band_hash) so
+  Spark hash-partitions buckets — no O(n²) crossJoin at any scale.
 - SimHash:   64-bit signature from token hashes; near-dup candidates via
   16-bit chunk equality (pigeonhole: hamming ≤ 3 ⇒ one of 4 chunks equal),
   verified with bit_count(xor).
@@ -214,8 +214,7 @@ def minhash_signature(
     num_hashes: int = 32,
     n: int = 3,
     seed: int = 42,
-    portable: bool = False,
-    arrow: bool | None = None,
+    arrow: bool = True,
 ) -> DataFrame:
     """(id, minhash array) via k affine hash functions over shingle hashes.
 
@@ -226,48 +225,29 @@ def minhash_signature(
     which shuffles |shingles| rows). Signature length k bounds output at
     k*8 bytes/doc regardless of document size — 100 TB-safe.
 
-    ``portable=True`` swaps the xxhash64 shingle hash for the polynomial
-    rolling hash, making the whole signature reproducible in plain SQL
-    (the oracle path); xxhash64 stays the fast default.
+    One hash family: the shingle hash is the polynomial rolling hash
+    (``_poly_hash``), so plain SQL replays every signature (the DuckDB
+    oracles in plans/catalog.py).
 
-    ``arrow`` picks how the signature evaluates: the bit-identical
-    integer Arrow twins or the interpreted expression stack. Default
-    (None) is auto — Arrow on BOTH paths since round 14: the portable
-    path's char-level polynomial fold was the single hottest expression
-    in the engine (the near-dup gate replay and the incremental dedup
-    both walk every character of every token through Catalyst's
-    interpreter), and ``poly_minhash_slots_pandas`` reproduces the same
-    integers exactly (pinned by tests/test_arrow_twin_edges.py and the
-    unchanged poly-family DuckDB oracles). ``arrow=False`` keeps the
-    pure-expression reference both twins are pinned against.
+    ``arrow`` picks how the signature evaluates: ``True`` (default)
+    runs the whole poly hash + k affine mins in one vectorised Arrow
+    pass (``poly_minhash_slots_pandas``); ``False`` is the interpreted
+    expression stack, the reference the Arrow kernel is pinned against
+    (tests/test_arrow_twin_edges.py) — its char-level polynomial fold
+    walks every character of every token through Catalyst's
+    interpreter.
     """
     coefs = minhash_coefficients(num_hashes, seed)
-
-    if arrow is None:
-        arrow = True
-    if arrow and portable:
-        # one Arrow pass: JVM tokenization/shingling (unchanged), then
-        # poly hash + all k affine mins vectorized per batch
+    shingles = word_shingles(F.col(text_col), n)
+    if arrow:
         return _ensure_parallelism(df).select(
             F.col(id_col),
-            poly_minhash_slots_pandas(
-                word_shingles(F.col(text_col), n), coefs
-            ).alias("signature"),
+            poly_minhash_slots_pandas(shingles, coefs).alias("signature"),
         )
 
-    shingle_hash = (
-        _poly_hash
-        if portable
-        else (lambda s: F.pmod(F.xxhash64(s), F.lit(_HASH_PRIME)))
-    )
-    hashes = F.transform(word_shingles(F.col(text_col), n), shingle_hash)
     with_hashes = _ensure_parallelism(df).select(
-        F.col(id_col), hashes.alias("__hs")
+        F.col(id_col), F.transform(shingles, _poly_hash).alias("__hs")
     )
-    if arrow:
-        return with_hashes.select(
-            id_col, minhash_slots_pandas(F.col("__hs"), coefs).alias("signature")
-        )
     mins = [
         F.array_min(
             F.transform(
@@ -280,42 +260,49 @@ def minhash_signature(
 
 
 def poly_minhash_slots_pandas(sh_col, coefs: list[tuple[int, int]]):
-    """Polynomial shingle hash + all k affine minhash slots in one Arrow
-    batch, BIT-IDENTICAL to the expression stack
+    """Polynomial shingle hash + all k affine minhash slots over one
+    whole Arrow batch, BIT-IDENTICAL to the expression stack
     ``array_min(transform(transform(shingles, _poly_hash), h -> (h*a+b) % P))``
-    — pure 64-bit integer math end to end, so there is no rounding
-    question (cf. minhash_slots_pandas). Exists because the portable
-    path's ``_poly_hash`` is a character-level ``aggregate`` fold that
-    Catalyst evaluates interpreted: every character of every token of
-    every document walks the expression interpreter, and the near-dup
-    gate replay evaluates that banding several times across its plan —
-    the single hottest expression in the engine (round-14 plan audit).
+    — pure 64-bit integer math end to end (h, a < 2^31, so h*a+b < 2^63
+    and ``%`` is the same nonnegative remainder in numpy and the JVM).
 
-    Semantics pinned against the expression twin (tests/
-    test_arrow_twin_edges.py) and transitively by the unchanged
-    poly-family DuckDB oracles:
+    Batch-vectorised, never a per-row or per-character Python loop:
+
+    1. the batch's non-NULL shingles are flattened (``explode``) into
+       one list with each token's row index, and joined into ONE
+       4-byte codepoint buffer (``"".join(toks).encode("utf-32-le")``)
+       addressed by per-token offsets — no padded (tokens x width)
+       matrix, so one long token costs its own length, not the batch's;
+    2. tokens are sorted longest first, so the tokens still live at
+       character position j are a PREFIX of that order: one Horner step
+       ``H = (H*31 + cp) % P`` per position over that prefix;
+    3. each document's k minima come from ``np.minimum.reduceat`` over
+       its contiguous run of tokens (explode keeps row order).
+
+    Semantics pinned against the expression path (tests/
+    test_arrow_twin_edges.py, including one batch holding every edge
+    below) and transitively by the poly-family DuckDB oracles:
 
     - ``F.split(s, '')`` yields CODEPOINTS (probed on Spark 4.1.2: a
-      non-BMP char is ONE element with ``ascii`` = its codepoint), so
-      Python ``ord`` over the string matches exactly; numpy's UCS4
-      fixed-width view is the vectorized equivalent.
-    - the empty-string shingle folds to 0 on both paths (either
+      non-BMP char is ONE element with ``ascii`` = its codepoint); a
+      Python ``str`` is a codepoint sequence too, and UTF-32 gives each
+      codepoint exactly 4 bytes, so ``len`` and the buffer agree.
+    - the empty-string shingle ``''`` hashes to 0 on both paths (either
       ``split('','') = []`` or ``['']`` with ``ascii('') = 0`` — both
-      give ``(0*31+0) % P = 0``), matching a zero-length codepoint row.
+      give ``(0*31+0) % P = 0``), matching a zero-length token.
     - NULL shingle array → k NULL slots; NULL ELEMENTS are dropped the
       way ``array_min`` skips the null the poly fold propagates; an
-      array left empty → k NULLs (``array_min`` of empty).
-    - interior NUL characters contribute codepoint 0 (``h = h*31 % P``)
-      through the padded matrix exactly as ``ascii('\\x00') = 0`` does;
-      the mask uses true Python lengths so padding never leaks in.
+      empty array (or one with only NULL elements) → k NULLs
+      (``array_min`` of empty).
+    - an interior NUL character is codepoint 0 (``h = h*31 % P``),
+      exactly as ``ascii('\\x00') = 0``; true lengths bound every
+      token, so no padding exists to be confused with it.
 
     The closure captures only the (a, b) ints — executors import
-    nothing from the repo. Deliberately DETERMINISTIC, like
-    minhash_slots_pandas: its consumers show no §4.4 duplication (one
-    banding per side in the incremental join, InMemoryRelation on the
-    cached paths) and determinism keeps AQE exchange reuse and cache
-    matching alive (round-14 gate A/B measured the cost of losing
-    them)."""
+    nothing from the repo. Deliberately DETERMINISTIC: its consumers
+    show no duplicated evaluation (one banding per side in the
+    incremental join, InMemoryRelation on the cached paths) and
+    determinism keeps AQE exchange reuse and cache matching alive."""
     from pyspark.sql.functions import pandas_udf
 
     P = _HASH_PRIME
@@ -323,101 +310,42 @@ def poly_minhash_slots_pandas(sh_col, coefs: list[tuple[int, int]]):
     @pandas_udf("array<long>")
     def _slots(s):
         import numpy as _np
+        import pandas as _pd
 
-        A = _np.asarray([a for a, _ in coefs], dtype=_np.int64)
-        B = _np.asarray([b for _, b in coefs], dtype=_np.int64)
         k = len(coefs)
-        empty = [None] * k
-
-        def one(sh):
-            if sh is None:
-                return empty
-            toks = [t for t in sh if t is not None]
-            if not toks:
-                return empty
-            lens = _np.asarray([len(t) for t in toks], dtype=_np.int64)
-            width = int(lens.max())
+        ex = s.reset_index(drop=True).explode()
+        ex = ex[ex.notna()]
+        toks = ex.tolist()
+        slots = _np.zeros((len(s), k), dtype=_np.int64)
+        has = _np.zeros(len(s), dtype=bool)
+        if toks:
+            doc = ex.index.to_numpy(dtype=_np.int64)
+            lens = _np.fromiter(map(len, toks), dtype=_np.int64, count=len(toks))
+            # explicitly little-endian on both sides: a native-endian
+            # view would byteswap codepoints on a big-endian host
+            cps = _np.frombuffer(
+                "".join(toks).encode("utf-32-le"), dtype="<u4"
+            ).astype(_np.int64)
+            order = _np.argsort(-lens, kind="stable")
+            live_len, start = lens[order], (_np.cumsum(lens) - lens)[order]
             H = _np.zeros(len(toks), dtype=_np.int64)
-            if width > 0:
-                # fixed-width UCS4 view: one (n, width) codepoint matrix,
-                # zero-padded; true lengths mask the padding out of the fold.
-                # The view dtype is explicitly little-endian to match the
-                # '<U' byte order — a native-endian view would silently
-                # byteswap codepoints on a big-endian host (r14 ADVICE)
-                arr = _np.array(toks, dtype=f"<U{width}")
-                cps = (
-                    arr.view(_np.dtype("<u4"))
-                    .reshape(len(toks), width)
-                    .astype(_np.int64)
-                )
-                for j in range(width):
-                    live = lens > j
-                    H[live] = (H[live] * 31 + cps[live, j]) % P
-            return [int(v) for v in ((H[:, None] * A + B) % P).min(axis=0)]
-
-        return s.map(one)
+            for j in range(int(live_len[0])):
+                # tokens longer than j: a prefix of the longest-first order
+                m = int(_np.searchsorted(-live_len, -j, side="left"))
+                H[:m] = (H[:m] * 31 + cps[start[:m] + j]) % P
+            h = _np.empty_like(H)
+            h[order] = H
+            first = _np.flatnonzero(_np.r_[True, doc[1:] != doc[:-1]])
+            rows = doc[first]
+            for i, (a, b) in enumerate(coefs):
+                slots[rows, i] = _np.minimum.reduceat((h * a + b) % P, first)
+            has[rows] = True
+        empty = [None] * k
+        return _pd.Series(
+            [v if ok else empty for v, ok in zip(slots.tolist(), has)]
+        )
 
     return _slots(sh_col)
-
-
-def minhash_slots_pandas(hs_col, coefs: list[tuple[int, int]]):
-    """All k affine minhash slots in one Arrow batch, BIT-IDENTICAL to
-    the ``array_min(transform(__hs, h -> (h*a+b) % P))`` expression
-    stack — pure 64-bit integer math (h, a < 2^31 so h*a+b < 2^63; the
-    same nonnegative ``%`` in numpy and the JVM), so unlike the float
-    twins there is no rounding question at all. Exists because Catalyst
-    evaluates the k=32 per-slot folds interpreted: 32 passes over every
-    document's shingle array per row dominated minhash_signature's wall
-    (round-9 Arrow-twin triage; adopted on the non-portable path only —
-    the poly path stays expression-based for the SQL oracle, which is
-    what keeps signatures auditable in plain SQL).
-
-    Edge policy mirrors the expression exactly: NULL hash array → k
-    NULL slots (transform propagates NULL per slot, F.array keeps the
-    row); empty array → k NULLs (array_min of empty is NULL); NULL
-    ELEMENTS are skipped per slot the way array_min skips them. The
-    closure captures only the (a, b) ints — executors import nothing
-    from the repo."""
-    from pyspark.sql.functions import pandas_udf
-
-    P = _HASH_PRIME
-
-    @pandas_udf("array<long>")
-    def _slots(s):
-        import numpy as _np
-
-        A = _np.asarray([a for a, _ in coefs], dtype=_np.int64)
-        B = _np.asarray([b for _, b in coefs], dtype=_np.int64)
-        k = len(coefs)
-        empty = [None] * k
-
-        def one(hs):
-            if hs is None:
-                return empty
-            # Arrow presents a null ELEMENT of an array<long> as NaN in a
-            # float array, which `is not None` does not catch — the
-            # h == h test drops both (NaN != NaN), matching array_min's
-            # null-skip exactly
-            H = _np.asarray(
-                [h for h in hs if h is not None and h == h],
-                dtype=_np.int64,
-            )
-            if H.size == 0:
-                return empty
-            # (m, k) affine grid, one vectorized pass per row — the
-            # per-slot interpreted fold this replaces walked the m
-            # shingles k times through Catalyst's interpreter
-            return [int(v) for v in ((H[:, None] * A + B) % P).min(axis=0)]
-
-        return s.map(one)
-
-    # Deliberately DETERMINISTIC: no consumer plan shows the §4.4
-    # duplication for this twin (the cached paths are shielded by the
-    # InMemoryRelation, the streaming gate persists its banding per
-    # micro-batch), and a non-deterministic marking would break semantic
-    # plan equality — disabling AQE exchange reuse and cache matching
-    # everywhere the slots appear (round-14 A/B on the gate replay).
-    return _slots(hs_col)
 
 
 def _banded_minhash(
@@ -428,9 +356,7 @@ def _banded_minhash(
     bands: int,
     n: int,
     seed: int,
-    portable: bool,
     cache: bool = True,
-    arrow: bool | None = None,
 ) -> DataFrame:
     """(id, signature, band_id, band_hash) — one row per (doc, band).
     Shared by the in-corpus self-join and the incremental corpus↔batch
@@ -440,10 +366,7 @@ def _banded_minhash(
     persists per micro-batch and must be able to unpersist — the
     internal entry has no handle to release)."""
     rows_per_band = num_hashes // bands
-    sig = minhash_signature(
-        df, id_col, text_col, num_hashes, n, seed, portable=portable,
-        arrow=arrow,
-    )
+    sig = minhash_signature(df, id_col, text_col, num_hashes, n, seed)
     if cache:
         sig = sig.cache()
 
@@ -454,18 +377,12 @@ def _banded_minhash(
     # JIT-warmup penalty on the huge generated method. The interpreted
     # per-(doc, band) fold is 8 four-element folds per document — not a
     # per-collision cost — and stays the oracle-replayable shape.
-    if portable:
-        def band_key(b):
-            return F.aggregate(
-                F.slice(F.col("signature"), b * rows_per_band + 1, rows_per_band),
-                F.lit(0).cast("long"),
-                lambda acc, v: (acc * 1000003 + v) % _HASH_PRIME,
-            )
-    else:
-        def band_key(b):
-            return F.xxhash64(
-                F.slice(F.col("signature"), b * rows_per_band + 1, rows_per_band)
-            )
+    def band_key(b):
+        return F.aggregate(
+            F.slice(F.col("signature"), b * rows_per_band + 1, rows_per_band),
+            F.lit(0).cast("long"),
+            lambda acc, v: (acc * 1000003 + v) % _HASH_PRIME,
+        )
 
     return sig.select(
         F.col(id_col),
@@ -492,7 +409,6 @@ def incremental_near_duplicates(
     n: int = 3,
     threshold: float = 0.5,
     seed: int = 42,
-    portable: bool = False,
 ) -> DataFrame:
     """Near-dups of a NEW batch against an EXISTING corpus — the daily-
     ingest dedup: which incoming documents duplicate something already
@@ -505,15 +421,10 @@ def incremental_near_duplicates(
     (the corpus side contributes signatures once; at steady state those
     are precomputed and stored, making each ingest incremental in the
     batch size). est_jaccard is the fraction of matching signature slots
-    (an exact rational k/num_hashes — engine-portable under the portable
-    hash family).
+    (an exact rational k/num_hashes — engine-portable).
     """
-    bb = _banded_minhash(
-        batch, id_col, text_col, num_hashes, bands, n, seed, portable
-    )
-    bc = _banded_minhash(
-        corpus, id_col, text_col, num_hashes, bands, n, seed, portable
-    )
+    bb = _banded_minhash(batch, id_col, text_col, num_hashes, bands, n, seed)
+    bc = _banded_minhash(corpus, id_col, text_col, num_hashes, bands, n, seed)
     return banded_pairs_cross(bb, bc, id_col, num_hashes, threshold)
 
 
@@ -568,7 +479,6 @@ def minhash_near_duplicates(
     n: int = 3,
     threshold: float = 0.5,
     seed: int = 42,
-    portable: bool = False,
 ) -> DataFrame:
     """Candidate near-dup pairs via LSH banding, scored by signature overlap.
 
@@ -577,14 +487,12 @@ def minhash_near_duplicates(
     (band_id, band_hash) — hash-partitioned, never all-pairs. Estimated
     Jaccard = fraction of matching minhashes, filtered at ``threshold``.
 
-    ``portable=True`` uses the SQL-reproducible polynomial hashes for
-    both the shingles and the band keys (oracle path); band-key false
+    Shingles and band keys use the SQL-reproducible polynomial hashes
+    (the DuckDB oracles replay the whole pipeline); band-key false
     collisions only add candidates, which the signature-overlap filter
     then rejects identically in both engines.
     """
-    banded = _banded_minhash(
-        df, id_col, text_col, num_hashes, bands, n, seed, portable
-    )
+    banded = _banded_minhash(df, id_col, text_col, num_hashes, bands, n, seed)
 
     left = banded.alias("a")
     right = banded.alias("b")
@@ -628,7 +536,6 @@ def minhash_calibration(
     bands: int = 8,
     n: int = 1,
     seed: int = 42,
-    portable: bool = False,
 ) -> DataFrame:
     """Estimator-quality audit: banded MinHash estimates vs EXACT Jaccard.
 
@@ -667,7 +574,7 @@ def minhash_calibration(
     df = df.filter(F.size(_tokens(F.col(text_col))) > 0)
     pairs = minhash_near_duplicates(
         df, id_col, text_col, num_hashes, bands, n,
-        threshold=0.0, seed=seed, portable=portable,
+        threshold=0.0, seed=seed,
     )
     toksets = df.select(
         F.col(id_col).alias("__id"),
@@ -1005,7 +912,6 @@ def minhash_precision_recall(
     n: int = 1,
     threshold: float = 0.5,
     seed: int = 42,
-    portable: bool = False,
     max_token_docs: int | None = None,
     sample_fraction: float | None = None,
 ) -> DataFrame:
@@ -1080,7 +986,7 @@ def minhash_precision_recall(
             max_token_docs = max(1, int(max_token_docs * sample_fraction))
     lsh = minhash_near_duplicates(
         df, id_col, text_col, num_hashes, bands, n,
-        threshold=threshold, seed=seed, portable=portable,
+        threshold=threshold, seed=seed,
     ).select("id_a", "id_b", F.lit(1).alias("__l"))
     exact = token_jaccard_pairs(
         df, id_col, text_col, threshold=threshold,

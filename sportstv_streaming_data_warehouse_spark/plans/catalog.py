@@ -1408,10 +1408,109 @@ def x_dedup_canonical(spark, sf_dir):
     )
 
 
-@query("x_dedup_minhash_lsh")  # no SQL oracle: hash-family specific (rows-only check)
+# MinHash oracle prologue: the same affine family, polynomial shingle
+# hash, and band keys as operators/dedup's minhash pipeline, regenerated
+# as plain SQL so the full MinHash+LSH pipeline — signature, banding,
+# candidate join, overlap estimate — is verified end-to-end by DuckDB.
+# Shared VERBATIM by every MinHash oracle (the _IVF_PIPELINE_CTES
+# precedent: one prologue, so the oracle-verified entries cannot
+# silently diverge on what "the MinHash pipeline" is).
+_MH_P = D._HASH_PRIME
+_MH_K, _MH_BANDS, _MH_SEED, _MH_TAU = 32, 8, 42, 0.6
+_MH_RPB = _MH_K // _MH_BANDS
+# the degenerate-doc screen of the audits and the gate: documents with
+# no whitespace token never reach their signatures
+_MH_NONEMPTY = "len(tk) > 0"
+
+
+def _minhash_ctes(n: int, where: str = "TRUE") -> str:
+    """tk / toks / th / sig / banded CTEs over ``documents`` (docs kept
+    by ``where``, a predicate on ``doc`` and the token list ``tk``).
+    ``toks`` replicates ``word_shingles(text, n)``: the distinct n-word
+    windows, or ONE whole-text shingle for a document with fewer than
+    n tokens ('' for none, which hashes to 0); ``banded`` carries the
+    k slots ``m{i}`` and the band keys ``bh{b}``."""
+    coefs = D.minhash_coefficients(_MH_K, _MH_SEED)
+    slots = ",\n             ".join(
+        f"MIN((h * {a} + {b}) % {_MH_P}) AS m{i}"
+        for i, (a, b) in enumerate(coefs)
+    )
+
+    def band_key(k: int) -> str:
+        acc = "CAST(0 AS BIGINT)"
+        for i in range(k * _MH_RPB, (k + 1) * _MH_RPB):
+            acc = f"(({acc}) * 1000003 + m{i}) % {_MH_P}"
+        return f"{acc} AS bh{k}"
+
+    bands = ",\n             ".join(band_key(k) for k in range(_MH_BANDS))
+    return rf"""tk AS (
+      SELECT * FROM (
+        SELECT doc_id AS doc,
+               list_filter(regexp_split_to_array(COALESCE(text, ''), '\s+'), t -> t != '') AS tk
+        FROM documents
+      ) WHERE {where}
+    ),
+    toks AS (
+      SELECT DISTINCT doc, tok
+      FROM tk, UNNEST(CASE WHEN len(tk) >= {n}
+        THEN list_transform(range(1, len(tk) - {n} + 2),
+                            i -> array_to_string(tk[i:i + {n - 1}], ' '))
+        ELSE [array_to_string(tk, ' ')] END) AS u(tok)
+    ),
+    th AS (
+      SELECT doc,
+             list_reduce(list_prepend(CAST(0 AS BIGINT),
+               list_transform(string_split(tok, ''),
+                              ch -> CAST(COALESCE(ascii(ch), 0) AS BIGINT))),
+               (a, b) -> (a * 31 + b) % {_MH_P}) AS h
+      FROM toks
+    ),
+    sig AS (
+      SELECT doc,
+             {slots}
+      FROM th GROUP BY doc
+    ),
+    banded AS (
+      SELECT *,
+             {bands}
+      FROM sig
+    )"""
+
+
+def _mh_agree(x: str, y: str) -> str:
+    """Number of agreeing signature slots of banded rows x and y."""
+    return "(" + " + ".join(
+        f"(CASE WHEN {x}.m{i} = {y}.m{i} THEN 1 ELSE 0 END)"
+        for i in range(_MH_K)
+    ) + ")"
+
+
+def _mh_any_band(x: str, y: str) -> str:
+    return "(" + " OR ".join(
+        f"{x}.bh{k} = {y}.bh{k}" for k in range(_MH_BANDS)
+    ) + ")"
+
+
+def _mh_est(x: str, y: str) -> str:
+    return f"{_mh_agree(x, y)} / {float(_MH_K)}"
+
+
+def _minhash_pairs_oracle(n: int, tau: float) -> str:
+    """minhash_near_duplicates at shingle width ``n`` and threshold ``tau``."""
+    return f"""
+    WITH {_minhash_ctes(n)}
+    SELECT a.doc AS id_a, b.doc AS id_b, {_mh_est("a", "b")} AS est_jaccard
+    FROM banded a JOIN banded b
+      ON a.doc < b.doc AND {_mh_any_band("a", "b")}
+    WHERE {_mh_est("a", "b")} >= {tau}
+    """
+
+
+@query("x_dedup_minhash_lsh", oracle=_minhash_pairs_oracle(3, 0.4))
 def x_dedup_minhash_lsh(spark, sf_dir):
-    # MinHash+LSH near-dup candidates (shingle→minhash→band→bucket-join).
-    # Verified in tests against exact Jaccard instead of a SQL oracle.
+    # MinHash+LSH near-dup candidates (shingle→minhash→band→bucket-join)
+    # at the default word-trigram shingles; the oracle replays the whole
+    # pipeline, trigram windows included.
     docs = load_table(spark, sf_dir, "documents")
     return D.minhash_near_duplicates(
         docs, "doc_id", "text", num_hashes=32, bands=8, n=3, threshold=0.4
@@ -2668,116 +2767,18 @@ def x_decontamination(spark, sf_dir):
     )
 
 
-# Portable-MinHash oracle generator: the same affine family, polynomial
-# shingle hash, and band keys as minhash_near_duplicates(portable=True),
-# regenerated as plain SQL so the full MinHash+LSH pipeline — signature,
-# banding, candidate join, overlap estimate — is verified end-to-end by
-# DuckDB (the xxhash64 production path stays rows-only + recall-tested;
-# the two paths share every line except the shingle hash).
-_MH_P = 2147483647
-_MH_K, _MH_BANDS, _MH_SEED, _MH_TAU = 32, 8, 42, 0.6
-_MH_RPB = _MH_K // _MH_BANDS
-
-
-def _minhash_poly_oracle() -> str:
-    coefs = D.minhash_coefficients(_MH_K, _MH_SEED)
-    slots = ",\n             ".join(
-        f"MIN((h * {a} + {b}) % {_MH_P}) AS m{i}"
-        for i, (a, b) in enumerate(coefs)
-    )
-
-    def band_key(k: int) -> str:
-        acc = "CAST(0 AS BIGINT)"
-        for i in range(k * _MH_RPB, (k + 1) * _MH_RPB):
-            acc = f"(({acc}) * 1000003 + m{i}) % {_MH_P}"
-        return f"{acc} AS bh{k}"
-
-    bands = ",\n             ".join(band_key(k) for k in range(_MH_BANDS))
-    est = " + ".join(
-        f"(CASE WHEN a.m{i} = b.m{i} THEN 1 ELSE 0 END)" for i in range(_MH_K)
-    )
-    any_band = " OR ".join(f"a.bh{k} = b.bh{k}" for k in range(_MH_BANDS))
-    return rf"""
-    WITH toks AS (
-      SELECT DISTINCT doc_id AS doc, tok
-      FROM documents, UNNEST(list_filter(regexp_split_to_array(text, '\s+'), t -> t != '')) AS u(tok)
-    ),
-    th AS (
-      SELECT doc,
-             list_reduce(list_prepend(CAST(0 AS BIGINT),
-               list_transform(string_split(tok, ''),
-                              ch -> CAST(COALESCE(ascii(ch), 0) AS BIGINT))),
-               (a, b) -> (a * 31 + b) % {_MH_P}) AS h
-      FROM toks
-    ),
-    sig AS (
-      SELECT doc,
-             {slots}
-      FROM th GROUP BY doc
-    ),
-    banded AS (
-      SELECT *,
-             {bands}
-      FROM sig
-    )
-    SELECT a.doc AS id_a, b.doc AS id_b,
-           ({est}) / 32.0 AS est_jaccard
-    FROM banded a JOIN banded b
-      ON a.doc < b.doc AND ({any_band})
-    WHERE ({est}) / 32.0 >= {_MH_TAU}
-    """
-
-
 def _minhash_incremental_oracle() -> str:
-    coefs = D.minhash_coefficients(_MH_K, _MH_SEED)
-    slots = ",\n             ".join(
-        f"MIN((h * {a} + {b}) % {_MH_P}) AS m{i}"
-        for i, (a, b) in enumerate(coefs)
-    )
-
-    def band_key(k: int) -> str:
-        acc = "CAST(0 AS BIGINT)"
-        for i in range(k * _MH_RPB, (k + 1) * _MH_RPB):
-            acc = f"(({acc}) * 1000003 + m{i}) % {_MH_P}"
-        return f"{acc} AS bh{k}"
-
-    bands = ",\n             ".join(band_key(k) for k in range(_MH_BANDS))
-    est = " + ".join(
-        f"(CASE WHEN bb.m{i} = cc.m{i} THEN 1 ELSE 0 END)" for i in range(_MH_K)
-    )
-    any_band = " OR ".join(f"bb.bh{k} = cc.bh{k}" for k in range(_MH_BANDS))
-    return rf"""
-    WITH toks AS (
-      SELECT DISTINCT doc_id AS doc, tok
-      FROM documents, UNNEST(list_filter(regexp_split_to_array(text, '\s+'), t -> t != '')) AS u(tok)
-    ),
-    th AS (
-      SELECT doc,
-             list_reduce(list_prepend(CAST(0 AS BIGINT),
-               list_transform(string_split(tok, ''),
-                              ch -> CAST(COALESCE(ascii(ch), 0) AS BIGINT))),
-               (a, b) -> (a * 31 + b) % {_MH_P}) AS h
-      FROM toks
-    ),
-    sig AS (
-      SELECT doc,
-             {slots}
-      FROM th GROUP BY doc
-    ),
-    banded AS (
-      SELECT *,
-             {bands}
-      FROM sig
-    ),
+    return f"""
+    WITH {_minhash_ctes(1)},
     split AS (SELECT doc_id, {_FP} % 10 AS sb FROM documents),
     pairs AS (
       SELECT bb.doc AS batch_id, cc.doc AS corpus_id,
-             ({est}) / 32.0 AS est_jaccard
+             {_mh_est("bb", "cc")} AS est_jaccard
       FROM banded bb
       JOIN split pb ON pb.doc_id = bb.doc AND pb.sb = 9
-      JOIN banded cc ON ({any_band})
+      JOIN banded cc ON {_mh_any_band("bb", "cc")}
       JOIN split pc ON pc.doc_id = cc.doc AND pc.sb != 9
-      WHERE ({est}) / 32.0 >= {_MH_TAU}
+      WHERE {_mh_est("bb", "cc")} >= {_MH_TAU}
     )
     SELECT batch_id, corpus_id, est_jaccard, n_corpus_dups
     FROM (
@@ -2800,7 +2801,7 @@ def x_dedup_incremental(spark, sf_dir):
     # incremental_near_duplicates) — no within-side pairs, so steady-
     # state ingest work scales with the batch, not the corpus. The
     # oracle replays signatures, banding, the cross-side join, and the
-    # per-batch-doc argmax in SQL on the portable hash family.
+    # per-batch-doc argmax in SQL.
     docs = load_table(spark, sf_dir, "documents")
     tagged = docs.withColumn("__sb", T.fingerprint(F.col("text")) % 10)
     corpus = tagged.filter(F.col("__sb") != 9)
@@ -2808,7 +2809,7 @@ def x_dedup_incremental(spark, sf_dir):
     pairs = D.incremental_near_duplicates(
         corpus, batch, "doc_id", "text",
         num_hashes=_MH_K, bands=_MH_BANDS, n=1,
-        threshold=_MH_TAU, seed=_MH_SEED, portable=True,
+        threshold=_MH_TAU, seed=_MH_SEED,
     )
     # per-batch-doc best match as ONE TRUE hash-agg, replacing the
     # former count-window + row_number-window pair (two sort passes
@@ -2855,20 +2856,19 @@ def x_dedup_incremental(spark, sf_dir):
     )
 
 
-@query("x_dedup_minhash_poly", oracle=_minhash_poly_oracle())
+@query("x_dedup_minhash_poly", oracle=_minhash_pairs_oracle(1, _MH_TAU))
 def x_dedup_minhash_poly(spark, sf_dir):
-    # The MinHash+LSH pipeline on the PORTABLE hash family: DuckDB
-    # regenerates signatures, band keys, candidates, and the overlap
-    # estimate from the same integer recurrences, so the whole
-    # shingle→minhash→band→bucket-join→estimate pipeline hash-matches —
-    # upgrading the family from rows-only to oracle-verified. Unigram
-    # shingles keep the oracle readable; the xxhash64 production twin
-    # (x_dedup_minhash_lsh) differs only in the shingle hash.
+    # The MinHash+LSH pipeline at unigram shingles and tau 0.6 (the
+    # audits' operating point): DuckDB regenerates signatures, band
+    # keys, candidates, and the overlap estimate from the same integer
+    # recurrences, so the whole shingle→minhash→band→bucket-join→
+    # estimate pipeline hash-matches; x_dedup_minhash_lsh is the same
+    # pipeline at trigram shingles and tau 0.4.
     docs = load_table(spark, sf_dir, "documents")
     return D.minhash_near_duplicates(
         docs, "doc_id", "text",
         num_hashes=_MH_K, bands=_MH_BANDS, n=1,
-        threshold=_MH_TAU, seed=_MH_SEED, portable=True,
+        threshold=_MH_TAU, seed=_MH_SEED,
     )
 
 
@@ -2881,50 +2881,12 @@ def _minhash_calibration_oracle() -> str:
     driver's value hash), the micro average is one float division of
     exact integer sums (never AVG over doubles — accumulation order
     differs between engines), and est k/K is an exact dyadic."""
-    coefs = D.minhash_coefficients(_MH_K, _MH_SEED)
-    slots = ",\n             ".join(
-        f"MIN((h * {a} + {b}) % {_MH_P}) AS m{i}"
-        for i, (a, b) in enumerate(coefs)
-    )
-
-    def band_key(k: int) -> str:
-        acc = "CAST(0 AS BIGINT)"
-        for i in range(k * _MH_RPB, (k + 1) * _MH_RPB):
-            acc = f"(({acc}) * 1000003 + m{i}) % {_MH_P}"
-        return f"{acc} AS bh{k}"
-
-    bands = ",\n             ".join(band_key(k) for k in range(_MH_BANDS))
-    est = " + ".join(
-        f"(CASE WHEN a.m{i} = b.m{i} THEN 1 ELSE 0 END)" for i in range(_MH_K)
-    )
-    any_band = " OR ".join(f"a.bh{k} = b.bh{k}" for k in range(_MH_BANDS))
     return rf"""
-    WITH toks AS (
-      SELECT DISTINCT doc_id AS doc, tok
-      FROM documents, UNNEST(list_filter(regexp_split_to_array(text, '\s+'), t -> t != '')) AS u(tok)
-    ),
-    th AS (
-      SELECT doc,
-             list_reduce(list_prepend(CAST(0 AS BIGINT),
-               list_transform(string_split(tok, ''),
-                              ch -> CAST(COALESCE(ascii(ch), 0) AS BIGINT))),
-               (a, b) -> (a * 31 + b) % {_MH_P}) AS h
-      FROM toks
-    ),
-    sig AS (
-      SELECT doc,
-             {slots}
-      FROM th GROUP BY doc
-    ),
-    banded AS (
-      SELECT *,
-             {bands}
-      FROM sig
-    ),
+    WITH {_minhash_ctes(1, _MH_NONEMPTY)},
     cand AS (
-      SELECT a.doc AS id_a, b.doc AS id_b, ({est}) AS k_agree
+      SELECT a.doc AS id_a, b.doc AS id_b, {_mh_agree("a", "b")} AS k_agree
       FROM banded a JOIN banded b
-        ON a.doc < b.doc AND ({any_band})
+        ON a.doc < b.doc AND {_mh_any_band("a", "b")}
     ),
     sizes AS (
       SELECT doc, COUNT(*) AS nt FROM toks GROUP BY doc
@@ -2981,58 +2943,20 @@ def _minhash_pr_oracle(sample_fraction: float | None = None) -> str:
     if sample_fraction is not None:
         cut = int(sample_fraction * 2147483647)
         sample_pred = (
-            f" WHERE (((doc_id % 2147483647) * {D._SAMPLE_MULT}"
-            f" + {D._SAMPLE_INC}) % 2147483647 * (doc_id % 2147483647)"
+            f" AND (((doc % 2147483647) * {D._SAMPLE_MULT}"
+            f" + {D._SAMPLE_INC}) % 2147483647 * (doc % 2147483647)"
             f" + {D._SAMPLE_INC2}) % 2147483647 < {cut}"
         )
         # the operator scales the cap with the sample (same effective
         # stopword filter as the full audit) — mirror it
         cap = max(1, int(_MH_PR_CAP * sample_fraction))
-    coefs = D.minhash_coefficients(_MH_K, _MH_SEED)
-    slots = ",\n             ".join(
-        f"MIN((h * {a} + {b}) % {_MH_P}) AS m{i}"
-        for i, (a, b) in enumerate(coefs)
-    )
-
-    def band_key(k: int) -> str:
-        acc = "CAST(0 AS BIGINT)"
-        for i in range(k * _MH_RPB, (k + 1) * _MH_RPB):
-            acc = f"(({acc}) * 1000003 + m{i}) % {_MH_P}"
-        return f"{acc} AS bh{k}"
-
-    bands = ",\n             ".join(band_key(k) for k in range(_MH_BANDS))
-    est = " + ".join(
-        f"(CASE WHEN a.m{i} = b.m{i} THEN 1 ELSE 0 END)" for i in range(_MH_K)
-    )
-    any_band = " OR ".join(f"a.bh{k} = b.bh{k}" for k in range(_MH_BANDS))
     return rf"""
-    WITH toks AS (
-      SELECT DISTINCT doc_id AS doc, tok
-      FROM documents, UNNEST(list_filter(regexp_split_to_array(text, '\s+'), t -> t != '')) AS u(tok){sample_pred}
-    ),
-    th AS (
-      SELECT doc,
-             list_reduce(list_prepend(CAST(0 AS BIGINT),
-               list_transform(string_split(tok, ''),
-                              ch -> CAST(COALESCE(ascii(ch), 0) AS BIGINT))),
-               (a, b) -> (a * 31 + b) % {_MH_P}) AS h
-      FROM toks
-    ),
-    sig AS (
-      SELECT doc,
-             {slots}
-      FROM th GROUP BY doc
-    ),
-    banded AS (
-      SELECT *,
-             {bands}
-      FROM sig
-    ),
+    WITH {_minhash_ctes(1, _MH_NONEMPTY + sample_pred)},
     lsh AS (
       SELECT a.doc AS id_a, b.doc AS id_b
       FROM banded a JOIN banded b
-        ON a.doc < b.doc AND ({any_band})
-      WHERE ({est}) / {float(_MH_K)} >= {_MH_TAU}
+        ON a.doc < b.doc AND {_mh_any_band("a", "b")}
+      WHERE {_mh_est("a", "b")} >= {_MH_TAU}
     ),
     -- frequent-token cap on the EXACT side (mirrors
     -- token_jaccard_pairs' max_token_docs window filter; inactive at
@@ -3078,13 +3002,12 @@ def x_minhash_precision_recall(spark, sf_dir):
     # recall is the first metric to move when the banding curve stops
     # fitting the corpus. Complements x_minhash_calibration (estimator
     # bias) with the operational hit-rate view; the pytest recall bound
-    # on the xxhash64 path becomes a driver-gate-verified number here.
+    # becomes a driver-gate-verified number here.
     docs = load_table(spark, sf_dir, "documents")
     return D.minhash_precision_recall(
         docs, "doc_id", "text",
         num_hashes=_MH_K, bands=_MH_BANDS, n=1,
-        threshold=_MH_TAU, seed=_MH_SEED, portable=True,
-        max_token_docs=_MH_PR_CAP,
+        threshold=_MH_TAU, seed=_MH_SEED, max_token_docs=_MH_PR_CAP,
     )
 
 
@@ -3110,8 +3033,7 @@ def x_minhash_pr_sampled(spark, sf_dir):
     return D.minhash_precision_recall(
         docs, "doc_id", "text",
         num_hashes=_MH_K, bands=_MH_BANDS, n=1,
-        threshold=_MH_TAU, seed=_MH_SEED, portable=True,
-        max_token_docs=_MH_PR_CAP,
+        threshold=_MH_TAU, seed=_MH_SEED, max_token_docs=_MH_PR_CAP,
         sample_fraction=_MH_PR_SAMPLE,
     )
 
@@ -3130,8 +3052,7 @@ def x_minhash_calibration(spark, sf_dir):
     docs = load_table(spark, sf_dir, "documents")
     return D.minhash_calibration(
         docs, "doc_id", "text",
-        num_hashes=_MH_K, bands=_MH_BANDS, n=1,
-        seed=_MH_SEED, portable=True,
+        num_hashes=_MH_K, bands=_MH_BANDS, n=1, seed=_MH_SEED,
     )
 
 
@@ -8200,44 +8121,22 @@ def _near_dup_gate_oracle(grain: str = "admitted") -> str:
     ingest_batch) — staged in tests/test_stream_near_dup.py as the
     round-13 registration candidate (the round-11/12 staging pattern:
     oracle pinned in pytest first, window-slotted at rotation)."""
-    coefs = D.minhash_coefficients(_MH_K, _MH_SEED)
-    slots = ",\n             ".join(
-        f"MIN((h * {a} + {b}) % {_MH_P}) AS m{i}"
-        for i, (a, b) in enumerate(coefs)
-    )
-
-    def band_key(k: int) -> str:
-        acc = "CAST(0 AS BIGINT)"
-        for i in range(k * _MH_RPB, (k + 1) * _MH_RPB):
-            acc = f"(({acc}) * 1000003 + m{i}) % {_MH_P}"
-        return f"{acc} AS bh{k}"
-
-    bands = ",\n             ".join(band_key(k) for k in range(_MH_BANDS))
-
-    def est(x: str, y: str) -> str:
-        return " + ".join(
-            f"(CASE WHEN {x}.m{i} = {y}.m{i} THEN 1 ELSE 0 END)"
-            for i in range(_MH_K)
-        )
 
     def match(x: str, y: str) -> str:
-        any_band = " OR ".join(
-            f"{x}.bh{k} = {y}.bh{k}" for k in range(_MH_BANDS)
-        )
-        return f"({any_band}) AND ({est(x, y)}) / 32.0 >= {_MH_TAU}"
+        return f"{_mh_any_band(x, y)} AND {_mh_est(x, y)} >= {_MH_TAU}"
 
     if grain == "rejected":
         final = rf"""
     SELECT a.doc AS doc_id, p.doc AS matched_id,
-           ({est("a", "p")}) / 32.0 AS est_jaccard,
+           {_mh_est("a", "p")} AS est_jaccard,
            'batch' AS reason, CAST(0 AS INTEGER) AS ingest_batch
     FROM b0 a JOIN b0 p ON p.doc < a.doc AND {match("a", "p")}
     UNION ALL
-    SELECT a.doc, c.doc, ({est("a", "c")}) / 32.0, 'corpus',
+    SELECT a.doc, c.doc, {_mh_est("a", "c")}, 'corpus',
            CAST(1 AS INTEGER)
     FROM b1 a JOIN adm0b c ON {match("a", "c")}
     UNION ALL
-    SELECT a.doc, p.doc, ({est("a", "p")}) / 32.0, 'batch',
+    SELECT a.doc, p.doc, {_mh_est("a", "p")}, 'batch',
            CAST(1 AS INTEGER)
     FROM surv1 a JOIN surv1 p ON p.doc < a.doc AND {match("a", "p")}
     """
@@ -8249,28 +8148,7 @@ def _near_dup_gate_oracle(grain: str = "admitted") -> str:
     """
 
     return rf"""
-    WITH toks AS (
-      SELECT DISTINCT doc_id AS doc, tok
-      FROM documents, UNNEST(list_filter(regexp_split_to_array(text, '\s+'), t -> t != '')) AS u(tok)
-    ),
-    th AS (
-      SELECT doc,
-             list_reduce(list_prepend(CAST(0 AS BIGINT),
-               list_transform(string_split(tok, ''),
-                              ch -> CAST(COALESCE(ascii(ch), 0) AS BIGINT))),
-               (a, b) -> (a * 31 + b) % {_MH_P}) AS h
-      FROM toks
-    ),
-    sig AS (
-      SELECT doc,
-             {slots}
-      FROM th GROUP BY doc
-    ),
-    banded AS (
-      SELECT *,
-             {bands}
-      FROM sig
-    ),
+    WITH {_minhash_ctes(1, _MH_NONEMPTY)},
     split AS (SELECT doc_id, {_FP} % 10 AS sb FROM documents),
     b0 AS (SELECT bd.* FROM banded bd JOIN split s ON s.doc_id = bd.doc AND s.sb != 9),
     b1 AS (SELECT bd.* FROM banded bd JOIN split s ON s.doc_id = bd.doc AND s.sb = 9),
@@ -8307,7 +8185,8 @@ def s_near_dup_gate_grain(spark, sf_dir):
     # and the conservative smaller-id within-batch rule — in plain SQL
     # on the portable hash family (n=1 token shingles, tau 0.6, the
     # x_dedup_incremental operating point). Zero-token docs are
-    # excluded up front (they band to NULL and can never collide).
+    # excluded up front (they would all share the '' shingle's
+    # signature).
     from ..streaming.near_dup import replay_gate
 
     docs = load_table(spark, sf_dir, "documents").filter(
@@ -8326,22 +8205,11 @@ def s_near_dup_gate_grain(spark, sf_dir):
             b1.select("doc_id", "text", "ingest_batch"),
         ],
         num_hashes=_MH_K, bands=_MH_BANDS, n=1,
-        threshold=_MH_TAU, seed=_MH_SEED, portable=True,
+        threshold=_MH_TAU, seed=_MH_SEED,
         # these "batches" are corpus-scale splits, not micro-batches:
         # the gate's broadcast hints assume a small batch side, and b0
         # is 90% of the corpus — use the jumbo-replay escape hatch
         broadcast_batch=False,
-        # expression-path banding, fully lazy: the round-14 optimization
-        # pass measured THREE restructures against this shape (Arrow
-        # banding, banding+pair-table localCheckpoints, bands-only
-        # checkpoints) and the interleaved A/B kept this one — the
-        # single lazy plan lets AQE's runtime exchange reuse dedup every
-        # duplicated subtree (the 40 scans in the initial plan collapse
-        # at runtime), which beats both eager materialization (serial
-        # jobs, no overlap) and the Arrow banding (its non-deterministic
-        # UDF breaks semantic equality and thus reuse). Details in
-        # OPTIMIZATION_r14.md.
-        arrow=False,
     )
     return admitted.select("doc_id", "ingest_batch")
 
@@ -8368,9 +8236,7 @@ def s_near_dup_gate_rejected(spark, sf_dir):
     b1 = tagged.filter(F.col("__sb") == 9).select("doc_id", "text")
     kw = dict(
         num_hashes=_MH_K, bands=_MH_BANDS, n=1, threshold=_MH_TAU,
-        seed=_MH_SEED, portable=True, broadcast_batch=False,
-        arrow=False,  # lazy + exchange-reuse shape, same rationale as
-        # s_near_dup_gate_grain (round-14 A/B; OPTIMIZATION_r14.md)
+        seed=_MH_SEED, broadcast_batch=False,
     )
     _, bands0, rej0 = gate_batch(b0, None, **kw)
     _, _, rej1 = gate_batch(b1, bands0, **kw)
@@ -8657,13 +8523,16 @@ CORRECTNESS_WINDOW = [
     "u4_intersect_retained",
     "w1_peak_week",
     "w3_yoy_order_growth",
-    "w_active_streaks",
     # round-14 debuts displace the three bottom pre-pay picks
     # (w_daily_ohlc, w_event_funnel, w_event_transitions — all last
     # green r13, nowhere near stale)
     "x_compaction_bins",
     "p1_projected_scan",
     "o34_multi_col_reorder",
+    # x_dedup_minhash_lsh debuts with its oracle (one MinHash hash
+    # family), displacing the bottom pre-pay pick w_active_streaks
+    # (last green r15)
+    "x_dedup_minhash_lsh",
 ]
 
 # Machine-checkable ledger of driver verification: query -> rounds in which

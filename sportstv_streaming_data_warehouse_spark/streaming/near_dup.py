@@ -84,14 +84,12 @@ def gate_batch(
     n: int = 3,
     threshold: float = 0.5,
     seed: int = 42,
-    portable: bool = False,
     batch_bands: DataFrame | None = None,
     index_buckets: int | None = None,
     index_dir: str | None = None,
     broadcast_batch: bool = True,
     _persist_registry: list | None = None,
     materialize: bool = False,
-    arrow: bool | None = None,
 ) -> tuple[DataFrame, DataFrame, DataFrame]:
     """One gating step: returns (admitted, admitted_bands, rejected).
 
@@ -113,6 +111,9 @@ def gate_batch(
     ``index_buckets`` (the caller vouches — ``process`` passes the
     meta-resolved value), else the prune is SKIPPED entirely: a full
     index scan is correct, just unpruned — never a correctness trade.
+    With ``index_dir`` the meta's recorded banding parameters must also
+    equal this call's (``ValueError`` otherwise — see
+    ``_check_banding``).
     The batch side of the corpus join is broadcast unless
     ``broadcast_batch=False``.
     ``_persist_registry`` (internal): when a list is passed, the pair
@@ -155,28 +156,29 @@ def gate_batch(
         bb = batch_bands
     else:
         bb = _banded_minhash(
-            batch, id_col, text_col, num_hashes, bands, n, seed, portable,
-            cache=False, arrow=arrow,
+            batch, id_col, text_col, num_hashes, bands, n, seed, cache=False
         )
         if materialize:
             bb = bb.localCheckpoint()
     if index_bands is not None:
         idx = index_bands
-        if "band_bucket" in idx.columns:
-            if index_dir is not None:
-                meta = _read_meta_buckets(batch.sparkSession, index_dir)
-                if meta is not None:
-                    if (
-                        index_buckets is not None
-                        and int(index_buckets) != int(meta)
-                    ):
-                        raise ValueError(
-                            f"index_buckets={index_buckets} contradicts "
-                            f"the on-disk layout's _gate_meta.json "
-                            f"({meta}) at {index_dir} — pruning with it "
-                            "would drop true candidate partitions"
-                        )
-                    index_buckets = meta
+        meta = (
+            _read_meta(batch.sparkSession, index_dir)
+            if index_dir is not None
+            else None
+        )
+        if meta is not None:
+            _check_banding(meta, _banding(num_hashes, bands, n, seed), index_dir)
+            if "band_bucket" in idx.columns and "index_buckets" in meta:
+                on_disk = int(meta["index_buckets"])
+                if index_buckets is not None and int(index_buckets) != on_disk:
+                    raise ValueError(
+                        f"index_buckets={index_buckets} contradicts "
+                        f"the on-disk layout's _gate_meta.json "
+                        f"({on_disk}) at {index_dir} — pruning with it "
+                        "would drop true candidate partitions"
+                    )
+                index_buckets = on_disk
         if "band_bucket" in idx.columns and index_buckets is not None:
             if batch_bands is None:
                 # the occupied-buckets collect below would otherwise
@@ -304,7 +306,6 @@ def make_near_dup_gate(
     n: int = 3,
     threshold: float = 0.5,
     seed: int = 42,
-    portable: bool = False,
     index_buckets: int = INDEX_BUCKETS,
     broadcast_batch: bool = True,
 ) -> Callable[[DataFrame, int], None]:
@@ -323,34 +324,44 @@ def make_near_dup_gate(
       Spark cannot read a tree that mixes ``ingest_batch=N`` and
       ``ingest_batch=M/band_bucket=K`` partitions (it raises
       CONFLICTING_PARTITION_COLUMN_NAMES, wedging every later batch),
-      so the layout only upgrades atomically via ``compact_index``."""
+      so the layout only upgrades atomically via ``compact_index``;
+    - the BANDING parameters (``num_hashes``, ``bands``, ``n``, ``seed``
+      and the hash family) are recorded in the same meta on the first
+      write and every later batch must match them (``ValueError``
+      otherwise): band hashes from another parameter set never collide
+      with the stored ones, so a mismatched gate would silently
+      double-admit. A meta without them (written before they were
+      recorded, possibly by the retired xxhash64 family) raises too —
+      rebuild that index rather than guess how it was banded. A flat
+      pre-bucketing index predates the meta altogether; its first
+      gate write records the gate's own parameters."""
+    banding = _banding(num_hashes, bands, n, seed)
 
     def process(batch: DataFrame, batch_id: int) -> None:
-        from ..operators.dedup import _banded_minhash
-
         spark = batch.sparkSession
         index = _read_index(spark, index_dir, batch_id)
         legacy = index is not None and "band_bucket" not in index.columns
-        if legacy:
-            n_buckets = index_buckets  # unused: no prune, flat write
+        meta = _read_meta(spark, index_dir)
+        if meta is None:
+            meta = dict(banding)
+            if not legacy:
+                meta["index_buckets"] = int(index_buckets)
+            _write_meta(spark, index_dir, meta)
         else:
-            n_buckets = _read_meta_buckets(spark, index_dir)
-            if n_buckets is None:
-                n_buckets = index_buckets
-                _write_meta_buckets(spark, index_dir, n_buckets)
+            _check_banding(meta, banding, index_dir)
+        n_buckets = meta.get("index_buckets", index_buckets)
         batch = batch.persist()
         # persist the banded signatures ONCE: the index, admitted, and
         # rejected writes all hang off them, and without this each write
         # re-runs the MinHash banding from the raw batch (round-11 ADVICE)
         bb = _banded_minhash(
-            batch, id_col, text_col, num_hashes, bands, n, seed, portable,
-            cache=False,
+            batch, id_col, text_col, num_hashes, bands, n, seed, cache=False,
         ).persist()
         pair_cache: list[DataFrame] = []
         try:
             admitted, admitted_bands, rejected = gate_batch(
                 batch, index, id_col, text_col, num_hashes, bands, n,
-                threshold, seed, portable, batch_bands=bb,
+                threshold, seed, batch_bands=bb,
                 index_buckets=n_buckets, broadcast_batch=broadcast_batch,
                 _persist_registry=pair_cache,
             )
@@ -398,16 +409,48 @@ def make_near_dup_gate(
 COMPACT_BASE_BATCH = -1
 _COMPACT_STAGING_BATCH = -2
 
-#: sidecar recording the bucket modulus the on-disk band_bucket layout
-#: was written with. The prune MUST use the layout's modulus — a caller
+#: sidecar recording how the index was written: the bucket modulus of
+#: the on-disk band_bucket layout and the banding parameters of every
+#: stored band hash. The prune MUST use the layout's modulus — a caller
 #: passing a different index_buckets would silently drop true candidate
-#: partitions and double-admit (review finding) — so the meta, not the
-#: parameter, is the source of truth once an index exists. The leading
-#: underscore keeps it out of Spark's partition discovery.
+#: partitions and double-admit (review finding) — and a gate banding
+#: with other parameters would never collide with the stored hashes, so
+#: the meta, not the parameters, is the source of truth once an index
+#: exists. The leading underscore keeps it out of Spark's partition
+#: discovery.
 _GATE_META = "_gate_meta.json"
 
+#: the one MinHash hash family the gate bands with (polynomial shingle
+#: hash, affine slots and polynomial band key, all mod 2^31-1)
+_FAMILY = "poly-mod-2^31-1"
 
-def _read_meta_buckets(spark: SparkSession, index_dir: str) -> int | None:
+
+def _banding(num_hashes: int, bands: int, n: int, seed: int) -> dict:
+    return {
+        "num_hashes": int(num_hashes), "bands": int(bands), "n": int(n),
+        "seed": int(seed), "family": _FAMILY,
+    }
+
+
+def _check_banding(meta: dict, banding: dict, index_dir: str) -> None:
+    """Raise unless the index meta records exactly ``banding``."""
+    missing = sorted(set(banding) - set(meta))
+    if missing:
+        raise ValueError(
+            f"the index at {index_dir} records no {missing} in "
+            f"{_GATE_META}: it predates recorded banding parameters and "
+            "may hold another hash family's band hashes — rebuild it"
+        )
+    recorded = {k: meta[k] for k in banding}
+    if recorded != banding:
+        raise ValueError(
+            f"the index at {index_dir} was banded with {recorded}, not "
+            f"{banding}: its band hashes can never collide with this "
+            "gate's, so every duplicate would be admitted"
+        )
+
+
+def _read_meta(spark: SparkSession, index_dir: str) -> dict | None:
     import json as _json
 
     fs, p = _hadoop_path(spark, f"{index_dir}/{_GATE_META}")
@@ -418,22 +461,21 @@ def _read_meta_buckets(spark: SparkSession, index_dir: str) -> int | None:
         data = bytes(stream.readAllBytes())
     finally:
         stream.close()
-    return int(_json.loads(data.decode("utf-8"))["index_buckets"])
+    return _json.loads(data.decode("utf-8"))
 
 
-def _write_meta_buckets(
-    spark: SparkSession, index_dir: str, index_buckets: int
-) -> None:
+def _read_meta_buckets(spark: SparkSession, index_dir: str) -> int | None:
+    buckets = (_read_meta(spark, index_dir) or {}).get("index_buckets")
+    return None if buckets is None else int(buckets)
+
+
+def _write_meta(spark: SparkSession, index_dir: str, meta: dict) -> None:
     import json as _json
 
     fs, p = _hadoop_path(spark, f"{index_dir}/{_GATE_META}")
     out = fs.create(p, True)
     try:
-        out.write(
-            bytearray(
-                _json.dumps({"index_buckets": int(index_buckets)}).encode()
-            )
-        )
+        out.write(bytearray(_json.dumps(meta, sort_keys=True).encode()))
     finally:
         out.close()
 
@@ -502,13 +544,14 @@ def compact_index(
     mixed partition tree Spark refuses to read (review finding), so
     the fold raises instead of wedging the gate. The bucket modulus
     comes from ``_gate_meta.json`` when present and is recorded there
-    after a migration. Returns {folded_partitions, rows, files_before,
+    after a migration; the banding parameters the meta records are kept
+    as they are (compaction never re-bands). Returns {folded_partitions, rows, files_before,
     files_after}."""
     files_before = _count_index_files(spark, index_dir)
     idx = spark.read.option("basePath", index_dir).parquet(index_dir)
-    meta_buckets = _read_meta_buckets(spark, index_dir)
-    if meta_buckets is not None:
-        index_buckets = meta_buckets
+    meta = _read_meta(spark, index_dir) or {}
+    if "index_buckets" in meta:
+        index_buckets = int(meta["index_buckets"])
     all_ids = [
         r[0] for r in idx.select("ingest_batch").distinct().collect()
     ]
@@ -579,9 +622,12 @@ def compact_index(
     base = Path(f"{index_dir}/ingest_batch={COMPACT_BASE_BATCH}")
     if not fs.rename(staging, base):
         raise IOError(f"compact_index: rename {staging} -> {base} failed")
-    if meta_buckets is None:
-        # record the modulus the (possibly migrated) layout now uses
-        _write_meta_buckets(spark, index_dir, index_buckets)
+    if "index_buckets" not in meta:
+        # record the modulus the (possibly migrated) layout now uses,
+        # keeping whatever banding parameters the meta already records
+        _write_meta(
+            spark, index_dir, {**meta, "index_buckets": int(index_buckets)}
+        )
     return {
         "folded_partitions": len(fold_ids),
         "rows": rows,

@@ -164,7 +164,7 @@ def test_normalize_twin_edge_policy(spark):
 
 
 def test_minhash_slots_twin_matches_expression_slots(spark):
-    """The integer Arrow twin (round-9 adoption, 1.75x at 100x) must be
+    """The batch-vectorised Arrow signature kernel must be
     bit-identical to the array_min(transform(...)) expression stack on
     real text AND edge rows — pure 64-bit integer math, so unlike the
     float twins equality is exact by construction. Note the edge rows
@@ -209,34 +209,46 @@ def test_minhash_slots_twin_matches_expression_slots(spark):
 
 
 def test_minhash_slots_twin_null_elements_match_array_min_skip(spark):
-    """Direct pin of minhash_slots_pandas' element-null policy: Arrow
-    presents a null element of array<long> as NaN in a float array,
-    which an `is not None` filter does NOT catch — the round-9 review
-    found the twin crashed with 'cannot convert float NaN to integer'
-    instead of skipping the element the way array_min skips nulls."""
+    """Direct pin of poly_minhash_slots_pandas' edge policy with every
+    edge in ONE Arrow batch: the batch kernel's own failure modes are
+    cross-row — the per-token offsets into the flattened codepoint
+    buffer and the longest-first sort — so the edges must share a
+    batch to be exercised. A NULL array, an empty array and an
+    all-NULL-element array give k NULL slots; NULL elements are skipped
+    the way array_min skips them (an earlier twin crashed on one);
+    '' hashes to 0; a non-BMP character and an interior NUL are single
+    codepoints; one token far longer than the rest leaves its
+    neighbours' hashes alone."""
     from sportstv_streaming_data_warehouse_spark.operators.dedup import (
         _HASH_PRIME,
+        _poly_hash,
         minhash_coefficients,
-        minhash_slots_pandas,
+        poly_minhash_slots_pandas,
     )
 
     coefs = minhash_coefficients(4, 42)
     df = spark.createDataFrame(
         [
-            (1, [100, None, 300]),  # null element: skipped per slot
-            (2, [100, 300]),        # the equivalent dense array
-            (3, [None]),            # all-null: k NULL slots
-            (4, []),                # empty: k NULL slots
+            (1, ["ab", None, "cd"]),        # null element: skipped per slot
+            (2, ["ab", "cd"]),              # the equivalent dense array
+            (3, None),                      # NULL array: k NULL slots
+            (4, [None, None]),              # all-NULL elements: k NULL slots
+            (5, []),                        # empty: k NULL slots
+            (6, [""]),                      # '' hashes to 0
+            (7, ["emoji \U0001F600", "\U0001D11E"]),  # non-BMP codepoints
+            (8, ["nul\x00char", "x\x00"]),  # interior NUL is codepoint 0
+            (9, ["a", "z" * 5000 + "\U0001F600", "bc"]),  # one long token
+            (10, ["z" * 5000 + "\U0001F600"]),  # ... and its slots alone
         ],
-        "id long, hs array<long>",
-    )
+        "id long, sh array<string>",
+    ).coalesce(1)  # one partition: every row in the same Arrow batch
     expr = df.select(
         "id",
         F.array(
             *[
                 F.array_min(
                     F.transform(
-                        "hs",
+                        F.transform("sh", _poly_hash),
                         lambda h: (h * F.lit(a) + F.lit(b)) % F.lit(_HASH_PRIME),
                     )
                 )
@@ -244,25 +256,25 @@ def test_minhash_slots_twin_null_elements_match_array_min_skip(spark):
             ]
         ).alias("sig"),
     )
-    twin = df.select("id", minhash_slots_pandas(F.col("hs"), coefs).alias("sig"))
+    twin = df.select("id", poly_minhash_slots_pandas(F.col("sh"), coefs).alias("sig"))
     e = {r["id"]: r["sig"] for r in expr.collect()}
     t = {r["id"]: r["sig"] for r in twin.collect()}
     assert e == t
     assert t[1] == t[2]  # the null element contributed nothing
-    assert t[3] == t[4] == [None] * 4
+    assert t[3] == t[4] == t[5] == [None] * 4
+    assert t[6] == [b for _, b in coefs]  # h('') = 0, so each slot is b
 
 
 def test_poly_minhash_twin_matches_expression_portable_path(spark):
-    """Round-14: the PORTABLE path's one-pass Arrow twin
-    (poly_minhash_slots_pandas — char-level polynomial hash + k affine
-    mins) must be bit-identical to the interpreted expression stack it
-    replaces, over real text AND the adversarial edges: null / empty /
-    whitespace-only docs, unicode incl. a non-BMP char (split('')
-    yields codepoints, probed on Spark 4.1.2 — a UTF-16-unit
-    implementation would diverge here), interior NUL characters
-    (codepoint 0 folds as h*31, indistinguishable from the matrix
-    padding unless the mask uses true lengths), and both shingle
-    widths the catalog uses (n=1 gate/incremental, n=3 default)."""
+    """The one-pass Arrow kernel (poly_minhash_slots_pandas —
+    char-level polynomial hash + k affine mins) must be bit-identical
+    to the interpreted expression stack, over real text AND the
+    adversarial edges: null / empty / whitespace-only docs, unicode
+    incl. a non-BMP char (split('') yields codepoints, probed on Spark
+    4.1.2 — a UTF-16-unit implementation would diverge here), interior
+    NUL characters (codepoint 0 folds as h*31, so a token's true length
+    must bound it), and both shingle widths the catalog uses (n=1
+    gate/incremental, n=3 default)."""
     from sportstv_streaming_data_warehouse_spark.operators.dedup import (
         minhash_signature,
     )
@@ -286,13 +298,13 @@ def test_poly_minhash_twin_matches_expression_portable_path(spark):
         expr = {
             r["doc_id"]: r["signature"]
             for r in minhash_signature(
-                docs, "doc_id", "text", n=n, portable=True, arrow=False
+                docs, "doc_id", "text", n=n, arrow=False
             ).collect()
         }
         twin = {
             r["doc_id"]: r["signature"]
             for r in minhash_signature(
-                docs, "doc_id", "text", n=n, portable=True, arrow=True
+                docs, "doc_id", "text", n=n, arrow=True
             ).collect()
         }
         assert expr == twin, f"n={n}"
@@ -418,13 +430,13 @@ def test_poly_minhash_twin_randomized_corpus_parity(spark):
         expr = {
             r["doc_id"]: r["signature"]
             for r in minhash_signature(
-                df, "doc_id", "text", n=n, portable=True, arrow=False
+                df, "doc_id", "text", n=n, arrow=False
             ).collect()
         }
         twin = {
             r["doc_id"]: r["signature"]
             for r in minhash_signature(
-                df, "doc_id", "text", n=n, portable=True, arrow=True
+                df, "doc_id", "text", n=n, arrow=True
             ).collect()
         }
         assert expr == twin, f"n={n}"

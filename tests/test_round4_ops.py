@@ -177,7 +177,7 @@ def test_incremental_dedup_catches_planted_dups_only(spark):
         ["doc_id", "text"],
     )
     pairs = incremental_near_duplicates(
-        corpus, batch, "doc_id", "text", n=1, threshold=0.5, portable=True
+        corpus, batch, "doc_id", "text", n=1, threshold=0.5
     ).collect()
     by_batch = {}
     for r in pairs:

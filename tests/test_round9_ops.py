@@ -63,21 +63,6 @@ def test_bins_are_internally_consistent(spark, corpus):
                for r in rows)
 
 
-def test_portable_and_fast_paths_agree_on_the_curve_shape(spark, corpus):
-    # the xxhash64 fast path and the polynomial oracle path hash
-    # DIFFERENT shingle values, so k bins differ — but the exact-side
-    # accounting must agree in total: identical total candidate mass is
-    # not guaranteed (band collisions differ), yet both must report the
-    # identical-docs pair at exact 1.0
-    for portable in (False, True):
-        rows = minhash_calibration(
-            corpus, "doc_id", "text", num_hashes=32, bands=8, n=1,
-            portable=portable,
-        ).collect()
-        top = max(rows, key=lambda r: r["k_agree"])
-        assert top["k_agree"] == 32 and top["micro_exact_jaccard"] == 1.0
-
-
 def test_precision_recall_on_planted_corpus(spark, corpus):
     from sportstv_streaming_data_warehouse_spark.operators.dedup import (
         minhash_precision_recall,
@@ -87,13 +72,13 @@ def test_precision_recall_on_planted_corpus(spark, corpus):
 
     row = minhash_precision_recall(
         corpus, "doc_id", "text", num_hashes=32, bands=8, n=1,
-        threshold=0.6, portable=True,
+        threshold=0.6,
     ).collect()[0]
     # cross-check against the two pair tiers it composes
     lsh = {
         (r["id_a"], r["id_b"])
         for r in minhash_near_duplicates(
-            corpus, "doc_id", "text", 32, 8, 1, threshold=0.6, portable=True
+            corpus, "doc_id", "text", 32, 8, 1, threshold=0.6
         ).collect()
     }
     exact = {
@@ -126,7 +111,7 @@ def test_precision_recall_empty_sides_guard(spark):
     df = spark.createDataFrame(rows, "doc_id long, text string")
     row = minhash_precision_recall(
         df, "doc_id", "text", num_hashes=32, bands=8, n=1,
-        threshold=0.9, portable=True,
+        threshold=0.9,
     ).collect()[0]
     assert row["n_exact"] == 0 and row["pair_recall"] == 0.0
     assert row["pair_precision"] in (0.0, 1.0) or 0.0 <= row["pair_precision"] <= 1.0
@@ -255,13 +240,13 @@ def test_degenerate_docs_are_excluded_from_the_audits(spark, corpus):
     cand = {
         (r["id_a"], r["id_b"])
         for r in minhash_near_duplicates(
-            dirty, "doc_id", "text", 32, 8, 1, threshold=0.0, portable=True
+            dirty, "doc_id", "text", 32, 8, 1, threshold=0.0
         ).collect()
     }
     assert (100, 101) in cand and (102, 103) in cand
 
     # audit semantics: planting the degenerate docs changes NOTHING
-    kw = dict(num_hashes=32, bands=8, n=1, portable=True)
+    kw = dict(num_hashes=32, bands=8, n=1)
     clean_cal = minhash_calibration(corpus, "doc_id", "text", **kw).collect()
     dirty_cal = minhash_calibration(dirty, "doc_id", "text", **kw).collect()
     assert clean_cal == dirty_cal
@@ -346,7 +331,7 @@ def test_pr_sample_fraction_is_deterministic_and_self_consistent(spark):
         for i in range(40)
     ]
     df = spark.createDataFrame(rows, "doc_id long, text string")
-    kw = dict(num_hashes=32, bands=8, n=1, threshold=0.5, portable=True)
+    kw = dict(num_hashes=32, bands=8, n=1, threshold=0.5)
 
     frac = 0.5
     cut = int(frac * _HASH_PRIME)

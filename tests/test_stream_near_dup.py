@@ -160,7 +160,7 @@ def test_retried_batch_is_idempotent(spark, tmp_path):
 
 
 def test_chain_gating_is_component_min_not_sequential_greedy(spark):
-    """A~B, B~C, A!~C in one batch (estimates verified: 0.72 / 0.66 /
+    """A~B, B~C, A!~C in one batch (estimates verified: 0.75 / 0.56 /
     no pair): the one-pass rule rejects BOTH B and C keeping only A —
     the connected-component-min semantics of the cluster dedup, not
     sequential greedy (which would re-admit C after rejecting its only
@@ -172,7 +172,7 @@ def test_chain_gating_is_component_min_not_sequential_greedy(spark):
             "tango", "uniform", "victor", "whiskey", "xray"]
     a = " ".join(base)
     b = " ".join(base[:20] + ["zulu", "yankee", "neptune", "saturn"])
-    c = " ".join(base[:14] + ["mercury", "venus", "jupiter"]
+    c = " ".join(base[:14] + ["venus", "mars", "uranus"]
                  + base[17:20] + ["zulu", "yankee", "neptune", "saturn"])
     batch = spark.createDataFrame([(1, a), (2, b), (3, c)], SCHEMA)
     admitted, _, rejected = gate_batch(batch, None)
@@ -223,7 +223,7 @@ def test_gate_batch_honors_precomputed_batch_bands(spark):
 
     batch = spark.createDataFrame(BATCH1, SCHEMA)
     plain_adm, _, plain_rej = gate_batch(batch, None)
-    bb = _banded_minhash(batch, "doc_id", "text", 32, 8, 3, 42, False,
+    bb = _banded_minhash(batch, "doc_id", "text", 32, 8, 3, 42,
                          cache=False).persist()
     try:
         adm, _, rej = gate_batch(batch, None, batch_bands=bb)
@@ -268,10 +268,10 @@ def test_index_is_bucket_partitioned_and_the_gate_prunes_it(spark, gated):
 
 def test_portable_stream_matches_the_portable_batch_model(spark, tmp_path):
     """The catalog entry s_near_dup_gate_grain verifies replay_gate's
-    batch algebra on the PORTABLE hash family against a full SQL gate
-    replay; this pins the real foreachBatch stream equal to that same
-    portable replay_gate, closing the transitive chain under one hash
-    family (the default-path twin of
+    batch algebra against a full SQL gate replay at unigram shingles
+    and tau 0.6; this pins the real foreachBatch stream equal to
+    replay_gate at that same operating point, closing the transitive
+    chain (the default-parameter twin of
     test_stream_matches_the_sequential_batch_model)."""
     root = tmp_path
     inp = str(root / "in")
@@ -284,7 +284,8 @@ def test_portable_stream_matches_the_portable_batch_model(spark, tmp_path):
         .json(inp)
     )
     q = run_near_dup_gate(
-        stream, dirs["index"], dirs["admitted"], dirs["ckpt"], portable=True
+        stream, dirs["index"], dirs["admitted"], dirs["ckpt"], n=1,
+        threshold=0.6,
     )
     try:
         q.processAllAvailable()
@@ -296,7 +297,7 @@ def test_portable_stream_matches_the_portable_batch_model(spark, tmp_path):
     )
     b1 = spark.createDataFrame(BATCH1, SCHEMA)
     b2 = spark.createDataFrame(BATCH2, SCHEMA)
-    model_admitted, _ = replay_gate([b1, b2], portable=True)
+    model_admitted, _ = replay_gate([b1, b2], n=1, threshold=0.6)
     assert got == sorted(r["doc_id"] for r in model_admitted.collect())
 
 
@@ -424,7 +425,7 @@ def test_legacy_flat_index_never_becomes_a_mixed_tree(spark, tmp_path):
     # plant a legacy (flat, no band_bucket) partition, as the pre-r12
     # gate wrote it
     b1 = spark.createDataFrame(BATCH1, SCHEMA)
-    _banded_minhash(b1, "doc_id", "text", 32, 8, 3, 42, False, cache=False) \
+    _banded_minhash(b1, "doc_id", "text", 32, 8, 3, 42, cache=False) \
         .write.parquet(f"{dirs['index']}/ingest_batch=0")
 
     process = make_near_dup_gate(dirs["index"], dirs["admitted"])
@@ -479,6 +480,47 @@ def test_bucket_modulus_comes_from_the_index_meta_not_the_caller(spark, tmp_path
         r["doc_id"] for r in spark.read.parquet(dirs["admitted"]).collect()
     )
     assert adm == [0, 1, 2, 11]
+
+
+def test_gate_refuses_an_index_banded_with_other_parameters(spark, tmp_path):
+    """Band hashes from another (num_hashes, bands, n, seed, family)
+    never collide with the stored ones, so a gate restarted with
+    different banding parameters would silently admit every duplicate.
+    The meta records them on the first write; a mismatch — or a meta
+    that predates them, which may hold the retired xxhash64 family's
+    hashes — raises instead."""
+    from sportstv_streaming_data_warehouse_spark.streaming.near_dup import (
+        _GATE_META,
+        _read_index,
+        _write_meta,
+    )
+
+    dirs = {k: str(tmp_path / k) for k in ("index", "admitted")}
+    make_near_dup_gate(dirs["index"], dirs["admitted"], seed=42)(
+        spark.createDataFrame(BATCH1, SCHEMA), 0
+    )
+    with open(os.path.join(dirs["index"], _GATE_META)) as f:
+        meta = json.load(f)
+    assert {k: meta[k] for k in ("num_hashes", "bands", "n", "seed")} == {
+        "num_hashes": 32, "bands": 8, "n": 3, "seed": 42,
+    }
+    assert meta["family"]
+    batch2 = spark.createDataFrame(BATCH2, SCHEMA)
+    with pytest.raises(ValueError, match="banded with"):
+        make_near_dup_gate(dirs["index"], dirs["admitted"], seed=7)(batch2, 1)
+    # nothing of batch 1 was written before the refusal
+    assert not os.path.exists(f"{dirs['admitted']}/ingest_batch=1")
+    index = _read_index(spark, dirs["index"], 99)
+    with pytest.raises(ValueError, match="banded with"):
+        gate_batch(batch2, index, seed=7, index_dir=dirs["index"])
+
+    # a meta recording only the modulus (written before the banding
+    # parameters were recorded) is refused rather than guessed at
+    _write_meta(spark, dirs["index"], {"index_buckets": meta["index_buckets"]})
+    with pytest.raises(ValueError, match="rebuild"):
+        make_near_dup_gate(dirs["index"], dirs["admitted"])(batch2, 1)
+    with pytest.raises(ValueError, match="rebuild"):
+        gate_batch(batch2, index, index_dir=dirs["index"])
 
 
 def test_gate_batch_on_a_bucketed_index_without_a_modulus_skips_the_prune(
@@ -547,7 +589,7 @@ def test_staged_rejected_grain_replays_in_duckdb(spark):
     b1 = tagged.filter(F.col("__sb") == 9).select("doc_id", "text")
     kw = dict(
         num_hashes=_MH_K, bands=_MH_BANDS, n=1, threshold=_MH_TAU,
-        seed=_MH_SEED, portable=True, broadcast_batch=False,
+        seed=_MH_SEED, broadcast_batch=False,
     )
     _, bands0, rej0 = gate_batch(b0, None, **kw)
     _, _, rej1 = gate_batch(b1, bands0, **kw)

@@ -453,10 +453,10 @@ def round9_experiment(spark) -> None:
     text.py's per-row folds as 'cheap — leave them'; verify that with
     measurements instead of keeping the claim on faith.
 
-    - x_dedup_minhash_lsh: expression slots vs the integer Arrow twin
-      (dedup.minhash_slots_pandas) at 1x/10x/100x on the zipfian corpus.
-      Adoption bar: >=1.5x at 100x AND bit-parity (pinned separately in
-      tests/test_arrow_twin_edges-adjacent minhash parity checks).
+    - x_dedup_minhash_lsh: expression slots vs the batch-vectorised
+      Arrow kernel (dedup.poly_minhash_slots_pandas) at 1x/10x/100x on
+      the zipfian corpus. Adoption bar: >=1.5x at 100x AND bit-parity
+      (pinned in tests/test_arrow_twin_edges.py).
     - x_text_stats: the avg_token_len HOF fold vs its codegen
       regexp_replace rewrite (sum of token lengths == count of non-\\s
       chars) at 1x/10x/100x.
@@ -584,7 +584,7 @@ def round10_experiment(spark) -> None:
             def run(frac=frac, docs=docs):
                 return D.minhash_precision_recall(
                     docs, "doc_id", "text", num_hashes=32, bands=8, n=1,
-                    threshold=0.5, portable=True, max_token_docs=2000,
+                    threshold=0.5, max_token_docs=2000,
                     sample_fraction=frac,
                 ).collect()[0]
 
@@ -1301,7 +1301,7 @@ def guard_histogram_experiment(spark) -> None:
             return D.incremental_near_duplicates(
                 corpus, batch, "doc_id", "text",
                 num_hashes=_MH_K, bands=_MH_BANDS, n=1,
-                threshold=_MH_TAU, seed=_MH_SEED, portable=True,
+                threshold=_MH_TAU, seed=_MH_SEED,
             ).count()
 
         run_inc()  # warm
@@ -1309,10 +1309,10 @@ def guard_histogram_experiment(spark) -> None:
         n_pairs = run_inc()
         wall = time.perf_counter() - t0
         bc = D._banded_minhash(
-            corpus, "doc_id", "text", _MH_K, _MH_BANDS, 1, _MH_SEED, True
+            corpus, "doc_id", "text", _MH_K, _MH_BANDS, 1, _MH_SEED
         ).groupBy("band_id", "band_hash").agg(F.count("*").alias("c"))
         bb = D._banded_minhash(
-            batch, "doc_id", "text", _MH_K, _MH_BANDS, 1, _MH_SEED, True
+            batch, "doc_id", "text", _MH_K, _MH_BANDS, 1, _MH_SEED
         ).groupBy("band_id", "band_hash").agg(F.count("*").alias("b"))
         joined = bb.join(bc, ["band_id", "band_hash"]).cache()
         vol = joined.agg(F.sum(F.col("b") * F.col("c")).cast("long").alias("v")).first()["v"] or 0
