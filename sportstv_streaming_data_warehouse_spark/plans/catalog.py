@@ -8471,67 +8471,76 @@ def s_near_dup_gate_rejected(spark, sf_dir):
 # test_staged_rejected_grain_replays_in_duckdb — this registration
 # completes the gate's two-sided verification: admitted + rejected).
 # Displaced: p8_guarded_ratio (r10-green, the newest pre-pay pick).
+#
+# Round-16 rotation (tools/rotate_window.py, ledger folded from
+# CORRECTNESS_r14 and CORRECTNESS_r15, both 50/50 green on the same
+# round-14 window, which was never rotated for round 15): 2 anchors +
+# the 24 mandatory queries last green in r11 or earlier (the r11 w_*/x_*
+# cohort) + 23 round-17 pre-pays (the r12 cohort, oldest last-green
+# first) + 1 debut, x_dedup_minhash_lsh (hash-checked since the single
+# polynomial MinHash family; no ledger row yet, so the tool cannot see
+# it). It displaces the bottom pre-pay pick, x_dedup_embedding_cosine
+# (last green r12, not stale until round 17). The r14/r15 fold gives
+# the three round-14 debuts (x_compaction_bins, p1_projected_scan,
+# o34_multi_col_reorder) their first ledger rows.
 # ---------------------------------------------------------------------------
 
 CORRECTNESS_WINDOW = [
     # anchors (kept green every round for regression detection)
     "flagship_daily_rollup",
     "star_fact_events",
-    # round-14 mandatory rotations (last green < r11) — tools/rotate_window.py
-    "p8_guarded_ratio",
-    "p9_null_audit",
-    "r1_pivot_year_matrix",
-    "s4_source_date_bounds",
-    "s_rolling_distinct_grain",
-    "x_knn_ivf_recall",
-    "x_knn_pq_recall",
-    "x_minhash_pr_sampled",
-    "x_pack_shards",
-    "x_passage_scrub_crossdoc",
-    "x_quality_deciles",
-    "x_quality_score",
-    "x_repetition_filter",
-    "x_salted_skew_join",
-    "x_salted_skew_rollup",
-    "x_scd2_point_in_time",
-    "x_stratified_sample",
-    "x_temporal_split_purged",
-    "x_text_stats",
-    "x_tfidf_top_terms",
-    "x_top_bigrams",
-    # round-15 pre-pay (oldest last-green first); debuts displace from the bottom
-    "a2_approx_distinct_scale",
-    "a_approx_quantile_audit",
-    "a_cohort_retention",
-    "a_pareto_abc",
-    "a_rollup_hierarchy",
-    "a_winsorized_stats",
-    "f_json_extract",
-    "q_ivf_cell_skew",
-    "q_key_skew_report",
-    "r_retention_funnel",
-    "r_streaming_by_type",
-    "r_top_markets",
-    "r_yoy_growth",
-    "s1_scan_pruned_projection",
-    "s5_row_counts",
-    "s_ingest_daily_grain",
-    "s_sessionize_grain",
-    "u1_union_two_sources",
-    "u2_distinct_pairs",
-    "u3_except_churned",
-    "u4_intersect_retained",
-    "w1_peak_week",
-    "w3_yoy_order_growth",
-    # round-14 debuts displace the three bottom pre-pay picks
-    # (w_daily_ohlc, w_event_funnel, w_event_transitions — all last
-    # green r13, nowhere near stale)
-    "x_compaction_bins",
-    "p1_projected_scan",
-    "o34_multi_col_reorder",
+    # round-16 mandatory rotations (last green < r12) — tools/rotate_window.py
+    "w_daily_ohlc",
+    "w_event_funnel",
+    "w_event_transitions",
+    "w_forward_fill",
+    "w_interarrival_stats",
+    "w_interpolate_linear",
+    "w_moving_avg_7d",
+    "w_rfm_segmentation",
+    "w_rolling_distinct_7d",
+    "w_sessionize",
+    "x_anomaly_zscore",
+    "x_asof_join_last_signup",
+    "x_bigram_surprisal",
+    "x_bm25_topk",
+    "x_boilerplate_ngrams",
+    "x_cdc_fact_diff",
+    "x_containment_dedup",
+    "x_copurchase_pairs",
+    "x_dedup_canonical",
+    "x_dedup_clusters",
+    "x_dedup_incremental",
+    "x_domain_mix_apply",
+    "x_interval_overlap_join",
+    "x_knn_ivfpq_recall",
+    # round-17 pre-pay (oldest last-green first); debuts displace from the bottom
+    "a45_global_summary",
+    "a_cube_matrix",
+    "a_quantiles_by_flag",
+    "a_share_of_total",
+    "f_from_json_struct",
+    "h_monthly_from_daily",
+    "h_sketch_rollup_hll",
+    "o1_top10_customers",
+    "p67_year_pruning",
+    "q_out_of_order_audit",
+    "q_quality_audit",
+    "r2_unpivot_year_matrix",
+    "s45_source_stats",
+    "s_near_dup_gate_grain",
+    "sql_surface_weekly_top",
+    "u34_set_ops",
+    "w2_peak_dow_per_flag",
+    "w_event_sequences",
+    "x_bpe_top_pairs",
+    "x_cascade_delete_plan",
+    "x_content_hash_split",
+    "x_decontam_bloom",
+    "x_decontamination",
     # x_dedup_minhash_lsh debuts with its oracle (one MinHash hash
-    # family), displacing the bottom pre-pay pick w_active_streaks
-    # (last green r15)
+    # family), displacing the bottom pre-pay pick x_dedup_embedding_cosine
+    # (last green r12)
     "x_dedup_minhash_lsh",
 ]
 
@@ -8543,19 +8552,19 @@ CORRECTNESS_WINDOW = [
 # tests/test_catalog_registry.py asserts that every oracle-backed query
 # appears here or in the current window.
 DRIVER_GREEN_ROUNDS: dict[str, list[int]] = {
-    "flagship_daily_rollup": [1, 2, 3, 4, 5, 6, 7, 8, 9, 10, 11, 12, 13],
-    "star_fact_events": [1, 2, 3, 4, 5, 6, 7, 8, 9, 10, 11, 12, 13],
-    "s1_scan_pruned_projection": [1, 2, 5, 8, 11],
+    "flagship_daily_rollup": [1, 2, 3, 4, 5, 6, 7, 8, 9, 10, 11, 12, 13, 14, 15],
+    "star_fact_events": [1, 2, 3, 4, 5, 6, 7, 8, 9, 10, 11, 12, 13, 14, 15],
+    "s1_scan_pruned_projection": [1, 2, 5, 8, 11, 14, 15],
     "s45_source_stats": [2, 3, 6, 9, 12],
-    "s4_source_date_bounds": [1, 4, 7, 10],
-    "s5_row_counts": [1, 4, 7, 11],
+    "s4_source_date_bounds": [1, 4, 7, 10, 14, 15],
+    "s5_row_counts": [1, 4, 7, 11, 14, 15],
     "p2_filter_notnull_nonempty": [1, 2, 4, 7, 10, 13],
     "p3_p4_p5_quality_clean": [1, 2, 4, 7, 10, 13],
     "p67_year_pruning": [2, 3, 6, 9, 12],
     "p6_year_equality_prune": [1, 4, 7, 10, 13],
     "p7_year_range_prune": [1, 4, 7, 10, 13],
-    "p8_guarded_ratio": [1, 2, 4, 7, 10],
-    "p9_null_audit": [1, 2, 4, 7, 10],
+    "p8_guarded_ratio": [1, 2, 4, 7, 10, 14, 15],
+    "p9_null_audit": [1, 2, 4, 7, 10, 14, 15],
     "j1_snowflake_flatten_distinct": [1, 2, 4, 7, 10, 13],
     "j2_broadcast_user_enrichment": [1, 2, 4, 7, 10, 13],
     "j5_fact_by_country": [1, 2, 4, 7, 10, 13],
@@ -8573,30 +8582,30 @@ DRIVER_GREEN_ROUNDS: dict[str, list[int]] = {
     "a12_yearly_validation": [1, 4, 7, 10, 13],
     "a13_avg_of_precomputed": [1, 4, 7, 10, 13],
     "a_cube_matrix": [2, 3, 6, 9, 12],
-    "a_rollup_hierarchy": [2, 3, 5, 8, 11],
+    "a_rollup_hierarchy": [2, 3, 5, 8, 11, 14, 15],
     "h_monthly_from_daily": [2, 3, 6, 9, 12],
     "a_quantiles_by_flag": [2, 3, 6, 9, 12],
     "a_share_of_total": [2, 3, 6, 9, 12],
-    "w1_peak_week": [1, 4, 7, 11],
+    "w1_peak_week": [1, 4, 7, 11, 14, 15],
     "w2_peak_dow_per_flag": [1, 2, 3, 6, 9, 12],
-    "w3_yoy_order_growth": [1, 2, 4, 7, 11],
+    "w3_yoy_order_growth": [1, 2, 4, 7, 11, 14, 15],
     "w_sessionize": [2, 3, 4, 7, 11],
     "w_moving_avg_7d": [2, 3, 5, 8, 11],
     "o1_top10_customers": [1, 2, 3, 6, 9, 12],
     "o2_top_events_full_sort": [1, 4, 7, 10, 13],
     "o5_distinct_years_sorted": [1, 4, 7, 10, 13],
-    "u1_union_two_sources": [1, 2, 5, 8, 11],
-    "u2_distinct_pairs": [1, 4, 7, 11],
+    "u1_union_two_sources": [1, 2, 5, 8, 11, 14, 15],
+    "u2_distinct_pairs": [1, 4, 7, 11, 14, 15],
     "u34_set_ops": [2, 3, 6, 9, 12],
-    "u3_except_churned": [1, 4, 7, 11],
-    "u4_intersect_retained": [1, 4, 7, 11],
-    "r1_pivot_year_matrix": [1, 4, 7, 10],
+    "u3_except_churned": [1, 4, 7, 11, 14, 15],
+    "u4_intersect_retained": [1, 4, 7, 11, 14, 15],
+    "r1_pivot_year_matrix": [1, 4, 7, 10, 14, 15],
     "r2_unpivot_year_matrix": [1, 2, 3, 6, 9, 12],
     "f_calendar_keys": [1, 2, 4, 7, 10, 13],
     "f6_date_spine": [1, 2, 4, 7, 10, 13],
     "f7_regex_inference_precedence": [1, 2, 4, 7, 10, 13],
     "f10_hours_arithmetic": [1, 4, 7, 10, 13],
-    "f_json_extract": [2, 3, 5, 8, 11],
+    "f_json_extract": [2, 3, 5, 8, 11, 14, 15],
     "f_from_json_struct": [2, 3, 6, 9, 12],
     "sql_surface_weekly_top": [2, 3, 6, 9, 12],
     "q_quality_audit": [2, 3, 6, 9, 12],
@@ -8614,23 +8623,23 @@ DRIVER_GREEN_ROUNDS: dict[str, list[int]] = {
     "x_knn_lsh_poly": [2, 3, 6, 9, 13],
     "x_text_profile": [2, 3, 5, 9, 13],
     "x_content_hash_split": [2, 3, 6, 9, 12],
-    "x_quality_deciles": [2, 3, 6, 10],
+    "x_quality_deciles": [2, 3, 6, 10, 14, 15],
     "x_cdc_fact_diff": [3, 5, 8, 11],
-    "x_salted_skew_rollup": [3, 6, 10],
+    "x_salted_skew_rollup": [3, 6, 10, 14, 15],
     "x_knn_ivf_ann": [3, 5, 8, 12],
     "x_dedup_ngram_jaccard": [3, 6, 9, 12],
     "x_decontamination": [3, 6, 9, 12],
-    "x_stratified_sample": [3, 6, 10],
-    "x_pack_shards": [3, 6, 10],
-    "x_repetition_filter": [3, 6, 10],
+    "x_stratified_sample": [3, 6, 10, 14, 15],
+    "x_pack_shards": [3, 6, 10, 14, 15],
+    "x_repetition_filter": [3, 6, 10, 14, 15],
     "x_fingerprint": [3, 6, 9, 13],
-    "x_top_bigrams": [3, 6, 10],
+    "x_top_bigrams": [3, 6, 10, 14, 15],
     "x_doc_stats_by_lang": [3, 6, 9, 12],
-    "x_text_stats": [3, 6, 10],
+    "x_text_stats": [3, 6, 10, 14, 15],
     "x_lang_id": [3, 6, 9, 13],
-    "x_quality_score": [3, 6, 10],
+    "x_quality_score": [3, 6, 10, 14, 15],
     "x_doc_chunking": [3, 6, 9, 12],
-    "x_tfidf_top_terms": [3, 6, 10],
+    "x_tfidf_top_terms": [3, 6, 10, 14, 15],
     "x_embedding_quantize": [3, 6, 9, 13],
     "x_dupgraph_degree": [3, 6, 9, 12],
     "x_dedup_survivors": [3, 6, 9, 12],
@@ -8640,15 +8649,15 @@ DRIVER_GREEN_ROUNDS: dict[str, list[int]] = {
     "x_global_shuffle": [4, 8, 12],
     "x_kmeans_lloyd": [4, 6, 9, 13],
     "x_quality_filter_by_lang": [4, 8, 12],
-    "x_scd2_point_in_time": [4, 6, 10],
+    "x_scd2_point_in_time": [4, 6, 10, 14, 15],
     "x_vocab_coverage": [4, 8, 12],
-    "a2_approx_distinct_scale": [5, 8, 11],
-    "a_approx_quantile_audit": [5, 8, 11],
-    "a_cohort_retention": [5, 8, 11],
-    "a_pareto_abc": [5, 8, 11],
-    "a_winsorized_stats": [5, 8, 11],
-    "q_key_skew_report": [5, 8, 11],
-    "w_active_streaks": [5, 8, 11],
+    "a2_approx_distinct_scale": [5, 8, 11, 14, 15],
+    "a_approx_quantile_audit": [5, 8, 11, 14, 15],
+    "a_cohort_retention": [5, 8, 11, 14, 15],
+    "a_pareto_abc": [5, 8, 11, 14, 15],
+    "a_winsorized_stats": [5, 8, 11, 14, 15],
+    "q_key_skew_report": [5, 8, 11, 14, 15],
+    "w_active_streaks": [5, 8, 11, 14, 15],
     "w_daily_ohlc": [5, 8, 11],
     "w_event_funnel": [5, 8, 11],
     "w_event_transitions": [5, 8, 11],
@@ -8682,34 +8691,37 @@ DRIVER_GREEN_ROUNDS: dict[str, list[int]] = {
     "x_cascade_delete_plan": [6, 9, 12],
     "x_distribution_drift": [6, 9, 12],
     "x_heavy_hitters": [6, 9, 13],
-    "x_passage_scrub_crossdoc": [6, 10],
-    "x_salted_skew_join": [6, 10],
-    "x_temporal_split_purged": [6, 10],
+    "x_passage_scrub_crossdoc": [6, 10, 14, 15],
+    "x_salted_skew_join": [6, 10, 14, 15],
+    "x_temporal_split_purged": [6, 10, 14, 15],
     "a_exact_median_hist": [7, 10, 13],
     "h_sketch_rollup_quantile": [7, 10, 13],
     "w_interpolate_linear": [7, 11],
     "x_domain_mix_apply": [7, 11],
     "x_interval_overlap_join": [7, 11],
-    "r_retention_funnel": [8, 11],
-    "r_streaming_by_type": [8, 11],
-    "r_top_markets": [8, 11],
-    "r_yoy_growth": [8, 11],
-    "s_ingest_daily_grain": [8, 11],
+    "r_retention_funnel": [8, 11, 14, 15],
+    "r_streaming_by_type": [8, 11, 14, 15],
+    "r_top_markets": [8, 11, 14, 15],
+    "r_yoy_growth": [8, 11, 14, 15],
+    "s_ingest_daily_grain": [8, 11, 14, 15],
     "x_knn_recall_at_k": [9, 13],
     "x_minhash_calibration": [9, 13],
     "x_minhash_precision_recall": [9, 13],
-    "s_rolling_distinct_grain": [10],
-    "x_knn_ivf_recall": [10],
-    "x_knn_pq_recall": [10],
-    "x_minhash_pr_sampled": [10],
-    "q_ivf_cell_skew": [11],
-    "s_sessionize_grain": [11],
+    "s_rolling_distinct_grain": [10, 14, 15],
+    "x_knn_ivf_recall": [10, 14, 15],
+    "x_knn_pq_recall": [10, 14, 15],
+    "x_minhash_pr_sampled": [10, 14, 15],
+    "q_ivf_cell_skew": [11, 14, 15],
+    "s_sessionize_grain": [11, 14, 15],
     "x_knn_ivfpq_recall": [11],
     "s_near_dup_gate_grain": [12],
     "x_bpe_top_pairs": [12],
     "x_decontam_bloom": [12],
     "x_pack_context": [12],
     "s_near_dup_gate_rejected": [13],
+    "o34_multi_col_reorder": [14, 15],
+    "p1_projected_scan": [14, 15],
+    "x_compaction_bins": [14, 15],
 }
 
 
