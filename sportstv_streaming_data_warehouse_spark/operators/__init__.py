@@ -15,7 +15,6 @@ from .similarity import (
     ivf_topk,
     lsh_bucketed_topk,
     normalize_embeddings,
-    normalize_embeddings_pandas,
 )
 from .asof import asof_join
 from .clustering import assign_clusters, lloyd_round, update_centroids
@@ -46,7 +45,6 @@ __all__ = [
     "ivf_topk",
     "lsh_bucketed_topk",
     "normalize_embeddings",
-    "normalize_embeddings_pandas",
     "asof_join",
     "assign_clusters",
     "lloyd_round",

@@ -214,7 +214,6 @@ def minhash_signature(
     num_hashes: int = 32,
     n: int = 3,
     seed: int = 42,
-    arrow: bool = True,
 ) -> DataFrame:
     """(id, minhash array) via k affine hash functions over shingle hashes.
 
@@ -227,24 +226,33 @@ def minhash_signature(
 
     One hash family: the shingle hash is the polynomial rolling hash
     (``_poly_hash``), so plain SQL replays every signature (the DuckDB
-    oracles in plans/catalog.py).
-
-    ``arrow`` picks how the signature evaluates: ``True`` (default)
-    runs the whole poly hash + k affine mins in one vectorised Arrow
-    pass (``poly_minhash_slots_pandas``); ``False`` is the interpreted
-    expression stack, the reference the Arrow kernel is pinned against
-    (tests/test_arrow_twin_edges.py) — its char-level polynomial fold
-    walks every character of every token through Catalyst's
-    interpreter.
+    oracles in plans/catalog.py). The poly hash + k affine mins run in
+    one vectorised Arrow pass (``poly_minhash_slots_pandas``), pinned
+    bit-identical to ``_minhash_signature_expr``.
     """
     coefs = minhash_coefficients(num_hashes, seed)
     shingles = word_shingles(F.col(text_col), n)
-    if arrow:
-        return _ensure_parallelism(df).select(
-            F.col(id_col),
-            poly_minhash_slots_pandas(shingles, coefs).alias("signature"),
-        )
+    return _ensure_parallelism(df).select(
+        F.col(id_col),
+        poly_minhash_slots_pandas(shingles, coefs).alias("signature"),
+    )
 
+
+def _minhash_signature_expr(
+    df: DataFrame,
+    id_col: str,
+    text_col: str,
+    num_hashes: int = 32,
+    n: int = 3,
+    seed: int = 42,
+) -> DataFrame:
+    """``minhash_signature`` as the interpreted expression stack — the
+    reference the Arrow kernel is pinned against
+    (tests/test_arrow_twin_edges.py). Its char-level polynomial fold
+    walks every character of every token through Catalyst's
+    interpreter."""
+    coefs = minhash_coefficients(num_hashes, seed)
+    shingles = word_shingles(F.col(text_col), n)
     with_hashes = _ensure_parallelism(df).select(
         F.col(id_col), F.transform(shingles, _poly_hash).alias("__hs")
     )

@@ -1,20 +1,34 @@
 """Similarity search over embedding columns (array<float>).
 
 Not in the reference (its only lookups are equi-joins); this is the
-LLM-pipeline extension from BASELINE.json's north star. Two paths:
+LLM-pipeline extension from BASELINE.json's north star. The operators:
 
 - brute_force_topk: exact cosine top-k. The query side is broadcast, so
-  the corpus is scanned once with no shuffle of the big side; per-query
-  top-k is a window over (query, sim). Correct at any corpus size, cost
-  O(|corpus|·|queries|·dim) — the baseline the ANN path is measured
-  against.
+  the corpus is scanned once with no shuffle of the big side. Correct at
+  any corpus size, cost O(|corpus|·|queries|·dim) — the ground truth the
+  ANN tiers' recall scorecards measure against.
+- banded_cosine_pairs: semantic near-duplicate pairs via sign-LSH
+  banding plus an exact cosine refine.
 - lsh_bucketed_topk: random-hyperplane LSH. Sign-bit signatures bucket
-  the corpus; candidates come from L equi-joins on (table, bucket), so
-  work scales with bucket occupancy, not corpus². Recall < 1 by design;
-  tests measure it against brute force.
+  the corpus; candidates come from one equi-join on (table, bucket), so
+  work scales with bucket occupancy, not corpus². Recall < 1 by design.
+- ivf_topk / pq_topk / ivfpq_topk (+ the prebuilt-index
+  ivfpq_serve_topk): centroid-cell probing, product-quantized ADC
+  scoring, and their composition.
 
-All vector math is JVM-side higher-order functions (zip_with/aggregate in
-double precision) — no Python serialization in the hot path.
+Every top-k ranks within a query by score, ties to the smaller
+neighbor_id (``_per_query_topk``).
+
+Vector math is JVM-side higher-order functions (zip_with/aggregate in
+double precision) except at five sites where an Arrow-batched
+pandas_udf was measured faster and is pinned bit-identical (finite
+inputs) to an interpreted expression kept beside it:
+``banded_signatures_pandas`` / ``banded_signatures_expr`` and
+``dot_pandas`` / ``dot`` (banded_cosine_pairs), ``table_signatures_pandas``
+/ ``lsh_signature`` (lsh_bucketed_topk), ``ivf_assign_ids_pandas`` /
+``_ivf_assign_expr`` (IVF cell assignment) and ``pq_dists_pandas`` /
+``_pq_subspace_dists`` (PQ codes and query tables). Each runs on one
+path only; the expression twins exist for tests/test_arrow_twin_edges.py.
 """
 
 from __future__ import annotations
@@ -36,7 +50,7 @@ def dot(a: Column, b: Column) -> Column:
     )
 
 
-def arrow_pair_fold(kernel, nondeterministic: bool = False):
+def arrow_pair_fold(kernel):
     """Shared scaffolding for the Arrow-batched bit-identical fold twins
     (dot_pandas / clustering's squared-L2): stacks the two array columns
     to (n, dim) float64 matrices — float32→float64 widening is exact —
@@ -65,14 +79,8 @@ def arrow_pair_fold(kernel, nondeterministic: bool = False):
     correctly-rounded op per step (never matmul) to stay bit-identical
     to the interpreted JVM fold for all finite inputs.
 
-    ``nondeterministic=True`` marks the returned UDF non-deterministic —
-    ONLY for call sites where the plan audit showed the optimizer
-    duplicating the evaluation around a pushed filter (guide §4.4, the
-    banded_cosine_pairs refine). It is not the default because the
-    marking also breaks semantic plan equality, which disables AQE's
-    runtime exchange reuse and CacheManager matching for every plan the
-    expression appears in (measured: the kmeans assign fold, which has
-    NO duplication to fix, ran ~15% slower marked).
+    The returned UDF is deterministic; a call site whose plan duplicates
+    the evaluation marks it itself (``dot_pandas``).
     """
     from pyspark.sql.functions import pandas_udf
 
@@ -106,10 +114,10 @@ def arrow_pair_fold(kernel, nondeterministic: bool = False):
 
             return _pd.Series([one(v, w) for v, w in zip(sa, sb)])
 
-    return _fold.asNondeterministic() if nondeterministic else _fold
+    return _fold
 
 
-def dot_pandas(a: Column, b: Column, nondeterministic: bool = False) -> Column:
+def dot_pandas(a: Column, b: Column) -> Column:
     """``dot`` as an Arrow-batched pandas_udf, BIT-IDENTICAL to the JVM
     fold for finite inputs: one correctly-rounded product per dimension
     in ascending order — exactly ``acc + (xᵢ·yᵢ)`` — verified over the
@@ -123,7 +131,14 @@ def dot_pandas(a: Column, b: Column, nondeterministic: bool = False) -> Column:
     broadcast-unfold shapes (brute-force kNN 1.9x, IVF assign 1.35x,
     LSH refine 1.18x FASTER on the JVM fold) were reverted. Closure
     self-contained; edge policy (null/ragged/NaN/width-mismatch) in
-    ``arrow_pair_fold``."""
+    ``arrow_pair_fold``.
+
+    Marked non-deterministic: in the refine the threshold
+    filter otherwise planned ArrowEvalPython → Filter → ArrowEvalPython,
+    charging every surviving pair the dot twice (r14 plan audit). The
+    marking costs semantic plan equality (AQE exchange reuse, cache
+    matching), which is why ``arrow_pair_fold`` leaves it to this site
+    and clustering's squared-L2 stays deterministic."""
 
     def _kernel(_np, A, B):
         acc = _np.zeros(len(A))
@@ -131,7 +146,7 @@ def dot_pandas(a: Column, b: Column, nondeterministic: bool = False) -> Column:
             acc = acc + A[:, d] * B[:, d]
         return acc
 
-    return arrow_pair_fold(_kernel, nondeterministic=nondeterministic)(a, b)
+    return arrow_pair_fold(_kernel).asNondeterministic()(a, b)
 
 
 def norm(a: Column) -> Column:
@@ -146,6 +161,18 @@ def norm(a: Column) -> Column:
 
 def cosine(a: Column, b: Column) -> Column:
     return dot(a, b) / (norm(a) * norm(b))
+
+
+def _per_query_topk(
+    scored: DataFrame, query_id_col: str, score: Column, k: int
+) -> DataFrame:
+    """Number each query's candidates by ``score`` (ties to the smaller
+    neighbor_id) into ``rank`` and keep ranks <= k — the one top-k
+    every search operator here ends with."""
+    w = Window.partitionBy(query_id_col).orderBy(score, F.asc("neighbor_id"))
+    return scored.withColumn("rank", F.row_number().over(w)).filter(
+        F.col("rank") <= k
+    )
 
 
 def brute_force_topk(
@@ -187,18 +214,11 @@ def brute_force_topk(
             / (F.col("__qnorm") * F.col("__cnorm")),
         )
     )
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.desc("cosine_sim"), F.asc("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            query_id_col,
-            "neighbor_id",
-            "rank",
-            F.round("cosine_sim", 4).alias("cosine_sim"),
-        )
+    return _per_query_topk(scored, query_id_col, F.desc("cosine_sim"), k).select(
+        query_id_col,
+        "neighbor_id",
+        "rank",
+        F.round("cosine_sim", 4).alias("cosine_sim"),
     )
 
 
@@ -208,29 +228,6 @@ def normalize_embeddings(df: DataFrame, vec_col: str = "embedding") -> DataFrame
     return df.withColumn(
         vec_col, F.transform(F.col(vec_col), lambda x: x.cast("double") / n)
     )
-
-
-def normalize_embeddings_pandas(df: DataFrame, vec_col: str = "embedding") -> DataFrame:
-    """The same normalization as an Arrow-batched pandas_udf — the
-    vectorized-Python escape hatch (SURVEY §2.11) for math the built-ins
-    can't express. Kept alongside the JVM version so tests can assert the
-    two paths agree; the closure is self-contained (executors need no
-    package import)."""
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf("array<double>")
-    def _norm(s):
-        import numpy as _np
-
-        def one(v):
-            if v is None:
-                return None
-            a = _np.asarray(v, dtype=float)
-            return (a / _np.linalg.norm(a)).tolist()
-
-        return s.map(one)
-
-    return df.withColumn(vec_col, _norm(vec_col))
 
 
 def _hyperplanes(dim: int, n_planes: int, seed: int) -> list[list[float]]:
@@ -281,7 +278,6 @@ def banded_signatures_pandas(
     planes_per_band: int,
     n_bands: int,
     seed: int,
-    nondeterministic: bool = True,
 ) -> Column:
     """Band signatures via one Arrow-batched numpy matmul — the
     vectorized-Python escape hatch (SURVEY §2.11) for math Spark's
@@ -329,14 +325,11 @@ def banded_signatures_pandas(
     # audit: ArrowEvalPython at nodes 2 AND 6 of
     # plans/r14/x_hard_negatives_before.txt). The UDF never returns
     # null/empty for a non-null vector and posexplode skips null/empty
-    # anyway, so one evaluation yields identical rows. ``nondeterministic=
-    # False`` (r14 ADVICE, mirroring dot_pandas) is the opt-out for
-    # callers without the duplication shape who want plan equality (AQE
-    # exchange reuse / cache matching) back, or who place the call
-    # directly inside a Generate (ND there fails analysis).
-    if nondeterministic:
-        return _sigs.asNondeterministic()(vec_col)
-    return _sigs(vec_col)
+    # anyway, so one evaluation yields identical rows. Callers keep the
+    # call in a Project and explode the column reference: a
+    # non-deterministic expression directly inside Generate fails
+    # analysis.
+    return _sigs.asNondeterministic()(vec_col)
 
 
 def banded_cosine_pairs(
@@ -439,11 +432,9 @@ def banded_cosine_pairs(
             # dot_pandas, not dot: this is the one per-PAIR dot in the
             # module (every other call site is per-vector or against
             # literal planes) — the Arrow batch beats the interpreted
-            # HOF fold ~25% here, bit-identically (see dot_pandas)
-            # nondeterministic: the threshold filter otherwise planned
-            # ArrowEvalPython → Filter → ArrowEvalPython, charging every
-            # surviving pair the dot twice (r14 plan audit, §4.4)
-            dot_pandas(F.col("__ea"), F.col("__eb"), nondeterministic=True)
+            # HOF fold ~25% here, bit-identically; non-deterministic so
+            # the threshold filter evaluates it once (see dot_pandas)
+            dot_pandas(F.col("__ea"), F.col("__eb"))
             / (F.col("__na") * F.col("__nb")),
         )
         .filter(F.col("cosine_sim") >= threshold)
@@ -470,7 +461,6 @@ def lsh_signature(vec: Column, planes: list[list[float]]) -> Column:
 def table_signatures_pandas(
     vec_col: str | Column,
     planes_by_table: list[list[list[float]]],
-    nondeterministic: bool = True,
 ) -> Column:
     """All hash-table bucket ids in one Arrow batch, BIT-IDENTICAL to
     ``lsh_signature`` per table: projections accumulate one correctly-
@@ -534,11 +524,8 @@ def table_signatures_pandas(
     # below the nearest exchange. Callers must keep the UDF inside a
     # Project (materialize the array column first, then explode the
     # column reference) — a non-deterministic expression directly
-    # inside Generate fails analysis. ``nondeterministic=False`` is the
-    # opt-out mirroring dot_pandas/banded_signatures_pandas (r14 ADVICE).
-    if nondeterministic:
-        return _sigs.asNondeterministic()(vec_col)
-    return _sigs(vec_col)
+    # inside Generate fails analysis.
+    return _sigs.asNondeterministic()(vec_col)
 
 
 def _ivf_centroids(
@@ -675,36 +662,20 @@ def ivf_assign_ids_pandas(
 def _ivf_assign(
     df: DataFrame,
     centroids: DataFrame,
-    idc: str,
     vec: str,
     keep: int,
-    arrow: bool = True,
     cents: list[tuple[int, list[float]]] | None = None,
 ) -> DataFrame:
     """Cell assignment: argmax-dot against the centroid set, tie-broken
     by centroid_id; ``keep`` = 1 assigns (corpus side), ``keep`` =
     n_probe probes (query side).
 
-    Default (``arrow=True``): the centroids become closure literals of
-    one Arrow batch kernel (ivf_assign_ids_pandas) — the bounded
-    ≤ n_centroids-row collect is the same build-side driver hop
-    pq_codebooks already makes, and it replaces a |df|×k wide-row
-    window shuffle with a per-row map (round-15; VERDICT r14 task 4).
-    ``cents`` lets a caller that assigns twice (ivf_topk, ivfpq_topk)
-    collect once. ``arrow=False`` keeps the expression reference the
-    twin is pinned against."""
-    if not arrow:
-        scored = df.crossJoin(F.broadcast(centroids)).withColumn(
-            "__cd", dot(F.col(vec), F.col("__centroid"))
-        )
-        w = Window.partitionBy(idc).orderBy(
-            F.desc("__cd"), F.asc("centroid_id")
-        )
-        return (
-            scored.withColumn("__cr", F.row_number().over(w))
-            .filter(F.col("__cr") <= keep)
-            .drop("__centroid", "__cd", "__cr")
-        )
+    The centroids become closure literals of one Arrow batch kernel
+    (ivf_assign_ids_pandas) — the bounded ≤ n_centroids-row collect is
+    the same build-side driver hop pq_codebooks already makes, and it
+    replaces a |df|×k wide-row window shuffle with a per-row map
+    (round 15). ``cents`` lets a caller that assigns
+    twice (ivf_topk, ivfpq_topk) collect once."""
     if cents is None:
         cents = collect_centroids(centroids)
     out = df.withColumn(
@@ -717,6 +688,24 @@ def _ivf_assign(
     return out.select(
         *df.columns, F.explode("__cids").alias("centroid_id")
     ).drop("__cids")
+
+
+def _ivf_assign_expr(
+    df: DataFrame, centroids: DataFrame, idc: str, vec: str, keep: int
+) -> DataFrame:
+    """``_ivf_assign`` as the interpreted expression it replaced:
+    crossJoin(broadcast(centroids)) → dot fold → row_number window
+    (dot DESC, centroid_id ASC) ≤ keep. The reference
+    ivf_assign_ids_pandas is pinned against."""
+    scored = df.crossJoin(F.broadcast(centroids)).withColumn(
+        "__cd", dot(F.col(vec), F.col("__centroid"))
+    )
+    w = Window.partitionBy(idc).orderBy(F.desc("__cd"), F.asc("centroid_id"))
+    return (
+        scored.withColumn("__cr", F.row_number().over(w))
+        .filter(F.col("__cr") <= keep)
+        .drop("__centroid", "__cd", "__cr")
+    )
 
 
 def collect_centroids(centroids: DataFrame) -> list[tuple[int, list[float]]]:
@@ -759,27 +748,22 @@ def ivf_topk(
     cents = collect_centroids(centroids)  # one bounded collect, two assigns
     c_assigned = _ivf_assign(
         corpus.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("__cvec")),
-        centroids, "neighbor_id", "__cvec", 1, cents=cents,
+        centroids, "__cvec", 1, cents=cents,
     )
     q_probes = _ivf_assign(
         queries.select(F.col(id_col).alias(query_id_col), F.col(vec_col).alias("__qvec")),
-        centroids, query_id_col, "__qvec", n_probe, cents=cents,
+        centroids, "__qvec", n_probe, cents=cents,
     )
 
     cand = c_assigned.join(q_probes, "centroid_id").filter(
         F.col("neighbor_id") != F.col(query_id_col)
     )
     scored = cand.withColumn("cosine_sim", cosine(F.col("__qvec"), F.col("__cvec")))
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.desc("cosine_sim"), F.asc("neighbor_id")
-    )
     sim_out = (
         F.col("cosine_sim") if portable else F.round("cosine_sim", 4)
     ).alias("cosine_sim")
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(query_id_col, "neighbor_id", "rank", sim_out)
+    return _per_query_topk(scored, query_id_col, F.desc("cosine_sim"), k).select(
+        query_id_col, "neighbor_id", "rank", sim_out
     )
 
 
@@ -901,21 +885,6 @@ def ivf_recall_at_k(
     return _recall_accounting(bf, ann)
 
 
-def _books_literal(codebooks: list[list[list[float]]]) -> Column:
-    """The M×K×d codebooks as ONE nested array literal column."""
-    return F.array(
-        *[
-            F.array(
-                *[
-                    F.array(*[F.lit(float(x)) for x in cent])
-                    for cent in book
-                ]
-            )
-            for book in codebooks
-        ]
-    )
-
-
 def pq_dists_pandas(
     vec_col: Column, codebooks: list[list[list[float]]]
 ) -> Column:
@@ -967,12 +936,15 @@ def pq_dists_pandas(
     return _tables(vec_col)
 
 
-def _pq_subspace_dists(vec: Column, books: Column, d: int) -> Column:
+def _pq_subspace_dists(
+    vec: Column, codebooks: list[list[list[float]]]
+) -> Column:
     """M×K squared-L2 distances of ``vec``'s subvectors to every
     codebook centroid, as ONE nested-HOF expression: transform over
     subspaces (index m slices the vector) × transform over centroids ×
     an ordered (x-y)² fold. The expression SIZE is constant in (M, K)
-    — the data lives in the codebook literal, not the plan. The first
+    — the data lives in one nested-array codebook literal, not the
+    plan. The reference ``pq_dists_pandas`` is pinned against. The first
     formulation built M·K separate aggregate subtrees per projection
     and OOM'd the executor heap at M=32, K=32 (round-10 measurement);
     this one is the same math in a fixed-shape tree. The fold is in
@@ -985,6 +957,13 @@ def _pq_subspace_dists(vec: Column, books: Column, d: int) -> Column:
     vector would silently encode to valid-looking leading codes (the
     slice of a 7-dim vector against 64-dim codebooks still folds its
     first subspaces) — the round-10 ADVICE finding."""
+    d = len(codebooks[0][0])
+    books = F.array(
+        *[
+            F.array(*[F.array(*[F.lit(float(x)) for x in c]) for c in book])
+            for book in codebooks
+        ]
+    )
     return F.when(
         vec.isNotNull() & (F.size(vec) == F.size(books) * d),
         F.transform(
@@ -1003,6 +982,44 @@ def _pq_subspace_dists(vec: Column, books: Column, d: int) -> Column:
             ),
         ),
     ).otherwise(F.lit(None).cast("array<array<double>>"))
+
+
+def _adc_approx_expr() -> Column:
+    """The ADC score: ordered M-term fold of per-subspace table lookups
+    — expects `codes` (int array) and `__qt` (M×K double table) columns
+    in scope. One definition for the inline and the prebuilt-index
+    serve paths, so the fold order (and therefore every double) cannot
+    diverge between them."""
+    return F.aggregate(
+        F.zip_with(
+            F.col("codes"),
+            F.col("__qt"),
+            lambda c, t: F.element_at(t, c + 1),
+        ),
+        F.lit(0.0),
+        lambda acc, v: acc + v,
+    )
+
+
+def _query_adc_tables(
+    queries: DataFrame,
+    books: list[list[list[float]]],
+    id_col: str,
+    vec_col: str,
+    query_id_col: str,
+) -> DataFrame:
+    """(query_id, __qt): each query's M×K ADC table, computed from its
+    UNIT-NORMALIZED vector — the PQ contract the codes were encoded
+    under. Shared by pq_topk, ivfpq_topk and ivfpq_serve_topk."""
+    qn = normalize_embeddings(
+        queries.select(
+            F.col(id_col).alias(query_id_col), F.col(vec_col).alias("__v")
+        ),
+        "__v",
+    )
+    return qn.select(
+        F.col(query_id_col), pq_dists_pandas(F.col("__v"), books).alias("__qt")
+    )
 
 
 def pq_codebooks(
@@ -1051,7 +1068,6 @@ def pq_encode(
     codebooks: list[list[list[float]]],
     vec_col: str = "embedding",
     out_col: str = "codes",
-    arrow: bool = True,
 ) -> DataFrame:
     """Attach the M-byte PQ code array: per subspace, the index of the
     nearest codebook centroid (squared L2, FIRST minimum on ties —
@@ -1063,14 +1079,8 @@ def pq_encode(
     ingest: dim doubles (512 B at dim=64) become M small ints, and the
     ADC scan (pq_topk) reads ~16× fewer bytes per candidate.
     """
-    d = len(codebooks[0][0])
-    dists = (
-        pq_dists_pandas(F.col(vec_col), codebooks)
-        if arrow
-        else _pq_subspace_dists(F.col(vec_col), _books_literal(codebooks), d)
-    )
     return (
-        df.withColumn("__pq_dists", dists)
+        df.withColumn("__pq_dists", pq_dists_pandas(F.col(vec_col), codebooks))
         .withColumn(
             out_col,
             F.transform(
@@ -1094,7 +1104,6 @@ def pq_topk(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     query_id_col: str = "query_id",
-    arrow: bool = True,
 ) -> DataFrame:
     """Product-quantization ANN top-k via asymmetric distance
     computation (ADC): corpus vectors are PQ-encoded to M-code arrays;
@@ -1120,7 +1129,6 @@ def pq_topk(
         corpus, id_col=id_col, vec_col=vec_col, dim=dim,
         m_subspaces=m_subspaces, k_codes=k_codes,
     )
-    d = len(books[0][0])
     enc = pq_encode(
         normalize_embeddings(
             _ensure_parallelism(
@@ -1133,41 +1141,15 @@ def pq_topk(
         ),
         books,
         "__v",
-        arrow=arrow,
     ).select("neighbor_id", "codes")
-    qn = normalize_embeddings(
-        queries.select(
-            F.col(id_col).alias(query_id_col), F.col(vec_col).alias("__v")
-        ),
-        "__v",
-    )
-    tables = (
-        pq_dists_pandas(F.col("__v"), books)
-        if arrow
-        else _pq_subspace_dists(F.col("__v"), _books_literal(books), d)
-    )
-    q = qn.select(F.col(query_id_col), tables.alias("__qt"))
-    approx = F.aggregate(
-        F.zip_with(
-            F.col("codes"),
-            F.col("__qt"),
-            lambda c, t: F.element_at(t, c + 1),
-        ),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
+    q = _query_adc_tables(queries, books, id_col, vec_col, query_id_col)
     scored = (
         enc.crossJoin(F.broadcast(q))
         .filter(F.col("neighbor_id") != F.col(query_id_col))
-        .withColumn("approx_sq_l2", approx)
+        .withColumn("approx_sq_l2", _adc_approx_expr())
     )
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.asc("approx_sq_l2"), F.asc("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(query_id_col, "neighbor_id", "rank", "approx_sq_l2")
+    return _per_query_topk(scored, query_id_col, F.asc("approx_sq_l2"), k).select(
+        query_id_col, "neighbor_id", "rank", "approx_sq_l2"
     )
 
 
@@ -1181,7 +1163,6 @@ def pq_recall_at_k(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     sample_fraction: float | None = None,
-    arrow: bool = True,
 ) -> DataFrame:
     """Recall@k scorecard for the PQ/ADC path against exact brute
     force — the third leg of the retrieval-quality tier (LSH tables,
@@ -1195,7 +1176,7 @@ def pq_recall_at_k(
     bf = brute_force_topk(corpus, queries, k=k, id_col=id_col, vec_col=vec_col)
     ann = pq_topk(
         corpus, queries, k=k, dim=dim, m_subspaces=m_subspaces,
-        k_codes=k_codes, id_col=id_col, vec_col=vec_col, arrow=arrow,
+        k_codes=k_codes, id_col=id_col, vec_col=vec_col,
     )
     return _recall_accounting(bf, ann)
 
@@ -1212,7 +1193,6 @@ def ivfpq_topk(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     query_id_col: str = "query_id",
-    arrow: bool = True,
 ) -> DataFrame:
     """IVF × PQ composed ANN top-k — the actual 100 TB architecture
     (pq_topk's own docstring prescribes it: "compose with IVF cells
@@ -1251,7 +1231,6 @@ def ivfpq_topk(
         corpus, id_col=id_col, vec_col=vec_col, dim=dim,
         m_subspaces=m_subspaces, k_codes=k_codes,
     )
-    d = len(books[0][0])
     # corpus: ONE cell per vector (raw-vector argmax dot — the IVF
     # contract) + M PQ codes from the normalized vector (the PQ
     # contract). Both are ingest-time map-side work at scale.
@@ -1260,44 +1239,28 @@ def ivfpq_topk(
         corpus.select(
             F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("__v")
         ),
-        centroids, "neighbor_id", "__v", 1, cents=cents,
+        centroids, "__v", 1, cents=cents,
     )
     enc = pq_encode(
-        normalize_embeddings(c_assigned, "__v"), books, "__v", arrow=arrow
+        normalize_embeddings(c_assigned, "__v"), books, "__v"
     ).select("neighbor_id", "centroid_id", "codes")
     probes = _ivf_assign(
         queries.select(
             F.col(id_col).alias(query_id_col), F.col(vec_col).alias("__v")
         ),
-        centroids, query_id_col, "__v", n_probe, cents=cents,
+        centroids, "__v", n_probe, cents=cents,
     ).select(query_id_col, "centroid_id")
-    qn = normalize_embeddings(
-        queries.select(
-            F.col(id_col).alias(query_id_col), F.col(vec_col).alias("__v")
-        ),
-        "__v",
-    )
-    tables = (
-        pq_dists_pandas(F.col("__v"), books)
-        if arrow
-        else _pq_subspace_dists(F.col("__v"), _books_literal(books), d)
-    )
     # the M×K table is computed ONCE per query (not once per probe row)
     # and re-attached by query_id after the cell equi-join
-    qt = qn.select(F.col(query_id_col), tables.alias("__qt"))
+    qt = _query_adc_tables(queries, books, id_col, vec_col, query_id_col)
     scored = (
         enc.join(F.broadcast(probes), "centroid_id")
         .filter(F.col("neighbor_id") != F.col(query_id_col))
         .join(F.broadcast(qt), query_id_col)
         .withColumn("approx_sq_l2", _adc_approx_expr())
     )
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.asc("approx_sq_l2"), F.asc("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(query_id_col, "neighbor_id", "rank", "approx_sq_l2")
+    return _per_query_topk(scored, query_id_col, F.asc("approx_sq_l2"), k).select(
+        query_id_col, "neighbor_id", "rank", "approx_sq_l2"
     )
 
 
@@ -1334,7 +1297,7 @@ def ivf_cell_stats(
         corpus.select(
             F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("__v")
         ),
-        centroids, "neighbor_id", "__v", 1,
+        centroids, "__v", 1,
     )
     return (
         assigned.groupBy("centroid_id")
@@ -1350,23 +1313,6 @@ def ivf_cell_stats(
                 / F.lit(float(total))
             ).alias("occupancy_ratio"),
         )
-    )
-
-
-def _adc_approx_expr() -> Column:
-    """The ADC score: ordered M-term fold of per-subspace table lookups
-    — expects `codes` (int array) and `__qt` (M×K double table) columns
-    in scope. One definition for the inline and the prebuilt-index
-    serve paths, so the fold order (and therefore every double) cannot
-    diverge between them."""
-    return F.aggregate(
-        F.zip_with(
-            F.col("codes"),
-            F.col("__qt"),
-            lambda c, t: F.element_at(t, c + 1),
-        ),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
     )
 
 
@@ -1422,7 +1368,7 @@ def ivfpq_index_build(
                     "vec_hash",
                     F.xxhash64(F.col("neighbor_id"), F.col("__v")),
                 ),
-                centroids, "neighbor_id", "__v", 1,
+                centroids, "__v", 1,
             ),
             "__v",
         ),
@@ -1457,7 +1403,6 @@ def ivfpq_serve_topk(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     query_id_col: str = "query_id",
-    arrow: bool = True,
 ) -> DataFrame:
     """Serve top-k from a prebuilt ivfpq_index_build index — the query
     half of build-once / serve-many, bit-identical to the inline
@@ -1485,7 +1430,6 @@ def ivfpq_serve_topk(
         with open(os.path.join(index_dir, "model.json")) as f:
             model = json.load(f)
     books = model["codebooks"]
-    d = len(books[0][0])
     cent_df = spark.createDataFrame(
         [(int(cid), list(map(float, vec))) for cid, vec in model["centroids"]],
         schema="centroid_id long, __centroid array<double>",
@@ -1494,7 +1438,7 @@ def ivfpq_serve_topk(
         queries.select(
             F.col(id_col).alias(query_id_col), F.col(vec_col).alias("__v")
         ),
-        cent_df, query_id_col, "__v", n_probe,
+        cent_df, "__v", n_probe,
         # the model already holds the centroids driver-side — no collect
         cents=sorted(
             (int(cid), [float(x) for x in vec])
@@ -1510,31 +1454,15 @@ def ivfpq_serve_topk(
     codes = spark.read.parquet(os.path.join(index_dir, "codes")).filter(
         F.col("centroid_id").isin(probed)
     )
-    qn = normalize_embeddings(
-        queries.select(
-            F.col(id_col).alias(query_id_col), F.col(vec_col).alias("__v")
-        ),
-        "__v",
-    )
-    tables = (
-        pq_dists_pandas(F.col("__v"), books)
-        if arrow
-        else _pq_subspace_dists(F.col("__v"), _books_literal(books), d)
-    )
-    qt = qn.select(F.col(query_id_col), tables.alias("__qt"))
+    qt = _query_adc_tables(queries, books, id_col, vec_col, query_id_col)
     scored = (
         codes.join(F.broadcast(probes), "centroid_id")
         .filter(F.col("neighbor_id") != F.col(query_id_col))
         .join(F.broadcast(qt), query_id_col)
         .withColumn("approx_sq_l2", _adc_approx_expr())
     )
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.asc("approx_sq_l2"), F.asc("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(query_id_col, "neighbor_id", "rank", "approx_sq_l2")
+    return _per_query_topk(scored, query_id_col, F.asc("approx_sq_l2"), k).select(
+        query_id_col, "neighbor_id", "rank", "approx_sq_l2"
     )
 
 
@@ -1619,7 +1547,6 @@ def ivfpq_recall_at_k(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     sample_fraction: float | None = None,
-    arrow: bool = True,
 ) -> DataFrame:
     """Recall@k scorecard for the composed IVF×PQ path against exact
     brute force — the quality dial for the full production ANN stack.
@@ -1635,7 +1562,7 @@ def ivfpq_recall_at_k(
     ann = ivfpq_topk(
         corpus, queries, k=k, n_centroids=n_centroids, n_probe=n_probe,
         dim=dim, m_subspaces=m_subspaces, k_codes=k_codes,
-        id_col=id_col, vec_col=vec_col, arrow=arrow,
+        id_col=id_col, vec_col=vec_col,
     )
     return _recall_accounting(bf, ann)
 
@@ -1730,16 +1657,11 @@ def lsh_bucketed_topk(
             / (F.col("__qn") * F.col("__cn")),
         )
     )
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.desc("cosine_sim"), F.asc("neighbor_id")
-    )
     # raw doubles in portable mode — display rounding would break the
     # oracle hash (Spark and DuckDB round .xx5 boundaries differently)
     sim_out = (
         F.col("cosine_sim") if portable else F.round("cosine_sim", 4)
     ).alias("cosine_sim")
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(query_id_col, "neighbor_id", "rank", sim_out)
+    return _per_query_topk(scored, query_id_col, F.desc("cosine_sim"), k).select(
+        query_id_col, "neighbor_id", "rank", sim_out
     )

@@ -112,8 +112,8 @@ def gate_batch(
     meta-resolved value), else the prune is SKIPPED entirely: a full
     index scan is correct, just unpruned — never a correctness trade.
     With ``index_dir`` the meta's recorded banding parameters must also
-    equal this call's (``ValueError`` otherwise — see
-    ``_check_banding``).
+    equal this call's, and an index without a complete meta is refused
+    (``ValueError`` either way — see ``_check_meta``).
     The batch side of the corpus join is broadcast unless
     ``broadcast_batch=False``.
     ``_persist_registry`` (internal): when a list is passed, the pair
@@ -162,14 +162,12 @@ def gate_batch(
             bb = bb.localCheckpoint()
     if index_bands is not None:
         idx = index_bands
-        meta = (
-            _read_meta(batch.sparkSession, index_dir)
-            if index_dir is not None
-            else None
-        )
-        if meta is not None:
-            _check_banding(meta, _banding(num_hashes, bands, n, seed), index_dir)
-            if "band_bucket" in idx.columns and "index_buckets" in meta:
+        if index_dir is not None:
+            meta = _check_meta(
+                _read_meta(batch.sparkSession, index_dir), index_dir,
+                _banding(num_hashes, bands, n, seed),
+            )
+            if "band_bucket" in idx.columns:
                 on_disk = int(meta["index_buckets"])
                 if index_buckets is not None and int(index_buckets) != on_disk:
                     raise ValueError(
@@ -313,43 +311,35 @@ def make_near_dup_gate(
     ``<dir>/ingest_batch=<id>`` with overwrite (idempotent on retry);
     the index additionally partitions by ``band_bucket`` so later
     batches' candidate joins prune their read to the buckets they
-    probe. Two layout-consistency rules (review findings):
+    probe. The index's ``_gate_meta.json``, written on the first batch,
+    is the source of truth for the layout:
 
-    - the bucket MODULUS comes from the index's ``_gate_meta.json``
-      once one exists (written on the first bucketed write) — a caller
-      whose ``index_buckets`` disagrees with the on-disk layout would
-      otherwise prune true candidate partitions and silently
-      double-admit;
-    - a LEGACY (pre-bucketing, flat) index keeps receiving FLAT writes:
-      Spark cannot read a tree that mixes ``ingest_batch=N`` and
-      ``ingest_batch=M/band_bucket=K`` partitions (it raises
-      CONFLICTING_PARTITION_COLUMN_NAMES, wedging every later batch),
-      so the layout only upgrades atomically via ``compact_index``;
+    - the bucket MODULUS: a caller whose ``index_buckets`` disagrees
+      with the on-disk layout would otherwise prune true candidate
+      partitions and silently double-admit;
     - the BANDING parameters (``num_hashes``, ``bands``, ``n``, ``seed``
-      and the hash family) are recorded in the same meta on the first
-      write and every later batch must match them (``ValueError``
-      otherwise): band hashes from another parameter set never collide
-      with the stored ones, so a mismatched gate would silently
-      double-admit. A meta without them (written before they were
-      recorded, possibly by the retired xxhash64 family) raises too —
-      rebuild that index rather than guess how it was banded. A flat
-      pre-bucketing index predates the meta altogether; its first
-      gate write records the gate's own parameters."""
+      and the hash family): every later batch must match them
+      (``ValueError`` otherwise) — band hashes from another parameter
+      set never collide with the stored ones, so a mismatched gate
+      would silently double-admit.
+
+    An existing index without a complete meta raises ``ValueError``
+    (``_check_meta``): it predates the recorded layout (a flat
+    pre-bucketing index, possibly banded by the retired xxhash64 family
+    or with other parameters) — rebuild it rather than guess how it was
+    banded."""
     banding = _banding(num_hashes, bands, n, seed)
 
     def process(batch: DataFrame, batch_id: int) -> None:
         spark = batch.sparkSession
         index = _read_index(spark, index_dir, batch_id)
-        legacy = index is not None and "band_bucket" not in index.columns
         meta = _read_meta(spark, index_dir)
-        if meta is None:
-            meta = dict(banding)
-            if not legacy:
-                meta["index_buckets"] = int(index_buckets)
+        if meta is None and index is None:  # the first batch
+            meta = {**banding, "index_buckets": int(index_buckets)}
             _write_meta(spark, index_dir, meta)
         else:
-            _check_banding(meta, banding, index_dir)
-        n_buckets = meta.get("index_buckets", index_buckets)
+            _check_meta(meta, index_dir, banding)
+        n_buckets = int(meta["index_buckets"])
         batch = batch.persist()
         # persist the banded signatures ONCE: the index, admitted, and
         # rejected writes all hang off them, and without this each write
@@ -367,25 +357,19 @@ def make_near_dup_gate(
             )
             admitted_bands = admitted_bands.persist()
             try:
-                if legacy:
-                    admitted_bands.write.mode("overwrite").parquet(
-                        f"{index_dir}/ingest_batch={batch_id}"
-                    )
-                else:
-                    # repartition by bucket before the partitioned
-                    # write: partitionBy alone writes one file per
-                    # (task x bucket) — measured 4,608 files for 5
-                    # batches at 32 tasks; the batch-sized shuffle
-                    # collapses that to one file per OCCUPIED bucket
-                    # per batch (<= n_buckets)
-                    admitted_bands.withColumn(
-                        "band_bucket",
-                        F.pmod(F.col("band_hash"), F.lit(int(n_buckets))),
-                    ).repartition(F.col("band_bucket")).write.mode(
-                        "overwrite"
-                    ).partitionBy("band_bucket").parquet(
-                        f"{index_dir}/ingest_batch={batch_id}"
-                    )
+                # repartition by bucket before the partitioned write:
+                # partitionBy alone writes one file per (task x bucket)
+                # — measured 4,608 files for 5 batches at 32 tasks; the
+                # batch-sized shuffle collapses that to one file per
+                # OCCUPIED bucket per batch (<= n_buckets)
+                admitted_bands.withColumn(
+                    "band_bucket",
+                    F.pmod(F.col("band_hash"), F.lit(n_buckets)),
+                ).repartition(F.col("band_bucket")).write.mode(
+                    "overwrite"
+                ).partitionBy("band_bucket").parquet(
+                    f"{index_dir}/ingest_batch={batch_id}"
+                )
                 admitted.write.mode("overwrite").parquet(
                     f"{admitted_dir}/ingest_batch={batch_id}"
                 )
@@ -432,22 +416,35 @@ def _banding(num_hashes: int, bands: int, n: int, seed: int) -> dict:
     }
 
 
-def _check_banding(meta: dict, banding: dict, index_dir: str) -> None:
-    """Raise unless the index meta records exactly ``banding``."""
-    missing = sorted(set(banding) - set(meta))
+#: what every gate meta records: the banding parameters and the modulus
+_META_KEYS = frozenset(_banding(0, 0, 0, 0)) | {"index_buckets"}
+
+
+def _check_meta(
+    meta: dict | None, index_dir: str, banding: dict | None = None
+) -> dict:
+    """Return the meta of an existing index. ``ValueError`` when it is
+    absent or lacks a key — the index predates the recorded layout and
+    banding parameters (a flat pre-bucketing index, or one whose band
+    hashes may come from the retired xxhash64 family), so nothing can
+    vouch for how it was banded — or, given ``banding``, when it
+    records other banding parameters."""
+    missing = sorted(_META_KEYS - set(meta or {}))
     if missing:
         raise ValueError(
             f"the index at {index_dir} records no {missing} in "
-            f"{_GATE_META}: it predates recorded banding parameters and "
-            "may hold another hash family's band hashes — rebuild it"
+            f"{_GATE_META}: it predates the recorded layout and banding "
+            "parameters and may hold another hash family's band hashes "
+            "— rebuild it"
         )
-    recorded = {k: meta[k] for k in banding}
-    if recorded != banding:
+    recorded = {k: meta[k] for k in banding or ()}
+    if recorded != (banding or {}):
         raise ValueError(
             f"the index at {index_dir} was banded with {recorded}, not "
             f"{banding}: its band hashes can never collide with this "
             "gate's, so every duplicate would be admitted"
         )
+    return meta
 
 
 def _read_meta(spark: SparkSession, index_dir: str) -> dict | None:
@@ -504,7 +501,6 @@ def compact_index(
     index_dir: str,
     upto_batch: int,
     id_col: str = "doc_id",
-    index_buckets: int = INDEX_BUCKETS,
 ) -> dict:
     """Fold the committed ``ingest_batch`` partitions (id <=
     ``upto_batch``), any existing base, and any crashed staging into ONE
@@ -539,43 +535,16 @@ def compact_index(
     Only fold batch ids the stream has MOVED PAST (a retry of batch b
     overwrites ``ingest_batch=b``, which must not race the fold) — the
     caller owns that watermark, e.g. ``upto_batch = current - 1``.
-    Migrating a LEGACY (flat) index must fold EVERYTHING (``upto_batch``
-    at least the max id): a bucketed base next to flat stragglers is the
-    mixed partition tree Spark refuses to read (review finding), so
-    the fold raises instead of wedging the gate. The bucket modulus
-    comes from ``_gate_meta.json`` when present and is recorded there
-    after a migration; the banding parameters the meta records are kept
-    as they are (compaction never re-bands). Returns {folded_partitions, rows, files_before,
+    An index without a complete ``_gate_meta.json`` raises
+    ``ValueError`` (``_check_meta``); compaction never re-bands, so the
+    meta stays as it is. Returns {folded_partitions, rows, files_before,
     files_after}."""
     files_before = _count_index_files(spark, index_dir)
     idx = spark.read.option("basePath", index_dir).parquet(index_dir)
-    meta = _read_meta(spark, index_dir) or {}
-    if "index_buckets" in meta:
-        index_buckets = int(meta["index_buckets"])
+    _check_meta(_read_meta(spark, index_dir), index_dir)
     all_ids = [
         r[0] for r in idx.select("ingest_batch").distinct().collect()
     ]
-    legacy = "band_bucket" not in idx.columns
-    stragglers = [
-        b for b in all_ids
-        if b > upto_batch
-        and b not in (COMPACT_BASE_BATCH, _COMPACT_STAGING_BATCH)
-    ]
-    if legacy and stragglers:
-        raise ValueError(
-            "compact_index: migrating a flat (pre-bucketing) index must "
-            f"fold every partition, but ids {sorted(stragglers)} exceed "
-            f"upto_batch={upto_batch}; a bucketed base next to flat "
-            "partitions is unreadable (CONFLICTING_PARTITION_COLUMN_"
-            "NAMES). Re-run with upto_batch >= the max ingest_batch id."
-        )
-    # pre-bucketing (wholly legacy) indexes migrate here: derive the
-    # bucket from band_hash (the layout didn't carry it)
-    if legacy:
-        idx = idx.withColumn(
-            "band_bucket",
-            F.pmod(F.col("band_hash"), F.lit(int(index_buckets))),
-        )
     fold_ids = sorted(
         b for b in all_ids
         if b <= upto_batch or b in (
@@ -622,12 +591,6 @@ def compact_index(
     base = Path(f"{index_dir}/ingest_batch={COMPACT_BASE_BATCH}")
     if not fs.rename(staging, base):
         raise IOError(f"compact_index: rename {staging} -> {base} failed")
-    if "index_buckets" not in meta:
-        # record the modulus the (possibly migrated) layout now uses,
-        # keeping whatever banding parameters the meta already records
-        _write_meta(
-            spark, index_dir, {**meta, "index_buckets": int(index_buckets)}
-        )
     return {
         "folded_partitions": len(fold_ids),
         "rows": rows,

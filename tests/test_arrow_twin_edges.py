@@ -1,10 +1,12 @@
-"""Edge-policy pins for the Arrow-batched bit-identical twins.
+"""Bit-identity and edge-policy pins for the Arrow-batched twins.
 
-The four pandas_udf twins (similarity.dot_pandas, clustering._sq_l2_pandas,
-similarity.table_signatures_pandas / banded_signatures_pandas,
-similarity.normalize_embeddings_pandas) advertise bit-identity to their JVM
-folds FOR FINITE INPUTS. This module feeds literal NaN / Inf / NULL /
-width-mismatched vectors through BOTH sides and pins the documented edge
+Every pandas_udf that runs in production (similarity.dot_pandas,
+table_signatures_pandas, banded_signatures_pandas, ivf_assign_ids_pandas,
+pq_dists_pandas, clustering._sq_l2_pandas and dedup's MinHash kernel) runs
+on ONE path and advertises bit-identity to an interpreted expression kept
+beside it, FOR FINITE INPUTS. This module pins each twin against that
+expression on real fixtures, and feeds literal NaN / Inf / NULL /
+width-mismatched vectors through BOTH sides to pin the documented edge
 policy, so a future Arrow-serializer or numpy change cannot silently flip
 ranking or bucketing behavior:
 
@@ -41,10 +43,11 @@ from sportstv_streaming_data_warehouse_spark.operators.similarity import (
     dot_pandas,
     lcg_plane,
     lsh_signature,
-    normalize_embeddings,
-    normalize_embeddings_pandas,
     table_signatures_pandas,
 )
+from sportstv_streaming_data_warehouse_spark.sources.fixtures import load_table
+
+from .conftest import SF001, SF01
 
 NAN, INF = float("nan"), float("inf")
 
@@ -139,30 +142,6 @@ def test_signature_twins_edge_policy(spark):
     assert r["tw_sig"] is None and r["tw_band"] is None
 
 
-def test_normalize_twin_edge_policy(spark):
-    df = spark.createDataFrame(
-        [(1, [3.0, 4.0]), (2, [NAN, 1.0]), (3, [INF, 1.0]), (4, None)],
-        "id long, embedding array<double>",
-    )
-    jvm = {
-        r["id"]: r["embedding"]
-        for r in normalize_embeddings(df).collect()
-    }
-    tw = {
-        r["id"]: r["embedding"]
-        for r in normalize_embeddings_pandas(df).collect()
-    }
-    assert jvm[1] == tw[1] == [0.6, 0.8]
-    # NaN norm poisons every element JVM-side; the twin's NaN elements map
-    # to NULL through the Arrow list serializer — same safe direction,
-    # element-wise
-    assert all(math.isnan(x) for x in jvm[2]) and tw[2] == [None, None]
-    # Inf: inf/inf = NaN, 1/inf = 0.0 — the finite elements still agree
-    assert math.isnan(jvm[3][0]) and jvm[3][1] == 0.0
-    assert tw[3] == [None, 0.0]
-    assert jvm[4] is None and tw[4] is None
-
-
 def test_minhash_slots_twin_matches_expression_slots(spark):
     """The batch-vectorised Arrow signature kernel must be
     bit-identical to the array_min(transform(...)) expression stack on
@@ -174,6 +153,7 @@ def test_minhash_slots_twin_matches_expression_slots(spark):
     deterministic signature — established expression semantics the
     oracle replays, which the twin must reproduce exactly."""
     from sportstv_streaming_data_warehouse_spark.operators.dedup import (
+        _minhash_signature_expr,
         minhash_signature,
     )
 
@@ -191,11 +171,11 @@ def test_minhash_slots_twin_matches_expression_slots(spark):
     )
     expr = {
         r["doc_id"]: r["signature"]
-        for r in minhash_signature(docs, "doc_id", "text", arrow=False).collect()
+        for r in _minhash_signature_expr(docs, "doc_id", "text").collect()
     }
     twin = {
         r["doc_id"]: r["signature"]
-        for r in minhash_signature(docs, "doc_id", "text", arrow=True).collect()
+        for r in minhash_signature(docs, "doc_id", "text").collect()
     }
     assert expr == twin
     # near-dup docs share most slots
@@ -276,6 +256,7 @@ def test_poly_minhash_twin_matches_expression_portable_path(spark):
     must bound it), and both shingle widths the catalog uses (n=1
     gate/incremental, n=3 default)."""
     from sportstv_streaming_data_warehouse_spark.operators.dedup import (
+        _minhash_signature_expr,
         minhash_signature,
     )
 
@@ -297,15 +278,13 @@ def test_poly_minhash_twin_matches_expression_portable_path(spark):
     for n in (1, 3):
         expr = {
             r["doc_id"]: r["signature"]
-            for r in minhash_signature(
-                docs, "doc_id", "text", n=n, arrow=False
+            for r in _minhash_signature_expr(
+                docs, "doc_id", "text", n=n
             ).collect()
         }
         twin = {
             r["doc_id"]: r["signature"]
-            for r in minhash_signature(
-                docs, "doc_id", "text", n=n, arrow=True
-            ).collect()
+            for r in minhash_signature(docs, "doc_id", "text", n=n).collect()
         }
         assert expr == twin, f"n={n}"
 
@@ -321,6 +300,7 @@ def test_ivf_assign_twin_matches_expression_path(spark):
     (module policy above) and are pinned separately below."""
     from sportstv_streaming_data_warehouse_spark.operators.similarity import (
         _ivf_assign,
+        _ivf_assign_expr,
         collect_centroids,
     )
 
@@ -348,16 +328,15 @@ def test_ivf_assign_twin_matches_expression_path(spark):
     for keep in (1, 3):
         expr = sorted(
             (r["vec_id"], r["centroid_id"])
-            for r in _ivf_assign(
-                rows, cents, "vec_id", "embedding", keep, arrow=False
+            for r in _ivf_assign_expr(
+                rows, cents, "vec_id", "embedding", keep
             ).collect()
         )
         for cached in (lit, None):
             arrow = sorted(
                 (r["vec_id"], r["centroid_id"])
                 for r in _ivf_assign(
-                    rows, cents, "vec_id", "embedding", keep,
-                    arrow=True, cents=cached,
+                    rows, cents, "embedding", keep, cents=cached
                 ).collect()
             )
             assert arrow == expr, f"keep={keep} cents={'lit' if cached else 'collected'}"
@@ -383,9 +362,7 @@ def test_ivf_assign_twin_nan_vector_is_safe_direction(spark):
     )
     got = sorted(
         r["centroid_id"]
-        for r in _ivf_assign(
-            rows, cents, "vec_id", "embedding", 1, arrow=True
-        ).collect()
+        for r in _ivf_assign(rows, cents, "embedding", 1).collect()
     )
     # both dots NaN -> ties break to the smaller centroid id
     assert got == [2]
@@ -403,6 +380,7 @@ def test_poly_minhash_twin_randomized_corpus_parity(spark):
     import random
 
     from sportstv_streaming_data_warehouse_spark.operators.dedup import (
+        _minhash_signature_expr,
         minhash_signature,
     )
 
@@ -429,15 +407,11 @@ def test_poly_minhash_twin_randomized_corpus_parity(spark):
     for n in (1, 3):
         expr = {
             r["doc_id"]: r["signature"]
-            for r in minhash_signature(
-                df, "doc_id", "text", n=n, arrow=False
-            ).collect()
+            for r in _minhash_signature_expr(df, "doc_id", "text", n=n).collect()
         }
         twin = {
             r["doc_id"]: r["signature"]
-            for r in minhash_signature(
-                df, "doc_id", "text", n=n, arrow=True
-            ).collect()
+            for r in minhash_signature(df, "doc_id", "text", n=n).collect()
         }
         assert expr == twin, f"n={n}"
 
@@ -486,3 +460,133 @@ def test_slot_agreement_matches_the_aggregate_fold(spark):
     # and the verdict equivalence both sides of the threshold filter
     for new, old in got.values():
         assert (new / k >= 0.5) == bool(old is not None and old / k >= 0.5)
+
+
+def test_dot_pandas_is_bit_identical_to_the_jvm_fold(spark):
+    # the Arrow refine twin must equal the JVM sequential fold EXACTLY
+    # (not approximately) — the cosine oracles hash these doubles
+    emb = load_table(spark, SF001, "embeddings")
+    a = emb.select(F.col("vec_id").alias("ia"), F.col("embedding").alias("ea"))
+    b = emb.select(F.col("vec_id").alias("ib"), F.col("embedding").alias("eb"))
+    pairs = a.join(b, F.col("ia") % 17 == F.col("ib") % 17)  # dense sample
+    cmp = pairs.select(
+        dot(F.col("ea"), F.col("eb")).alias("jvm"),
+        dot_pandas(F.col("ea"), F.col("eb")).alias("arrow"),
+    )
+    assert cmp.count() > 1000
+    assert cmp.filter(F.col("jvm") != F.col("arrow")).count() == 0
+    # ragged/null fallback path stays exact too
+    odd = spark.createDataFrame(
+        [([1.0, 2.0], [3.0, 4.0]), ([1.0], [2.0]), (None, [1.0])],
+        "a array<float>, b array<float>",
+    )
+    rows = odd.select(
+        dot_pandas("a", "b").alias("d"), dot("a", "b").alias("j")
+    ).collect()
+    assert [r["d"] for r in rows] == [r["j"] for r in rows] == [11.0, 2.0, None]
+
+
+def test_table_signatures_pandas_bit_identical_to_jvm_expression(spark):
+    # bucket ids decide LSH candidates, and the poly oracle replays the
+    # sequential fold — the Arrow twin must match the JVM expression
+    # exactly (including planes near the sign boundary), on BOTH plane
+    # families
+    from sportstv_streaming_data_warehouse_spark.operators.similarity import (
+        _hyperplanes,
+    )
+
+    emb = load_table(spark, SF001, "embeddings")
+    for fam in ("gauss", "lcg"):
+        planes_by_table = [
+            [lcg_plane(64, 42 + (t * 5 + i) * 64) for i in range(5)]
+            if fam == "lcg"
+            else _hyperplanes(64, 5, 42 + t)
+            for t in range(12)
+        ]
+        jvm = F.array(
+            *[lsh_signature(F.col("embedding"), p) for p in planes_by_table]
+        )
+        cmp = emb.select(
+            jvm.alias("j"),
+            table_signatures_pandas("embedding", planes_by_table).alias("a"),
+        )
+        assert cmp.filter(F.col("j") != F.col("a")).count() == 0, fam
+
+
+def test_minhash_twin_matches_expression_on_a_randomized_unicode_corpus(spark):
+    """~240 deterministic pseudo-random texts (ASCII, punctuation,
+    unicode letters, exotic whitespace, empties): the MinHash Arrow
+    kernel must stay bit-identical to the expression slots."""
+    import random
+
+    from sportstv_streaming_data_warehouse_spark.operators.dedup import (
+        _minhash_signature_expr,
+        minhash_signature,
+    )
+
+    rng = random.Random(99)
+    alphabets = [
+        "abc def ghi",
+        "päö üß éà çñ",
+        "日本 語の テキスト",
+        "a.b,c;d!e?f",
+        "x\ty\nz\ru",
+        "0 12 345",
+        "     ",  # NBSP / em-space: \s matches some, not all
+    ]
+
+    def make_text():
+        pieces = [rng.choice(alphabets) for _ in range(rng.randrange(0, 6))]
+        return " ".join(pieces) if pieces else rng.choice(["", "   ", "\t\n"])
+
+    df = spark.createDataFrame(
+        [(i, make_text()) for i in range(240)], "doc_id long, text string"
+    )
+    expr = {
+        r["doc_id"]: r["signature"]
+        for r in _minhash_signature_expr(df, "doc_id", "text").collect()
+    }
+    twin = {
+        r["doc_id"]: r["signature"]
+        for r in minhash_signature(df, "doc_id", "text").collect()
+    }
+    assert expr == twin
+
+
+def test_pq_arrow_twin_is_bit_identical_to_the_expression_fold(spark):
+    """The shipped PQ path (pq_dists_pandas) must equal the interpreted
+    nested-HOF fold EXACTLY — same ascending-order (x-y)^2 accumulation,
+    so every table double, and therefore every code, ADC sum and rank
+    built from it, matches bit-for-bit (the property that lets the twin
+    ship inside the oracle-verified catalog query). Compared on the
+    corpus side (normalized vectors → codes) and the query side (the
+    ADC tables), plus the null / wrong-width edge: a NULL table on BOTH
+    sides — unguarded, the JVM fold encoded a 7-dim vector to
+    valid-looking leading codes ([27, 28, 20, None, ...]; found in
+    round 10)."""
+    from sportstv_streaming_data_warehouse_spark.operators.similarity import (
+        _pq_subspace_dists,
+        normalize_embeddings,
+        pq_codebooks,
+        pq_dists_pandas,
+    )
+
+    emb = load_table(spark, SF01, "embeddings")
+    books = pq_codebooks(emb)
+    bad = spark.createDataFrame(
+        [(-1, None), (-2, [0.5] * 7)], "vec_id long, embedding array<double>"
+    )
+    vecs = normalize_embeddings(emb.select("vec_id", "embedding")).unionByName(bad)
+    got = {
+        r["vec_id"]: (r["tw"], r["jvm"])
+        for r in vecs.select(
+            "vec_id",
+            pq_dists_pandas(F.col("embedding"), books).alias("tw"),
+            _pq_subspace_dists(F.col("embedding"), books).alias("jvm"),
+        ).collect()
+    }
+    assert len(got) == emb.count() + 2
+    assert got.pop(-1) == (None, None) and got.pop(-2) == (None, None)
+    for vid, (tw, jvm) in got.items():
+        assert tw is not None and len(tw) == 32 and all(len(t) == 32 for t in tw)
+        assert tw == jvm, vid

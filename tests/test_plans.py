@@ -245,6 +245,28 @@ def test_hard_negatives_no_cartesian(spark):
     assert "HashAggregate" in plan
 
 
+def test_banded_cosine_pairs_evaluates_each_arrow_udf_once(spark):
+    """banded_signatures_pandas and dot_pandas are marked
+    non-deterministic: unmarked, the optimizer pushes an inferred filter
+    below each and plans a second ArrowEvalPython of the same UDF (the
+    band signatures under the posexplode's size() filter, the refine dot
+    under the threshold filter) — x_hard_negatives measured 1.20x
+    slower. One evaluation of each is the plan shape the marking buys."""
+    from sportstv_streaming_data_warehouse_spark.operators.similarity import (
+        banded_cosine_pairs,
+    )
+    from sportstv_streaming_data_warehouse_spark.sources.fixtures import (
+        load_table,
+    )
+
+    emb = load_table(spark, SF01, "embeddings")
+    plan = banded_cosine_pairs(emb)._jdf.queryExecution().executedPlan().toString()
+    evals = [l for l in plan.splitlines() if "ArrowEvalPython" in l]
+    assert sum("_sigs(" in l for l in evals) == 1, evals
+    assert sum("_fold(" in l for l in evals) == 1, evals
+    assert len(evals) == 2, evals
+
+
 def test_zorder_audit_nested_loops_are_metadata_sized_only(spark):
     # the zone-map touch joins are deliberate BNLJ over distinct-values x
     # per-file zones (both metadata-sized); the DATA-sized path (rank,

@@ -63,61 +63,6 @@ def test_ingest_grain_is_unique_and_totals_match_source(spark):
         assert 0 <= r["completed_events"] <= r["transaction_count"]
 
 
-def test_dot_pandas_is_bit_identical_to_the_jvm_fold(spark):
-    # the Arrow refine twin must equal the JVM sequential fold EXACTLY
-    # (not approximately) — the cosine oracles hash these doubles
-    from sportstv_streaming_data_warehouse_spark.operators.similarity import (
-        dot, dot_pandas,
-    )
-
-    emb = load_table(spark, SF001, "embeddings")
-    a = emb.select(F.col("vec_id").alias("ia"), F.col("embedding").alias("ea"))
-    b = emb.select(F.col("vec_id").alias("ib"), F.col("embedding").alias("eb"))
-    pairs = a.join(b, F.col("ia") % 17 == F.col("ib") % 17)  # dense sample
-    cmp = pairs.select(
-        dot(F.col("ea"), F.col("eb")).alias("jvm"),
-        dot_pandas(F.col("ea"), F.col("eb")).alias("arrow"),
-    )
-    assert cmp.count() > 1000
-    assert cmp.filter(F.col("jvm") != F.col("arrow")).count() == 0
-    # ragged/null fallback path stays exact too
-    odd = spark.createDataFrame(
-        [([1.0, 2.0], [3.0, 4.0]), ([1.0], [2.0]), (None, [1.0])],
-        "a array<float>, b array<float>",
-    )
-    rows = odd.select(
-        dot_pandas("a", "b").alias("d"), dot("a", "b").alias("j")
-    ).collect()
-    assert [r["d"] for r in rows] == [r["j"] for r in rows] == [11.0, 2.0, None]
-
-
-def test_table_signatures_pandas_bit_identical_to_jvm_expression(spark):
-    # bucket ids decide LSH candidates, and the poly oracle replays the
-    # sequential fold — the Arrow twin must match the JVM expression
-    # exactly (including planes near the sign boundary), on BOTH plane
-    # families
-    from sportstv_streaming_data_warehouse_spark.operators.similarity import (
-        _hyperplanes, lcg_plane, lsh_signature, table_signatures_pandas,
-    )
-
-    emb = load_table(spark, SF001, "embeddings")
-    for fam in ("gauss", "lcg"):
-        planes_by_table = [
-            [lcg_plane(64, 42 + (t * 5 + i) * 64) for i in range(5)]
-            if fam == "lcg"
-            else _hyperplanes(64, 5, 42 + t)
-            for t in range(12)
-        ]
-        jvm = F.array(
-            *[lsh_signature(F.col("embedding"), p) for p in planes_by_table]
-        )
-        cmp = emb.select(
-            jvm.alias("j"),
-            table_signatures_pandas("embedding", planes_by_table).alias("a"),
-        )
-        assert cmp.filter(F.col("j") != F.col("a")).count() == 0, fam
-
-
 def test_duration_ms_rejects_unknown_units_with_named_grammar():
     # round-7 advisor finding: user-facing state_ttl strings outside the
     # four-unit grammar must fail with the accepted units named, not a

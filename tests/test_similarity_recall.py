@@ -13,8 +13,6 @@ from sportstv_streaming_data_warehouse_spark.operators.similarity import (
     cosine,
     ivf_topk,
     lsh_bucketed_topk,
-    normalize_embeddings,
-    normalize_embeddings_pandas,
 )
 from sportstv_streaming_data_warehouse_spark.sources.fixtures import load_table
 
@@ -63,25 +61,6 @@ def test_ivf_ann_recall(spark):
         key = (r["query_id"], r["neighbor_id"])
         if key in exact_sims:
             assert abs(r["cosine_sim"] - exact_sims[key]) < 1e-9
-
-
-def test_pandas_udf_matches_jvm_normalization(spark):
-    """The pandas_udf escape hatch and the JVM expression path must agree
-    (numpy's pairwise summation vs the sequential fold differ only in
-    final ulps)."""
-    emb = load_table(spark, SF01, "embeddings").limit(100)
-    jvm = {
-        r["vec_id"]: r["embedding"]
-        for r in normalize_embeddings(emb).collect()
-    }
-    py = {
-        r["vec_id"]: r["embedding"]
-        for r in normalize_embeddings_pandas(emb).collect()
-    }
-    assert set(jvm) == set(py)
-    for k in jvm:
-        for a, b in zip(jvm[k], py[k]):
-            assert abs(a - b) < 1e-12
 
 
 def test_minhash_estimates_track_exact_jaccard(spark):
@@ -332,51 +311,6 @@ def test_pq_scorecard_cross_checks_its_composed_operators(spark):
         ).collect()
     }
     assert codes == again
-
-
-def test_pq_arrow_twin_is_bit_identical_to_the_expression_fold(spark):
-    """The shipped PQ path (pq_dists_pandas) must equal the interpreted
-    nested-HOF fold EXACTLY — same ascending-order (x-y)^2 accumulation,
-    so every double and therefore every code, table entry, ADC sum and
-    rank matches bit-for-bit (the property that lets the twin ship
-    inside the oracle-verified catalog query). Also pins the null /
-    wrong-width edge: a NULL table drops the row, like the JVM path."""
-    from sportstv_streaming_data_warehouse_spark.operators.similarity import (
-        normalize_embeddings,
-        pq_codebooks,
-        pq_encode,
-        pq_topk,
-    )
-
-    emb = load_table(spark, SF01, "embeddings")
-    q = emb.filter(F.col("vec_id") < 10)
-    fast = sorted(map(tuple, pq_topk(emb, q, k=5, arrow=True).collect()))
-    ref = sorted(map(tuple, pq_topk(emb, q, k=5, arrow=False).collect()))
-    assert fast == ref and len(fast) == 50
-
-    books = pq_codebooks(emb)
-    nn = normalize_embeddings(emb.select("vec_id", "embedding"))
-    ea = {r["vec_id"]: r["codes"] for r in pq_encode(nn, books, arrow=True).collect()}
-    eb = {r["vec_id"]: r["codes"] for r in pq_encode(nn, books, arrow=False).collect()}
-    assert ea == eb
-
-    bad = spark.createDataFrame(
-        [(1, None), (2, [0.5] * 7)],
-        "vec_id long, embedding array<double>",
-    )
-    got = {
-        r["vec_id"]: r["codes"]
-        for r in pq_encode(bad, books, arrow=True).collect()
-    }
-    assert got == {1: None, 2: None}
-    # the JVM fold must null out the SAME malformed rows — unguarded,
-    # a 7-dim vector silently encoded to valid-looking leading codes
-    # ([27, 28, 20, None, ...]; round-10 ADVICE finding)
-    got_jvm = {
-        r["vec_id"]: r["codes"]
-        for r in pq_encode(bad, books, arrow=False).collect()
-    }
-    assert got_jvm == {1: None, 2: None}
 
 
 def test_ivfpq_composition_law_and_recall_bounds(spark):

@@ -405,14 +405,13 @@ def test_compact_index_crash_windows_are_benign_and_heal(spark, tmp_path):
 
 
 def test_legacy_flat_index_never_becomes_a_mixed_tree(spark, tmp_path):
-    """review finding: a pre-bucketing (flat) index receiving a bucketed
-    write becomes a mixed partition tree Spark refuses to read
-    (CONFLICTING_PARTITION_COLUMN_NAMES), wedging every later batch.
-    The gate must keep writing FLAT against a legacy index; the layout
-    upgrades only through compact_index, which refuses a partial
-    (straggler-leaving) migration."""
-    import glob
-
+    """A flat (pre-bucketing) index predates _gate_meta.json, so nothing
+    records how it was banded — here with seed 7, which a default
+    (seed 42) gate can never collide with, so trusting it would admit
+    every duplicate. The gate, gate_batch(index_dir=...) and
+    compact_index all refuse it ("rebuild it") and write nothing: no
+    meta, no admitted rows, no bucketed partition beside the flat one
+    (a mixed tree Spark refuses to read)."""
     from sportstv_streaming_data_warehouse_spark.operators.dedup import (
         _banded_minhash,
     )
@@ -422,37 +421,26 @@ def test_legacy_flat_index_never_becomes_a_mixed_tree(spark, tmp_path):
     )
 
     dirs = {k: str(tmp_path / k) for k in ("index", "admitted")}
-    # plant a legacy (flat, no band_bucket) partition, as the pre-r12
-    # gate wrote it
+    # plant a flat partition (no band_bucket, no meta) banded with seed 7
     b1 = spark.createDataFrame(BATCH1, SCHEMA)
-    _banded_minhash(b1, "doc_id", "text", 32, 8, 3, 42, cache=False) \
+    _banded_minhash(b1, "doc_id", "text", 32, 8, 3, 7, cache=False) \
         .write.parquet(f"{dirs['index']}/ingest_batch=0")
-
-    process = make_near_dup_gate(dirs["index"], dirs["admitted"])
     b2 = spark.createDataFrame(BATCH2, SCHEMA)
-    process(b2, 1)  # must write FLAT, not wedge the tree
-    assert not glob.glob(f"{dirs['index']}/ingest_batch=1/band_bucket=*")
-    idx = _read_index(spark, dirs["index"], 99)  # readable: consistent tree
-    assert "band_bucket" not in idx.columns
-    # gating still correct across the legacy index
-    adm = sorted(
-        r["doc_id"]
-        for r in spark.read.parquet(dirs["admitted"]).collect()
-    )
-    assert adm == [11]  # 10, 12, 13 rejected as before
+    index = _read_index(spark, dirs["index"], 99)
+    assert "band_bucket" not in index.columns
+    # the hazard: seed-42 bands never meet the seed-7 index, so the
+    # cross-batch duplicates 10 and 13 would be admitted
+    admitted, _, _ = gate_batch(b2, index)
+    assert sorted(r["doc_id"] for r in admitted.collect()) == [10, 11, 13]
 
-    # a partial migration would leave flat stragglers beside a bucketed
-    # base -> refuse
-    with pytest.raises(ValueError, match="CONFLICTING"):
-        compact_index(spark, dirs["index"], upto_batch=0)
-    # full migration: bucketed base, meta recorded, gate goes bucketed
-    compact_index(spark, dirs["index"], upto_batch=1)
-    assert glob.glob(f"{dirs['index']}/ingest_batch=-1/band_bucket=*")
-    process(spark.createDataFrame(
-        [(900, "entirely novel migration words")], SCHEMA), 2)
-    assert glob.glob(f"{dirs['index']}/ingest_batch=2/band_bucket=*")
-    post = _gate_verdict(spark, dirs["index"], [(950, T_A), (951, T_D)])
-    assert post[0] == []  # both still rejected after migration
+    with pytest.raises(ValueError, match="rebuild"):
+        make_near_dup_gate(dirs["index"], dirs["admitted"])(b2, 1)
+    with pytest.raises(ValueError, match="rebuild"):
+        gate_batch(b2, index, index_dir=dirs["index"])
+    with pytest.raises(ValueError, match="rebuild"):
+        compact_index(spark, dirs["index"], upto_batch=1)
+    assert sorted(os.listdir(dirs["index"])) == ["ingest_batch=0"]
+    assert not os.path.exists(dirs["admitted"])
 
 
 def test_bucket_modulus_comes_from_the_index_meta_not_the_caller(spark, tmp_path):

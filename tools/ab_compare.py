@@ -3,10 +3,12 @@
 Usage:  python tools/ab_compare.py REPO_A REPO_B [--rounds 3]
                                    [--out /tmp/ab_results.jsonl]
 
-Runs tools/ab_worker.py alternately against the two checkouts (A B A B
-... ) so box drift decorrelates from the code difference: a code
-regression shows up as a CONSISTENT A-vs-B gap across adjacent pairs,
-while box inflation moves both sides of a pair together. This is the
+Runs tools/ab_worker.py alternately against the two checkouts (A B,
+B A, A B, ...: pair i runs A first when i is even, B first when odd) so
+box drift decorrelates from the code difference: a code regression
+shows up as a CONSISTENT A-vs-B gap across adjacent pairs, while box
+inflation moves both sides of a pair together — and drift WITHIN a
+pair lands on each side equally often. This is the
 methodology that exonerated compact_index in round 12 (SCALE.md) and
 the one the round-12 verdict (task 2) prescribes for attributing the
 48.6-vs-37.8 s suite delta between round-12 HEAD and 9a82b1c.
@@ -61,15 +63,17 @@ def main() -> None:
     ap.add_argument("--golden", type=int, default=1)
     args = ap.parse_args()
 
-    runs_a: list[dict] = []
-    runs_b: list[dict] = []
+    by_side: dict[str, list[dict]] = {"A": [], "B": []}
+    repos = {"A": args.repo_a, "B": args.repo_b}
     for i in range(args.rounds):
-        print(f"--- pair {i + 1}/{args.rounds}: A ---", flush=True)
-        runs_a.append(run_worker(args.repo_a, args.out, args.queries, args.golden))
-        print(json.dumps(_brief(runs_a[-1])), flush=True)
-        print(f"--- pair {i + 1}/{args.rounds}: B ---", flush=True)
-        runs_b.append(run_worker(args.repo_b, args.out, args.queries, args.golden))
-        print(json.dumps(_brief(runs_b[-1])), flush=True)
+        # pair i runs A first when i is even, B first when odd
+        for side in ("AB" if i % 2 == 0 else "BA"):
+            print(f"--- pair {i + 1}/{args.rounds}: {side} ---", flush=True)
+            by_side[side].append(
+                run_worker(repos[side], args.out, args.queries, args.golden)
+            )
+            print(json.dumps(_brief(by_side[side][-1])), flush=True)
+    runs_a, runs_b = by_side["A"], by_side["B"]
 
     print("\n=== summary ===")
     for side, runs in (("A", runs_a), ("B", runs_b)):

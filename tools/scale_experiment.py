@@ -487,14 +487,15 @@ def round9_experiment(spark) -> None:
     # --- minhash signature tier: expression slots vs the Arrow twin ---
     print(f"\n{'minhash signatures':34} {'1x':>7} {'10x':>8} {'100x':>9}")
     walls = {}
-    for mode, arrow in (("expr_slots", False), ("arrow_twin", True)):
+    for mode, signature in (
+        ("expr_slots", D._minhash_signature_expr),
+        ("arrow_twin", D.minhash_signature),
+    ):
         w = {}
         for label in ("1x", "10x", "100x"):
             docs = load_table(spark, dirs[label], "documents")
             w[label], _ = min3(
-                lambda d=docs: force(
-                    D.minhash_signature(d, "doc_id", "text", arrow=arrow)
-                )
+                lambda d=docs: force(signature(d, "doc_id", "text"))
             )
         walls[mode] = w
         print(f"{mode:34} {w['1x']:6.2f}s {w['10x']:7.2f}s {w['100x']:8.2f}s")
@@ -663,7 +664,7 @@ def round11_experiment(spark) -> None:
                             F.col("vec_id").alias("neighbor_id"),
                             F.col("embedding").alias("__v"),
                         ),
-                        centroids, "neighbor_id", "__v", 1,
+                        centroids, "__v", 1,
                     ),
                     "__v",
                 ),
@@ -697,7 +698,7 @@ def round11_experiment(spark) -> None:
                     F.col("vec_id").alias("query_id"),
                     F.col("embedding").alias("__v"),
                 ),
-                centroids, "query_id", "__v", 8,
+                centroids, "__v", 8,
             ).select("query_id", "centroid_id")
             # bounded driver collect: <= n_centroids distinct cell ids —
             # the pushed-down partition filter a production serve layer
