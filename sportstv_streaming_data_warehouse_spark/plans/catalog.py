@@ -17,7 +17,10 @@ Determinism contract (the driver hash-compares values against DuckDB):
 
 from __future__ import annotations
 
+import json
+import re
 from collections.abc import Callable
+from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -8246,487 +8249,57 @@ def s_near_dup_gate_rejected(spark, sf_dir):
 
 
 # ---------------------------------------------------------------------------
-# Registry ordering. The driver's correctness harness records a fixed-size
-# prefix of this registry (50 entries), so the prefix is spent entirely on
-# oracle-backed queries chosen to cover every operator family of SURVEY §2
-# plus every LLM-pipeline operator family. Overflow queries (all still
-# verified by the identical DuckDB gate in pytest) follow; rows-only queries
-# (no SQL oracle possible) come last.
-#
-# NOTE the prefix is a CURATED selection, not a random sample: it is rotated
-# each round so that, cumulatively, every oracle-backed query earns a
-# driver-green row (see DRIVER_GREEN_ROUNDS below for the machine-checkable
-# ledger of which query was green in which round). Queries outside the
-# current window remain verified by the identical DuckDB oracle gate in
-# tests/test_oracle_parity.py. tests/test_catalog_registry.py asserts these
-# invariants.
-#
-# Round-3 rotation: 18 twice-green (r1+r2) entries were swapped out for the
-# 14 oracle-backed queries never driver-verified in rounds 1-2 plus the 5
-# round-3 debuts (x_doc_chunking, x_tfidf_top_terms, x_embedding_quantize,
-# x_dupgraph_degree, x_dedup_survivors), bringing cumulative driver-green
-# coverage to all 91 oracle-backed queries registered through round 3.
-#
-# Round-4 rotation: with cumulative coverage complete, the window
-# RE-verified the staleness tail (r1-only + r2-last entries) plus the 7
-# round-4 debuts and two timestamp-path anchors. Result: 48/50 full
-# passes; the 2 hash fails (x_boilerplate_ngrams, x_domain_mix_plan)
-# were DuckDB HUGEINT/DECIMAL oracle-typing artifacts, fixed in round 5
-# by CASTs in the oracle SQL (values were verified identical).
-#
-# Round-5 rotation: (a) re-verify the two cast-fixed oracles, (b) debut
-# a2_approx_distinct_scale (newly oracle-backed via the within_bound
-# contract) and the three new round-5 operators (x_passage_dedup,
-# x_source_overlap, x_seq_length_histogram), (c) swap the stalest
-# entries back in — everything whose last driver-green row is round 2
-# (x_dedup_exact, x_dedup_token_jaccard, x_asof_join_last_signup,
-# u1_union_two_sources, s1_scan_pruned_projection) plus the r3-last
-# veterans — so after this round no window-eligible query's last driver
-# verification is older than two rounds. The 44 entries green in round 4
-# rotate out (still gated by the identical DuckDB sweep in
-# tests/test_oracle_parity.py). Ten r3-last queries wait for round 6,
-# each transitively covered by an in-window sibling on the same
-# codepaths: the six text-family queries (x_top_bigrams,
-# x_doc_stats_by_lang, x_text_stats, x_lang_id, x_quality_score,
-# x_fingerprint — via x_text_profile in-window and
-# x_quality_filter_by_lang green r4) plus x_dedup_ngram_jaccard (via
-# x_dedup_token_jaccard, same inverted-index machinery), x_doc_chunking
-# (via the x_passage_dedup debut, same narrow slicing path),
-# x_embedding_quantize (via x_dedup_embedding_cosine in-window and
-# x_embedding_normalize green r4) and x_dupgraph_degree (via
-# x_dedup_clusters, same banded candidate-edge machinery).
-#
-# Round-5 second batch: seven more debuts (a_cohort_retention,
-# w_event_funnel, w_event_transitions, w_interarrival_stats,
-# x_token_entropy, q_key_skew_report, a_pareto_abc) displace seven
-# r3-green COMBO twins whose individual constituents are themselves
-# driver-green in r4 or sit elsewhere in this window:
-# s45_source_stats (= s4+s5, both green r4), p67_year_pruning (= p6+p7,
-# both green r4), a45_global_summary (= a4+a5, both green r4),
-# u34_set_ops (= u3+u4, both green r4, plus u1 in-window),
-# f_from_json_struct (sibling f_json_extract stays in-window),
-# a_cube_matrix (sibling a_rollup_hierarchy stays — same grouping-sets
-# Expand path), a_share_of_total (same window-over-tiny-agg shape as
-# w_moving_avg_7d, which stays). All seven displaced entries are r3-green
-# (policy-eligible) and are first in line for the round-6 window.
-#
-# Round-5 third batch: eight more debuts (x_copurchase_pairs,
-# w_rolling_distinct_7d, w_active_streaks, a_winsorized_stats,
-# x_anomaly_zscore, x_fuzzy_match_names, x_split_leakage_audit,
-# a_approx_quantile_audit) displace eight r3-green entries, each with an
-# in-window sibling on the same codepath (or a strict superset among the
-# debuts): a_quantiles_by_flag (a_approx_quantile_audit computes the
-# identical exact percentiles PLUS the sketch audit), x_content_hash_split
-# (x_split_leakage_audit re-runs the same fingerprint split and audits
-# it), x_dedup_minhash_poly / x_dedup_simhash_poly / x_knn_lsh_poly
-# (portable-hash twins; the banded-bucket machinery stays in-window via
-# x_dedup_token_jaccard, x_dedup_clusters, x_dedup_embedding_cosine,
-# x_knn_bruteforce, x_knn_ivf_ann), sql_surface_weekly_top (SQL-API twin
-# of a7_weekly_latest_year, green r4), q_quality_audit (q_key_skew_report
-# debuts in-window; x_quality_deciles stays), x_tfidf_top_terms (sibling
-# x_bm25_topk green r4 — same tf/df machinery). All eight displaced
-# entries are r3-green (policy-eligible) and queue for round 6.
-#
-# Round-5 fourth batch: four more debuts (x_pagerank_step,
-# x_weighted_sample, x_unigram_surprisal, x_hard_negatives) displace
-# four r3-green entries with in-window family siblings:
-# x_knn_bruteforce (x_hard_negatives exercises the same fold-pinned
-# cosine machinery; x_knn_ivf_ann stays in-window), x_stratified_sample
-# (x_weighted_sample debuts — the sampling family's deterministic-hash
-# machinery; x_content_hash_split's split path moved to
-# x_split_leakage_audit in-window), x_repetition_filter
-# (x_unigram_surprisal debuts; x_token_entropy in-window — the
-# information-density quality family), x_salted_skew_rollup
-# (q_key_skew_report in-window — the skew-diagnostics family). All four
-# displaced entries are r3-green (policy-eligible) and queue for round 6.
-#
-# Round-5 fifth batch: two more debuts (x_zorder_layout_audit,
-# x_session_features) displace two r3-green entries: x_pack_shards (the
-# layout-audit debut runs the SAME two-phase distributed-rank machinery,
-# and x_global_shuffle on that codepath is green r4) and
-# x_dedup_ngram_jaccard (in-window sibling x_dedup_token_jaccard — the
-# identical inverted-index machinery, the same transitive-coverage pairing
-# the round-5 opening rotation used). Both displaced entries are r3-green
-# (policy-eligible) and queue for round 6.
-#
-# Round-5 tenth debut: x_containment_dedup (asymmetric shingle
-# containment — the quote/wrapper detector Jaccard misses) displaces
-# r2_unpivot_year_matrix (3-round veteran [1,2,3]; the reshape family
-# stays ledger-covered by r1_pivot_year_matrix green r4). The
-# containment candidates ride the same shingle inverted index as
-# x_shared_passage_flags and x_dedup_token_jaccard, both in-window.
-#
-# Round-5 ninth batch: two more debuts (w_forward_fill,
-# x_bigram_surprisal) displace two r3-green entries:
-# h_monthly_from_daily (the time-series downsampling family is now
-# represented in-window by w_daily_ohlc and w_moving_avg_7d stays;
-# forward-fill exercises the same last-ignorenulls machinery as
-# x_asof_join_last_signup, also in-window) and x_dedup_survivors
-# (sibling x_dedup_clusters stays — the identical fixpoint machinery;
-# the same pairing used when ngram-jaccard rotated). Both displaced
-# entries queue for round 6.
-#
-# Round-5 eighth debut: w_daily_ohlc (single-hash-agg OHLC bars)
-# displaces w2_peak_dow_per_flag — the same per-group argmax family
-# (OHLC's open/close ARE two struct-argmaxes; w1_peak_week green r4 and
-# the w2 semantics stay pinned by tests/test_oracle_parity.py), r3-green
-# and queued for round 6.
-#
-# Round-5 seventh debut: x_shared_passage_flags (inter-doc passage
-# analysis) displaces x_decontamination — the same shingle-df machinery
-# family (x_dedup_ngram_jaccard's shingles + x_boilerplate_ngrams' df
-# screen, the latter driver-green this round's window), r3-green and
-# queued for round 6 like its siblings.
-#
-# Round-5 sixth batch: two more debuts (x_sample_exact_k,
-# w_rfm_segmentation) displace two r3-green entries: x_quality_deciles
-# (w_rfm_segmentation runs THREE of the identical distributed-NTILE
-# ranks — a strict machinery superset on the same codepath) and
-# o1_top10_customers (TakeOrdered path; sibling o2_top_events_full_sort
-# green r4 and x_copurchase_pairs in-window exercise the same
-# TakeOrderedAndProject shape). Both displaced entries are r3-green
-# (policy-eligible) and queue for round 6.
-#
-# Round-6 rotation (the planned pay-down of the round-5 rotation debt —
-# tools/plan_rotation.py computed exactly this): the 48 round-5-green
-# non-anchor entries rotate OUT (all freshly green in CORRECTNESS_r05,
-# policy-safe through round 7); IN come the 37 r3-last queries that
-# tripped test_no_oracle_query_staler_than_two_rounds once r05 landed
-# (the full mandatory list, nothing staggered), plus 11 free slots spent
-# pre-paying the round-7 debt from the r4-last cohort — the judge-named
-# trio (x_bm25_topk, x_kmeans_lloyd, x_scd2_point_in_time) first, then
-# one pick per remaining machinery family (canonical dedup, incremental
-# dedup, embedding normalize/quantile paths, sessionize, global shuffle,
-# language-gated quality, user-trend windows, vocab coverage). The
-# steady-state cadence this establishes: ~45 rotations + 2 anchors per
-# round cycles all 133+ oracles through the driver every 3 rounds,
-# inside the 50-slot budget. Round-6 debuts displace r4-cohort picks
-# (never mandatory entries) as they land.
-#
-# Round-10 rotation (tools/rotate_window.py, ledger folded from
-# CORRECTNESS_r09's 50/50 green): 2 anchors + the 13 mandatory
-# r6-cohort queries + 31 r7-cohort pre-pays + 4 debuts displacing the
-# newest pre-pays (x_minhash_pr_sampled — the sampled P/R audit;
-# x_knn_ivf_recall and x_knn_pq_recall — the IVF and PQ/ADC recall
-# scorecards completing the retrieval-quality tier across all three
-# ANN paths; s_rolling_distinct_grain — the second streaming module
-# surfaced through the driver gate). Round-11 plan: the 13 r7-cohort
-# queries NOT pre-paid here become mandatory (13 < 48 ⇒ solvent, wide
-# debut capacity); the ~40-query r8 cohort becomes round-12's
-# pressure — pre-pay it across the r11 free slots.
-#
-# Round-11 rotation (tools/rotate_window.py, ledger folded from
-# CORRECTNESS_r10's 50/50 green): 2 anchors + the 13 mandatory
-# r7-cohort queries the staleness guard printed + 32 r8-cohort
-# pre-pays + 3 debuts displacing the three newest pre-pays
-# (x_knn_ivfpq_recall — the IVF×PQ composed ANN recall scorecard, the
-# round-10 verdict's task-5 architecture; s_sessionize_grain — the
-# THIRD streaming module transitively oracle-verified, riding the
-# w_sessionize batch algebra already mandatory this round;
-# q_ivf_cell_skew — the ANN index's cell-occupancy audit on the shared
-# IVF prologue). Displaced: x_dedup_exact, x_dedup_token_jaccard,
-# x_dedup_embedding_cosine (all r8-green). Round-12 projected
-# mandatory: the 13 r8-cohort queries not pre-paid here + the 3
-# displaced = 16 of 48 slots — solvent, wide debut capacity again.
-# Round-12 debut candidates, built and pytest-pinned IN round 11 with
-# their oracles already staged in tests (register + window-slot them
-# at rotation): x_pack_context_windows (operators/packing.py — the
-# running-sum + generate_series replay is pinned in
-# tests/test_packing.py), x_decontam_bloom (operators/bloom.py — the
-# composed prefilter output EQUALS the exact join, so the oracle is
-# the plain exact SQL; the portable-hash membership replay is pinned
-# in tests/test_bloom.py), x_bpe_top_pairs (operators/bpe.py — the
-# single-round pair-statistics replay is pinned in tests/test_bpe.py),
-# and s_near_dup_gate_grain if a fourth slot is affordable (the
-# streaming gate's admitted grain, transitively verified through the
-# stream==batch-model parity in tests/test_stream_near_dup.py).
-#
-# Round-12 rotation (tools/rotate_window.py, ledger folded from
-# CORRECTNESS_r11's 50/50 green): 2 anchors + the 16 mandatory
-# r8-cohort queries the staleness guard printed + 28 r9-cohort
-# pre-pays + the 3 staged round-11 debuts registered per the round-11
-# verdict's task 2 (x_pack_context — the context-window packing layout,
-# its running-sum + generate_series replay promoted from
-# tests/test_packing.py; x_decontam_bloom — the Bloom-screened
-# decontamination pinned EQUAL to the exact join; x_bpe_top_pairs —
-# the BPE round-0 pair statistics promoted from tests/test_bpe.py)
-# + 1 round-12 debut (s_near_dup_gate_grain — the streaming gate's
-# admitted grain, the FOURTH streaming module transitively
-# oracle-verified: the oracle replays the ENTIRE two-batch gate —
-# signatures, banding, corpus join, within-batch rule — in SQL on the
-# portable family, and the foreachBatch stream is pinned equal to the
-# same portable replay_gate in tests). Displaced: x_embedding_quantize,
-# x_fingerprint, x_heavy_hitters, x_kmeans_lloyd (all r9-green).
-# Round-13 projected mandatory: the 48 r9-cohort queries minus the 28
-# pre-paid here = 20 of 48 slots — solvent.
-# Round-13 rotation (tools/rotate_window.py, ledger folded from
-# CORRECTNESS_r12's 50/50 green): 2 anchors + the 20 mandatory
-# r9-cohort queries the staleness guard printed + 27 r10-cohort
-# pre-pays + 1 round-13 debut registered per the round-12 verdict's
-# task 5 (s_near_dup_gate_rejected — the gate's REJECTED grain
-# (doc_id, matched_id, est_jaccard, reason, ingest_batch), oracle =
-# _near_dup_gate_oracle("rejected"), the same SQL gate replay with a
-# different final SELECT; staged round 12 at bd9f0ec and parity-pinned
-# in tests/test_stream_near_dup.py::
-# test_staged_rejected_grain_replays_in_duckdb — this registration
-# completes the gate's two-sided verification: admitted + rejected).
-# Displaced: p8_guarded_ratio (r10-green, the newest pre-pay pick).
-#
-# Round-16 rotation (tools/rotate_window.py, ledger folded from
-# CORRECTNESS_r14 and CORRECTNESS_r15, both 50/50 green on the same
-# round-14 window, which was never rotated for round 15): 2 anchors +
-# the 24 mandatory queries last green in r11 or earlier (the r11 w_*/x_*
-# cohort) + 23 round-17 pre-pays (the r12 cohort, oldest last-green
-# first) + 1 debut, x_dedup_minhash_lsh (hash-checked since the single
-# polynomial MinHash family; no ledger row yet, so the tool cannot see
-# it). It displaces the bottom pre-pay pick, x_dedup_embedding_cosine
-# (last green r12, not stale until round 17). The r14/r15 fold gives
-# the three round-14 debuts (x_compaction_bins, p1_projected_scan,
-# o34_multi_col_reorder) their first ledger rows.
+# Registry ordering. The driver hash-checks the first WINDOW_SIZE entries of
+# queries() against DuckDB each round and commits the outcome as
+# CORRECTNESS_r{N}.json at the repo root. The window is computed from those
+# files: the anchors, then the other oracle-backed queries whose last full
+# pass is oldest (ties by name). An oracle with no full pass counts as last
+# green in round 0, so a new query is scheduled the round it is registered,
+# and a window entry that failed stays due. With no files at all the same
+# rule gives the anchors plus the alphabetically first oracles. Queries
+# outside the window stay verified by the identical DuckDB oracles in
+# tests/test_oracle_parity.py; overflow oracles follow the window, rows-only
+# queries come last. tests/test_catalog_registry.py asserts these
+# invariants and the staleness bar below.
 # ---------------------------------------------------------------------------
 
-CORRECTNESS_WINDOW = [
-    # anchors (kept green every round for regression detection)
-    "flagship_daily_rollup",
-    "star_fact_events",
-    # round-16 mandatory rotations (last green < r12) — tools/rotate_window.py
-    "w_daily_ohlc",
-    "w_event_funnel",
-    "w_event_transitions",
-    "w_forward_fill",
-    "w_interarrival_stats",
-    "w_interpolate_linear",
-    "w_moving_avg_7d",
-    "w_rfm_segmentation",
-    "w_rolling_distinct_7d",
-    "w_sessionize",
-    "x_anomaly_zscore",
-    "x_asof_join_last_signup",
-    "x_bigram_surprisal",
-    "x_bm25_topk",
-    "x_boilerplate_ngrams",
-    "x_cdc_fact_diff",
-    "x_containment_dedup",
-    "x_copurchase_pairs",
-    "x_dedup_canonical",
-    "x_dedup_clusters",
-    "x_dedup_incremental",
-    "x_domain_mix_apply",
-    "x_interval_overlap_join",
-    "x_knn_ivfpq_recall",
-    # round-17 pre-pay (oldest last-green first); debuts displace from the bottom
-    "a45_global_summary",
-    "a_cube_matrix",
-    "a_quantiles_by_flag",
-    "a_share_of_total",
-    "f_from_json_struct",
-    "h_monthly_from_daily",
-    "h_sketch_rollup_hll",
-    "o1_top10_customers",
-    "p67_year_pruning",
-    "q_out_of_order_audit",
-    "q_quality_audit",
-    "r2_unpivot_year_matrix",
-    "s45_source_stats",
-    "s_near_dup_gate_grain",
-    "sql_surface_weekly_top",
-    "u34_set_ops",
-    "w2_peak_dow_per_flag",
-    "w_event_sequences",
-    "x_bpe_top_pairs",
-    "x_cascade_delete_plan",
-    "x_content_hash_split",
-    "x_decontam_bloom",
-    "x_decontamination",
-    # x_dedup_minhash_lsh debuts with its oracle (one MinHash hash
-    # family), displacing the bottom pre-pay pick x_dedup_embedding_cosine
-    # (last green r12)
-    "x_dedup_minhash_lsh",
-]
-
-# Machine-checkable ledger of driver verification: query -> rounds in which
-# the driver's CORRECTNESS_r{N}.json recorded a full pass (rows + schema +
-# hash). Built from CORRECTNESS_r01/r02/r03.json — the round-3 driver run
-# recorded 50/50 full passes, completing cumulative driver-green coverage of
-# all 91 oracle-backed queries registered through round 3.
-# tests/test_catalog_registry.py asserts that every oracle-backed query
-# appears here or in the current window.
-DRIVER_GREEN_ROUNDS: dict[str, list[int]] = {
-    "flagship_daily_rollup": [1, 2, 3, 4, 5, 6, 7, 8, 9, 10, 11, 12, 13, 14, 15],
-    "star_fact_events": [1, 2, 3, 4, 5, 6, 7, 8, 9, 10, 11, 12, 13, 14, 15],
-    "s1_scan_pruned_projection": [1, 2, 5, 8, 11, 14, 15],
-    "s45_source_stats": [2, 3, 6, 9, 12],
-    "s4_source_date_bounds": [1, 4, 7, 10, 14, 15],
-    "s5_row_counts": [1, 4, 7, 11, 14, 15],
-    "p2_filter_notnull_nonempty": [1, 2, 4, 7, 10, 13],
-    "p3_p4_p5_quality_clean": [1, 2, 4, 7, 10, 13],
-    "p67_year_pruning": [2, 3, 6, 9, 12],
-    "p6_year_equality_prune": [1, 4, 7, 10, 13],
-    "p7_year_range_prune": [1, 4, 7, 10, 13],
-    "p8_guarded_ratio": [1, 2, 4, 7, 10, 14, 15],
-    "p9_null_audit": [1, 2, 4, 7, 10, 14, 15],
-    "j1_snowflake_flatten_distinct": [1, 2, 4, 7, 10, 13],
-    "j2_broadcast_user_enrichment": [1, 2, 4, 7, 10, 13],
-    "j5_fact_by_country": [1, 2, 4, 7, 10, 13],
-    "j6_fact_by_dow_via_date_dim": [1, 4, 7, 10, 13],
-    "j7_enrich_with_fallback": [1, 2, 4, 7, 10, 13],
-    "ja_orphan_anti_join": [1, 2, 4, 7, 10, 13],
-    "js_semi_active_customers": [1, 4, 7, 10, 13],
-    "a45_global_summary": [2, 3, 6, 9, 12],
-    "a4_global_summary": [1, 4, 7, 10, 13],
-    "a5_year_bounds": [1, 4, 7, 10, 13],
-    "a6_growth_by_year_priority": [1, 2, 4, 7, 10, 13],
-    "a7_weekly_latest_year": [1, 4, 7, 10, 13],
-    "a8_ratio_of_sums_by_type": [1, 4, 7, 10, 13],
-    "a11_type_dow_matrix": [1, 4, 7, 10, 13],
-    "a12_yearly_validation": [1, 4, 7, 10, 13],
-    "a13_avg_of_precomputed": [1, 4, 7, 10, 13],
-    "a_cube_matrix": [2, 3, 6, 9, 12],
-    "a_rollup_hierarchy": [2, 3, 5, 8, 11, 14, 15],
-    "h_monthly_from_daily": [2, 3, 6, 9, 12],
-    "a_quantiles_by_flag": [2, 3, 6, 9, 12],
-    "a_share_of_total": [2, 3, 6, 9, 12],
-    "w1_peak_week": [1, 4, 7, 11, 14, 15],
-    "w2_peak_dow_per_flag": [1, 2, 3, 6, 9, 12],
-    "w3_yoy_order_growth": [1, 2, 4, 7, 11, 14, 15],
-    "w_sessionize": [2, 3, 4, 7, 11],
-    "w_moving_avg_7d": [2, 3, 5, 8, 11],
-    "o1_top10_customers": [1, 2, 3, 6, 9, 12],
-    "o2_top_events_full_sort": [1, 4, 7, 10, 13],
-    "o5_distinct_years_sorted": [1, 4, 7, 10, 13],
-    "u1_union_two_sources": [1, 2, 5, 8, 11, 14, 15],
-    "u2_distinct_pairs": [1, 4, 7, 11, 14, 15],
-    "u34_set_ops": [2, 3, 6, 9, 12],
-    "u3_except_churned": [1, 4, 7, 11, 14, 15],
-    "u4_intersect_retained": [1, 4, 7, 11, 14, 15],
-    "r1_pivot_year_matrix": [1, 4, 7, 10, 14, 15],
-    "r2_unpivot_year_matrix": [1, 2, 3, 6, 9, 12],
-    "f_calendar_keys": [1, 2, 4, 7, 10, 13],
-    "f6_date_spine": [1, 2, 4, 7, 10, 13],
-    "f7_regex_inference_precedence": [1, 2, 4, 7, 10, 13],
-    "f10_hours_arithmetic": [1, 4, 7, 10, 13],
-    "f_json_extract": [2, 3, 5, 8, 11, 14, 15],
-    "f_from_json_struct": [2, 3, 6, 9, 12],
-    "sql_surface_weekly_top": [2, 3, 6, 9, 12],
-    "q_quality_audit": [2, 3, 6, 9, 12],
-    "x_dedup_exact": [1, 2, 5, 8, 12],
-    "x_dedup_canonical": [1, 4, 7, 11],
-    "x_dedup_token_jaccard": [1, 2, 5, 8, 12],
-    "x_dedup_minhash_poly": [2, 3, 6, 9, 12],
-    "x_dedup_simhash_poly": [2, 3, 6, 9, 12],
-    "x_dedup_clusters": [2, 3, 5, 8, 11],
-    "x_dedup_embedding_cosine": [2, 3, 5, 8, 12],
-    "x_asof_join_last_signup": [1, 2, 5, 8, 11],
-    "x_range_join_value_bands": [1, 2, 3, 5, 8, 12],
-    "x_user_value_trend": [1, 2, 3, 4, 8, 12],
-    "x_knn_bruteforce": [2, 3, 6, 9, 13],
-    "x_knn_lsh_poly": [2, 3, 6, 9, 13],
-    "x_text_profile": [2, 3, 5, 9, 13],
-    "x_content_hash_split": [2, 3, 6, 9, 12],
-    "x_quality_deciles": [2, 3, 6, 10, 14, 15],
-    "x_cdc_fact_diff": [3, 5, 8, 11],
-    "x_salted_skew_rollup": [3, 6, 10, 14, 15],
-    "x_knn_ivf_ann": [3, 5, 8, 12],
-    "x_dedup_ngram_jaccard": [3, 6, 9, 12],
-    "x_decontamination": [3, 6, 9, 12],
-    "x_stratified_sample": [3, 6, 10, 14, 15],
-    "x_pack_shards": [3, 6, 10, 14, 15],
-    "x_repetition_filter": [3, 6, 10, 14, 15],
-    "x_fingerprint": [3, 6, 9, 13],
-    "x_top_bigrams": [3, 6, 10, 14, 15],
-    "x_doc_stats_by_lang": [3, 6, 9, 12],
-    "x_text_stats": [3, 6, 10, 14, 15],
-    "x_lang_id": [3, 6, 9, 13],
-    "x_quality_score": [3, 6, 10, 14, 15],
-    "x_doc_chunking": [3, 6, 9, 12],
-    "x_tfidf_top_terms": [3, 6, 10, 14, 15],
-    "x_embedding_quantize": [3, 6, 9, 13],
-    "x_dupgraph_degree": [3, 6, 9, 12],
-    "x_dedup_survivors": [3, 6, 9, 12],
-    "x_bm25_topk": [4, 7, 11],
-    "x_dedup_incremental": [4, 7, 11],
-    "x_embedding_normalize": [4, 8, 12],
-    "x_global_shuffle": [4, 8, 12],
-    "x_kmeans_lloyd": [4, 6, 9, 13],
-    "x_quality_filter_by_lang": [4, 8, 12],
-    "x_scd2_point_in_time": [4, 6, 10, 14, 15],
-    "x_vocab_coverage": [4, 8, 12],
-    "a2_approx_distinct_scale": [5, 8, 11, 14, 15],
-    "a_approx_quantile_audit": [5, 8, 11, 14, 15],
-    "a_cohort_retention": [5, 8, 11, 14, 15],
-    "a_pareto_abc": [5, 8, 11, 14, 15],
-    "a_winsorized_stats": [5, 8, 11, 14, 15],
-    "q_key_skew_report": [5, 8, 11, 14, 15],
-    "w_active_streaks": [5, 8, 11, 14, 15],
-    "w_daily_ohlc": [5, 8, 11],
-    "w_event_funnel": [5, 8, 11],
-    "w_event_transitions": [5, 8, 11],
-    "w_forward_fill": [5, 8, 11],
-    "w_interarrival_stats": [5, 8, 11],
-    "w_rfm_segmentation": [5, 8, 11],
-    "w_rolling_distinct_7d": [5, 8, 11],
-    "x_anomaly_zscore": [5, 8, 11],
-    "x_bigram_surprisal": [5, 8, 11],
-    "x_boilerplate_ngrams": [5, 8, 11],
-    "x_containment_dedup": [5, 8, 11],
-    "x_copurchase_pairs": [5, 8, 11],
-    "x_domain_mix_plan": [5, 8, 12],
-    "x_fuzzy_match_names": [5, 8, 12],
-    "x_hard_negatives": [5, 8, 12],
-    "x_pagerank_step": [5, 8, 12],
-    "x_passage_dedup": [5, 8, 12],
-    "x_sample_exact_k": [5, 8, 12],
-    "x_seq_length_histogram": [5, 9, 13],
-    "x_session_features": [5, 9, 13],
-    "x_shared_passage_flags": [5, 9, 13],
-    "x_source_overlap": [5, 9, 13],
-    "x_split_leakage_audit": [5, 9, 13],
-    "x_token_entropy": [5, 9, 13],
-    "x_unigram_surprisal": [5, 9, 13],
-    "x_weighted_sample": [5, 9, 13],
-    "x_zorder_layout_audit": [5, 9, 13],
-    "h_sketch_rollup_hll": [6, 9, 12],
-    "q_out_of_order_audit": [6, 9, 12],
-    "w_event_sequences": [6, 9, 12],
-    "x_cascade_delete_plan": [6, 9, 12],
-    "x_distribution_drift": [6, 9, 12],
-    "x_heavy_hitters": [6, 9, 13],
-    "x_passage_scrub_crossdoc": [6, 10, 14, 15],
-    "x_salted_skew_join": [6, 10, 14, 15],
-    "x_temporal_split_purged": [6, 10, 14, 15],
-    "a_exact_median_hist": [7, 10, 13],
-    "h_sketch_rollup_quantile": [7, 10, 13],
-    "w_interpolate_linear": [7, 11],
-    "x_domain_mix_apply": [7, 11],
-    "x_interval_overlap_join": [7, 11],
-    "r_retention_funnel": [8, 11, 14, 15],
-    "r_streaming_by_type": [8, 11, 14, 15],
-    "r_top_markets": [8, 11, 14, 15],
-    "r_yoy_growth": [8, 11, 14, 15],
-    "s_ingest_daily_grain": [8, 11, 14, 15],
-    "x_knn_recall_at_k": [9, 13],
-    "x_minhash_calibration": [9, 13],
-    "x_minhash_precision_recall": [9, 13],
-    "s_rolling_distinct_grain": [10, 14, 15],
-    "x_knn_ivf_recall": [10, 14, 15],
-    "x_knn_pq_recall": [10, 14, 15],
-    "x_minhash_pr_sampled": [10, 14, 15],
-    "q_ivf_cell_skew": [11, 14, 15],
-    "s_sessionize_grain": [11, 14, 15],
-    "x_knn_ivfpq_recall": [11],
-    "s_near_dup_gate_grain": [12],
-    "x_bpe_top_pairs": [12],
-    "x_decontam_bloom": [12],
-    "x_pack_context": [12],
-    "s_near_dup_gate_rejected": [13],
-    "o34_multi_col_reorder": [14, 15],
-    "p1_projected_scan": [14, 15],
-    "x_compaction_bins": [14, 15],
-}
+#: the driver's fixed number of hash-checked registry entries per round
+WINDOW_SIZE = 50
+#: always in the window, for regression detection
+ANCHORS = ("flagship_daily_rollup", "star_fact_events")
+#: the checkout root, where the driver commits its CORRECTNESS files
+_REPO = Path(__file__).resolve().parents[2]
 
 
-#: the first entries of CORRECTNESS_WINDOW are the always-in anchors
-CORRECTNESS_ANCHORS = 2
+def driver_green_rounds(root: Path = _REPO) -> dict[str, list[int]]:
+    """Query -> the rounds whose ``CORRECTNESS_r{N}.json`` under ``root``
+    record a full pass for it: rows, schema and value hash all match and
+    no error."""
+    greens: dict[str, list[int]] = {}
+    for path in root.glob("CORRECTNESS_r*.json"):
+        m = re.fullmatch(r"CORRECTNESS_r(\d+)\.json", path.name)
+        if not m:
+            continue
+        for name, row in json.loads(path.read_text()).items():
+            if (
+                row.get("rows_match")
+                and row.get("schema_match")
+                and row.get("hash_match")
+                and not row.get("err")
+            ):
+                greens.setdefault(name, []).append(int(m.group(1)))
+    return {name: sorted(rounds) for name, rounds in greens.items()}
+
+
+def correctness_window(root: Path = _REPO) -> list[str]:
+    """The WINDOW_SIZE registry entries the driver checks this round."""
+    greens = driver_green_rounds(root)
+    due = sorted(
+        (name for name in ORACLE if name not in ANCHORS),
+        key=lambda name: (max(greens.get(name, [0])), name),
+    )
+    return [*ANCHORS, *due[: WINDOW_SIZE - len(ANCHORS)]]
+
 
 #: Signed-off staleness bar. staleness_period() derives the bar from
 #: catalog size vs driver budget, which means the correctness policy
@@ -8765,20 +8338,13 @@ def staleness_period() -> int:
     EXPECTED_STALENESS_PERIOD above being updated in review."""
     import math
 
-    # Budget slots = the window's steady-state oracle capacity (full
-    # non-anchor width). Rows-only smoke entries are a one-round borrow
-    # and deliberately do NOT shrink the denominator: letting them would
-    # loosen the bar further in the very round that borrows — the
-    # opposite of the intent.
-    slots = len(CORRECTNESS_WINDOW) - CORRECTNESS_ANCHORS
-    n = len(ORACLE) - CORRECTNESS_ANCHORS
+    slots = WINDOW_SIZE - len(ANCHORS)
+    n = len(ORACLE) - len(ANCHORS)
     return max(2, math.ceil(n / slots))
 
 
 def all_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    ordered: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
-    for name in CORRECTNESS_WINDOW:
-        ordered[name] = QUERIES[name]
+    ordered = {name: QUERIES[name] for name in correctness_window()}
     for name, fn in QUERIES.items():  # overflow: oracle-backed first
         if name not in ordered and name in ORACLE:
             ordered[name] = fn

@@ -1,25 +1,57 @@
 """Registry-ordering invariants: the driver records correctness for a
 fixed-size prefix of queries(), so that prefix must be exactly the
-curated window — every entry oracle-backed — with rows-only checks last."""
+window computed from the committed CORRECTNESS_r*.json files — every
+entry oracle-backed — with rows-only checks last."""
 
 import json
 import pathlib
+import re
+import shutil
 
 import pytest
 
 from sportstv_streaming_data_warehouse_spark.plans.catalog import (
-    CORRECTNESS_WINDOW,
-    DRIVER_GREEN_ROUNDS,
+    ANCHORS,
+    ORACLE,
+    QUERIES,
+    WINDOW_SIZE,
     all_oracles,
     all_queries,
+    correctness_window,
+    driver_green_rounds,
+    staleness_period,
 )
 
 REPO = pathlib.Path(__file__).resolve().parent.parent
 
 
+def _recorded_rounds(root: pathlib.Path) -> list[int]:
+    return sorted(
+        int(m.group(1))
+        for f in root.glob("CORRECTNESS_r*.json")
+        if (m := re.fullmatch(r"CORRECTNESS_r(\d+)\.json", f.name))
+    )
+
+
+def _overdue(root: pathlib.Path, window: list[str]) -> list[str]:
+    """Oracle-backed queries outside ``window`` whose last driver-green
+    row under ``root`` is older than the staleness period allows for the
+    round after the newest recorded one."""
+    current_round = max(_recorded_rounds(root)) + 1
+    greens = driver_green_rounds(root)
+    p = staleness_period()
+    return [
+        name
+        for name in all_oracles()
+        if name not in window
+        and max(greens.get(name, [0])) < current_round - p
+    ]
+
+
 def test_window_is_the_registry_prefix():
+    window = correctness_window()
     names = list(all_queries())
-    assert names[: len(CORRECTNESS_WINDOW)] == CORRECTNESS_WINDOW
+    assert names[: len(window)] == window
 
 
 def test_window_oracle_entries_first_rows_only_smoke_tail():
@@ -27,12 +59,13 @@ def test_window_oracle_entries_first_rows_only_smoke_tail():
     permitted ONLY as a contiguous smoke tail (round-7 policy change:
     rows-only queries get one driver rows/err record each, per the
     round-6 verdict, by borrowing window slots for a round)."""
+    window = correctness_window()
     oracles = all_oracles()
     tail_start = min(
-        (i for i, n in enumerate(CORRECTNESS_WINDOW) if n not in oracles),
-        default=len(CORRECTNESS_WINDOW),
+        (i for i, n in enumerate(window) if n not in oracles),
+        default=len(window),
     )
-    offenders = [n for n in CORRECTNESS_WINDOW[tail_start:] if n in oracles]
+    offenders = [n for n in window[tail_start:] if n in oracles]
     assert not offenders, (
         f"oracle-backed window entries after the rows-only smoke tail: {offenders}"
     )
@@ -44,7 +77,7 @@ def test_rows_only_queries_come_last():
     prefix and oracle-backed overflow stay contiguous."""
     names = list(all_queries())
     oracles = all_oracles()
-    overflow = names[len(CORRECTNESS_WINDOW):]
+    overflow = names[len(correctness_window()):]
     tail_start = min(
         (i for i, n in enumerate(overflow) if n not in oracles),
         default=len(overflow),
@@ -55,53 +88,21 @@ def test_rows_only_queries_come_last():
 
 
 def test_window_size_matches_driver_budget():
-    assert len(CORRECTNESS_WINDOW) == 50
-
-
-def test_driver_ledger_matches_correctness_files():
-    """DRIVER_GREEN_ROUNDS must exactly reflect the recorded
-    CORRECTNESS_r{N}.json files present in the repo root (full pass =
-    rows + schema + hash, no error)."""
-    truth: dict[str, list[int]] = {}
-    for rnd in range(1, 21):
-        path = REPO / f"CORRECTNESS_r{rnd:02d}.json"
-        if not path.exists():
-            continue
-        data = json.loads(path.read_text())
-        for name, row in data.items():
-            if (
-                row.get("rows_match")
-                and row.get("schema_match")
-                and row.get("hash_match")
-                and not row.get("err")
-            ):
-                truth.setdefault(name, []).append(rnd)
-    # The ledger is written BEFORE the round-3 driver run, so ignore rounds
-    # recorded after the rounds the ledger knows about.
-    known = {r for rounds in DRIVER_GREEN_ROUNDS.values() for r in rounds}
-    for name, rounds in truth.items():
-        rounds = [r for r in rounds if r in known]
-        if rounds:
-            assert DRIVER_GREEN_ROUNDS.get(name) == rounds, (
-                f"{name}: ledger {DRIVER_GREEN_ROUNDS.get(name)} != recorded {rounds}"
-            )
-    for name, rounds in DRIVER_GREEN_ROUNDS.items():
-        recorded = [r for r in truth.get(name, []) if r in known]
-        assert recorded == rounds, (
-            f"{name}: ledger {rounds} has no matching recorded rows {recorded}"
-        )
+    assert len(correctness_window()) == 50
 
 
 def test_cumulative_driver_coverage_complete():
     """Every oracle-backed query has either already earned a driver-green
-    row (ledger) or sits in the current window (pending this round's run):
-    cumulative coverage after this round is all oracle-backed queries."""
+    row (CORRECTNESS files) or sits in the current window (pending this
+    round's run): cumulative coverage after this round is all
+    oracle-backed queries."""
+    greens = driver_green_rounds()
     oracles = set(all_oracles())
-    covered = set(DRIVER_GREEN_ROUNDS) | set(CORRECTNESS_WINDOW)
+    covered = set(greens) | set(correctness_window())
     uncovered = oracles - covered
     assert not uncovered, f"oracle-backed queries never driver-scheduled: {uncovered}"
-    unknown = set(DRIVER_GREEN_ROUNDS) - set(all_queries())
-    assert not unknown, f"ledger names not in registry: {unknown}"
+    unknown = set(greens) - set(all_queries())
+    assert not unknown, f"driver-green names not in registry: {unknown}"
 
 
 def test_every_oracle_has_portable_duckdb_result_types():
@@ -132,7 +133,6 @@ def test_staleness_period_change_is_signed_off():
     invariant must not weaken silently as the catalog grows)."""
     from sportstv_streaming_data_warehouse_spark.plans.catalog import (
         EXPECTED_STALENESS_PERIOD,
-        staleness_period,
     )
 
     assert staleness_period() == EXPECTED_STALENESS_PERIOD, (
@@ -150,92 +150,82 @@ def test_no_oracle_query_staler_than_budget_period():
     (catalog.staleness_period(): the tightest bar the driver's fixed
     50-slot budget can enforce — 2 rounds through round 6's 144-oracle
     point, loosening only as the catalog outgrows 48 slots/round).
-    Keeps the curated 50-slot prefix honest as the catalog grows."""
-    import re
-
-    from sportstv_streaming_data_warehouse_spark.plans.catalog import (
-        staleness_period,
-    )
-    from tools.update_ledger import collect as ledger_collect
-
-    recorded = sorted(
-        int(m.group(1))
-        for f in REPO.glob("CORRECTNESS_r*.json")
-        if (m := re.fullmatch(r"CORRECTNESS_r(\d+)\.json", f.name))
-    )
-    if not recorded:
+    Keeps the 50-slot prefix honest as the catalog grows."""
+    if not _recorded_rounds(REPO):
         pytest.skip("no CORRECTNESS files recorded yet (fresh clone)")
-    current_round = max(recorded) + 1
-    # Fold the artifacts in-memory rather than trusting the committed
-    # DRIVER_GREEN_ROUNDS snapshot: the driver writes CORRECTNESS_r{N}
-    # AFTER the builder's last round-N commit, so at every end-of-round
-    # HEAD the snapshot lags one artifact and this test went red two
-    # rounds running (round-12/13 verdicts) for queries that WERE green
-    # in the just-recorded file. The snapshot-vs-files equality is
-    # separately pinned by test_driver_ledger_matches_correctness_files.
-    greens = ledger_collect()
-    p = staleness_period()
-    stale = [
-        name
-        for name in all_oracles()
-        if name not in CORRECTNESS_WINDOW
-        and max(greens.get(name, [0])) < current_round - p
-    ]
+    stale = _overdue(REPO, correctness_window())
     assert not stale, (
-        f"queries overdue for driver re-verification (period {p}): {stale}"
+        f"queries overdue for driver re-verification "
+        f"(period {staleness_period()}): {stale}"
     )
 
 
-def test_rotation_survives_unfolded_correctness_artifact(monkeypatch):
-    """The driver writes CORRECTNESS_r{N}.json AFTER the builder's last
-    round-N commit, so the committed DRIVER_GREEN_ROUNDS snapshot lags
-    one artifact at every end-of-round HEAD. plan_window used to
-    SystemExit on that lag (rotate_window.py:68, flagged by the
-    round-12 AND round-13 verdicts); it must now plan from the
-    artifacts directly, producing the same window as the folded state."""
-    import tools.rotate_window as rw
-
-    baseline = rw.plan_window()
-    newest = max(r for rs in DRIVER_GREEN_ROUNDS.values() for r in rs)
-    lagged = {
-        n: [r for r in rs if r != newest]
-        for n, rs in DRIVER_GREEN_ROUNDS.items()
-    }
-    lagged = {n: rs for n, rs in lagged.items() if rs}
-    assert lagged != DRIVER_GREEN_ROUNDS, "newest round must drop some rows"
-    monkeypatch.setattr(rw, "DRIVER_GREEN_ROUNDS", lagged)
-    assert rw.plan_window() == baseline
-
-
-def test_rotate_window_tool_plans_a_valid_window():
-    """tools/rotate_window.py must emit a window the registry invariants
+def test_correctness_window_is_valid():
+    """correctness_window() must give a window the registry invariants
     accept: exactly the driver budget, anchors first, unique entries,
-    all oracle-backed, and EVERY stale query included (so applying the
-    tool can never fail the staleness gate for ledger-known queries)."""
-    import re as _re
-
-    from tools.plan_rotation import ANCHORS, WINDOW_SIZE
-    from tools.rotate_window import plan_window
-
-    window, current, last = plan_window()
+    all oracle-backed, and EVERY stale query included."""
+    window = correctness_window()
     assert len(window) == WINDOW_SIZE
     assert len(set(window)) == WINDOW_SIZE
     assert window[: len(ANCHORS)] == list(ANCHORS)
-    oracles = set(all_oracles())
-    assert set(window) <= oracles
-    from sportstv_streaming_data_warehouse_spark.plans.catalog import (
-        staleness_period,
-    )
-
+    assert set(window) <= set(all_oracles())
+    recorded = _recorded_rounds(REPO)
+    current = max(recorded) + 1 if recorded else 1
     stale = {
         n
-        for n, m in last.items()
-        if m < current - staleness_period() and n not in ANCHORS
+        for n, rounds in driver_green_rounds().items()
+        if n in ORACLE
+        and max(rounds) < current - staleness_period()
+        and n not in ANCHORS
     }
     assert stale <= set(window), stale - set(window)
-    recorded = sorted(
-        int(m.group(1))
-        for f in REPO.glob("CORRECTNESS_r*.json")
-        if (m := _re.fullmatch(r"CORRECTNESS_r(\d+)\.json", f.name))
-    )
-    assert current == (max(recorded) + 1 if recorded else 1)
+
+
+def _write_round(root: pathlib.Path, rnd: int, green: list[str],
+                 failed: tuple[str, ...] = ()) -> None:
+    row = {"rows_match": True, "schema_match": True, "hash_match": True,
+           "spark_rows": 1, "oracle_rows": 1, "err": None}
+    rows = {name: dict(row) for name in green}
+    for name in failed:
+        rows[name]["hash_match"] = False
+    (root / f"CORRECTNESS_r{rnd:02d}.json").write_text(json.dumps(rows))
+
+
+def test_window_follows_the_next_correctness_artifact(tmp_path, monkeypatch):
+    """The driver commits the next CORRECTNESS file for the current
+    window; the window computed from the files after it must leave
+    nothing overdue, keep an entry that failed its run, schedule an
+    oracle that has never been green, and stay at the driver budget when
+    more queries are overdue than it can hold."""
+    for f in REPO.glob("CORRECTNESS_r*.json"):
+        shutil.copy(f, tmp_path)
+    window = correctness_window(tmp_path)
+    failed = window[-1]  # the newest last-green pick: due only if it fails
+    monkeypatch.setitem(QUERIES, "zz_never_green", QUERIES[ANCHORS[0]])
+    monkeypatch.setitem(ORACLE, "zz_never_green", ORACLE[ANCHORS[0]])
+    nxt = max(_recorded_rounds(tmp_path), default=0) + 1
+    _write_round(tmp_path, nxt, window, failed=(failed,))
+
+    after = correctness_window(tmp_path)
+    assert len(after) == WINDOW_SIZE and len(set(after)) == WINDOW_SIZE
+    assert after[: len(ANCHORS)] == list(ANCHORS)
+    assert not _overdue(tmp_path, after), staleness_period()
+    assert failed in after
+    assert "zz_never_green" in after
+
+    # no artifacts: the anchors plus the alphabetically first oracles
+    empty = tmp_path / "empty"
+    empty.mkdir()
+    rest = sorted(n for n in ORACLE if n not in ANCHORS)
+    assert correctness_window(empty) == [
+        *ANCHORS, *rest[: WINDOW_SIZE - len(ANCHORS)]
+    ]
+
+    # more overdue queries than slots: still exactly the budget, and the
+    # staleness check names the remainder
+    flooded = tmp_path / "flooded"
+    flooded.mkdir()
+    _write_round(flooded, 16, list(ANCHORS))
+    w = correctness_window(flooded)
+    assert len(w) == WINDOW_SIZE and w[: len(ANCHORS)] == list(ANCHORS)
+    assert len(_overdue(flooded, w)) == len(ORACLE) - WINDOW_SIZE

@@ -17,9 +17,9 @@ import sys
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from sportstv_streaming_data_warehouse_spark.plans.catalog import (  # noqa: E402
-    DRIVER_GREEN_ROUNDS,
     ORACLE,
     all_queries,
+    driver_green_rounds,
 )
 
 HEADER = """# CATALOG — every registry query
@@ -151,9 +151,10 @@ def module_first_sentence(mod_name: str) -> str:
 
 def main() -> None:
     rows = ["| # | query | oracle | green | what it does |", "|---|---|---|---|---|"]
+    greens = driver_green_rounds()
     for i, (name, fn) in enumerate(all_queries().items()):
         oracle = "yes" if name in ORACLE else "rows-only"
-        green = DRIVER_GREEN_ROUNDS.get(name)
+        green = greens.get(name)
         status = (
             ",".join(f"r{r}" for r in green) if green
             else ("pending" if i < 50 else "—")
