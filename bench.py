@@ -2,43 +2,42 @@
 $SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1) on
 local[$SPARK_GRAFT_CPUS] and prints ONE JSON line.
 
+    python bench.py                 # the 56 HEADLINE queries
+    python bench.py q1 q2 ...       # only the named queries
+
 Reference baseline (BASELINE.md): ~51 s end-to-end ETL over 1.18M rows
 (~23K rows/s) + sub-second analytics. sf0.1 (~600K lineitem rows) is the
 closest fixture; `flagship_daily_rollup` and `star_fact_events` are the
 ETL analogs, the rest are the analytics catalog.
 
-Each query runs a DISCARDED warm-up iteration followed by
+Every query is timed by `time_query`, the one timing loop for headline
+measurements (tools/ab_compare.py runs this file; tools/measure.py
+calls the function): a DISCARDED warm-up iteration followed by
 $SPARK_GRAFT_BENCH_ITERS timed iterations (default 5; historically
 noisy queries get 8 via EXTRA_ITERS, and any query whose sample spread
 exceeds ADAPTIVE_SPREAD earns up to ADAPTIVE_MAX_EXTRA top-up samples).
 The reported per-query statistic is the MEDIAN OF THE 3 FASTEST samples
-(round 7+, stat "min3-median"): shared-box interference is additive and
-strictly positive, so the fastest samples estimate true plan cost, and
-the bottom-3 median keeps one lucky outlier from setting the number —
-round-6's plain median let a 6.68x-spread window shift queries 1.5x
-with no code change. Full-sample medians, per-query MIN and spreads are
-kept in the detail record, and any query whose full spread exceeds
-OUTLIER_SPREAD (3x) is listed in `outliers` so a contaminated sample
-window is visible instead of silently recorded (round-2 verdict: a
-20.7 s decile sample that re-measured at 1.8 s steady-state dominated
-the headline total).
+(`robust_stat`): shared-box interference is additive and strictly
+positive, so the fastest samples estimate true plan cost, and the
+bottom-3 median keeps one lucky outlier from setting the number — a
+plain median let a 6.68x-spread window shift queries 1.5x with no code
+change. Full-sample medians, per-query MIN, spreads and the raw samples
+go to the detail record on stderr, and any query whose full spread
+exceeds OUTLIER_SPREAD (3x) is listed in `outliers` so a contaminated
+sample window is visible instead of silently recorded.
 
-Load gating (round 5, tightened round 7): if the 1-minute loadavg
-exceeds $SPARK_GRAFT_BENCH_MAX_LOAD (default 8) the run waits and
-retries up to 3 times; if the box is still busy it emits its stdout
-record (the driver contract) with `"contaminated": true` and does not
-append to BENCH_history.jsonl.
-Every clean run appends its full record (including raw per-iteration
-samples) to BENCH_history.jsonl so rounds can be diffed
-median-to-median.
+Load gating: if the 1-minute loadavg exceeds
+$SPARK_GRAFT_BENCH_MAX_LOAD (default 8) the run waits and retries up to
+3 times; if the box is still busy it still emits its one-line stdout
+record with `"contaminated": true`.
 
 The record reports this run and nothing else: `value`, `queries` and
 the tiers are always the live measurements, `cores` is the session's
 default parallelism, and the box probes (empty_job_ms, cpu_speed_probe,
 ref_query_probe, mt_speed_probe) are context for a reader comparing
-runs. The bench never reads BENCH_history.jsonl. Comparing two commits
-is the job of an interleaved A/B on one box (tools/ab_compare.py) or
-of perfbench/.
+runs. The bench reads and writes no file in the checkout. Comparing two
+commits is the job of an interleaved A/B on one box
+(tools/ab_compare.py) or of perfbench/.
 """
 
 from __future__ import annotations
@@ -46,7 +45,6 @@ from __future__ import annotations
 import json
 import os
 import statistics
-import subprocess
 import sys
 import time
 
@@ -105,21 +103,14 @@ HEADLINE = [
     "w_event_sequences",       # per-user behavior trajectories (r6)
     "q_out_of_order_audit",    # distributed running-max lateness audit (r6)
     "x_cascade_delete_plan",   # GDPR cascade impact manifest (r6)
-    # round-13 refresh (round-12 verdict task 7): one timed representative
-    # per post-r6 tier, so rounds 7-12 operators get regression coverage.
-    # The first 51 names above are frozen for history continuity; their
-    # subtotal is reported as r6_comparable_total every round.
+    # one timed representative per post-r6 tier, so the rounds 7-12
+    # operators get regression coverage
     "x_knn_ivfpq_recall",      # IVF x PQ ANN + recall scorecard (r9/r10)
     "x_bpe_top_pairs",         # BPE round-0 pair statistics (r11)
     "x_pack_context",          # context-window packing layout (r11)
     "x_decontam_bloom",        # Bloom-screened decontamination (r11)
     "s_near_dup_gate_grain",   # streaming near-dup gate, two-batch replay (r12)
 ]
-
-# the round-6 51-query prefix — the set every history entry up to round
-# 12 timed; its subtotal keeps cross-round totals comparable after the
-# round-13 additions
-R6_SET = HEADLINE[:51]
 
 # Queries whose history shows multi-second shared-box variance get more
 # timed iterations so one slow process window cannot set the median.
@@ -243,6 +234,36 @@ def hash_force(df) -> None:
     df.select(
         F.bit_xor(F.xxhash64(F.struct(*df.columns))).alias("h")
     ).collect()
+
+
+def bench_iters() -> int:
+    """Base timed iterations per query: $SPARK_GRAFT_BENCH_ITERS, default 5."""
+    return int(os.environ.get("SPARK_GRAFT_BENCH_ITERS", "5"))
+
+
+def time_query(spark, sf_dir: str, name: str, iters: int) -> list[float]:
+    """Timed samples (seconds) of catalog query `name` at `sf_dir`, each
+    forcing its complete plan through `hash_force`. A discarded warm-up
+    absorbs plan compilation and page-cache faults; then
+    max(iters, EXTRA_ITERS[name]) timed runs, topped up by up to
+    ADAPTIVE_MAX_EXTRA more while the max/min spread exceeds
+    ADAPTIVE_SPREAD, so a noisy window costs extra samples instead of
+    poisoning `robust_stat`."""
+
+    def timed() -> float:
+        t0 = time.perf_counter()
+        hash_force(QUERIES[name](spark, sf_dir))
+        return time.perf_counter() - t0
+
+    timed()  # discarded warm-up
+    base = max(iters, EXTRA_ITERS.get(name, 0))
+    times = [timed() for _ in range(base)]
+    while (
+        max(times) / min(times) > ADAPTIVE_SPREAD
+        and len(times) < base + ADAPTIVE_MAX_EXTRA
+    ):
+        times.append(timed())
+    return times
 
 
 #: hard cap on the emitted one-line stdout record
@@ -434,9 +455,11 @@ def run_golden_tier(spark) -> dict:
         shutil.rmtree(workdir, ignore_errors=True)
 
 
-def main() -> None:
+def main(names: list[str] | None = None) -> None:
+    """Time `names` (default: HEADLINE) and the two tiers; print the record."""
+    names = names or HEADLINE
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    iters = int(os.environ.get("SPARK_GRAFT_BENCH_ITERS", "5"))
+    iters = bench_iters()
     max_load = float(os.environ.get("SPARK_GRAFT_BENCH_MAX_LOAD", "8"))
     loadavg_pre_gate = [round(x, 2) for x in os.getloadavg()]
     quiet = wait_for_quiet_box(max_load)
@@ -457,34 +480,14 @@ def main() -> None:
     QUERIES["flagship_daily_rollup"](spark, "/root/testdata/sf0.001").count()
     QUERIES["x_dedup_minhash_lsh"](spark, "/root/testdata/sf0.001").count()
 
-    def run_full(name: str) -> None:
-        hash_force(QUERIES[name](spark, sf_dir))
-
     per_query: dict[str, float] = {}
     per_query_min: dict[str, float] = {}
     per_query_spread: dict[str, float] = {}
     raw_samples: dict[str, list[float]] = {}
     outliers: dict[str, float] = {}
     per_query_median_all: dict[str, float] = {}
-    for name in HEADLINE:
-        # discarded warm-up: absorbs plan compilation + page-cache faults
-        run_full(name)
-        times = []
-        for _ in range(max(iters, EXTRA_ITERS.get(name, 0))):
-            t0 = time.perf_counter()
-            run_full(name)
-            times.append(time.perf_counter() - t0)
-        # adaptive top-up: a noisy sample window earns more samples so
-        # the bottom-3 statistic is drawn from a quieter stretch
-        extra = 0
-        while (
-            max(times) / min(times) > ADAPTIVE_SPREAD
-            and extra < ADAPTIVE_MAX_EXTRA
-        ):
-            t0 = time.perf_counter()
-            run_full(name)
-            times.append(time.perf_counter() - t0)
-            extra += 1
+    for name in names:
+        times = time_query(spark, sf_dir, name, iters)
         bottom3 = sorted(times)[:3]
         per_query[name] = round(robust_stat(times), 3)
         per_query_median_all[name] = round(statistics.median(times), 3)
@@ -501,28 +504,18 @@ def main() -> None:
             outliers[name] = full_spread
 
     total = round(sum(per_query.values()), 3)
-    # subtotal over the 16 queries round 1 benched. NOTE: comparable only
-    # between entries with the SAME `probe` field — rounds 1-3 timed
-    # under count(), which under-measures pruned expressions (see
-    # hash_force); bench_diff warns on cross-probe comparisons.
-    r1_set = HEADLINE[:16]
-    r1_total = round(sum(per_query[n] for n in r1_set), 3)
-    # subtotal over the round-6 51-query prefix — every history entry
-    # through round 12 timed exactly this set, so the round-13 headline
-    # additions don't break cross-round total comparisons
-    r6_total = round(sum(per_query[n] for n in R6_SET), 3)
     # records/s of the ETL-analog rollup, comparable to BASELINE.md's
-    # ~23K rows/s reference throughput
+    # ~23K rows/s reference throughput (None when the rollup was not timed)
     from sportstv_streaming_data_warehouse_spark.sources.fixtures import load_table
 
     n_rows = load_table(spark, sf_dir, "lineitem").count()
-    throughput = round(n_rows / per_query["flagship_daily_rollup"])
-    # round-5 verdict: the driver's tail capture could not hold a final
-    # line carrying 45 queries x (median + min + spread) dicts, so
-    # BENCH_r05.json recorded parsed=null. The stdout contract stays ONE
-    # compact JSON line (totals + per-query medians); the DETAIL record
-    # (min/spread/outliers/loadavg — anything a human diffing rounds
-    # wants) goes to stderr and, for clean runs, BENCH_history.jsonl.
+    rollup_sec = per_query.get("flagship_daily_rollup")
+    throughput = round(n_rows / rollup_sec) if rollup_sec else None
+    # a stdout tail capture could not hold a final line carrying 45
+    # queries x (median + min + spread) dicts (BENCH_r05.json recorded
+    # parsed=null). The stdout contract stays ONE compact JSON line
+    # (totals + per-query statistics); the DETAIL record (min, spread,
+    # outliers, raw samples, loadavg) goes to stderr.
 
     # Report-tier bench (round-7 verdict task #4): BASELINE.md's <100 ms
     # claim is measured against the reference's PRE-AGGREGATED MySQL
@@ -538,9 +531,8 @@ def main() -> None:
     from sportstv_streaming_data_warehouse_spark.plans import report as R
 
     # guarded end-to-end: a failure here must not discard the completed
-    # headline measurements above (the stdout record and history append
-    # still happen), and the materialized fact must not leak in /tmp
-    # (round-8 review finding)
+    # headline measurements above (the stdout record still prints), and
+    # the materialized fact must not leak in /tmp (round-8 review finding)
     fact_dir = tempfile.mkdtemp(prefix="bench-report-fact-")
     try:
         t0 = time.perf_counter()
@@ -643,7 +635,9 @@ def main() -> None:
         "queries_spread": per_query_spread,
         "outlier_spread_threshold": OUTLIER_SPREAD,
         "outliers": outliers,
-        "round1_comparable_total": r1_total,
+        # every timed sample, so spread questions are answerable after
+        # the fact without widening the stdout line
+        "queries_times": raw_samples,
         # shared-box context: 1/5/15-min load averages at start and end of
         # the run, so a contaminated sample window is diagnosable from the
         # record alone
@@ -669,16 +663,7 @@ def main() -> None:
         # the session's default parallelism: the core count every number
         # in this record was measured on
         "cores": cores,
-        # round 7+: median of the 3 fastest samples with adaptive top-up
-        # (see robust_stat) — rounds 4-6 history entries carry
-        # stat:"median"; bench_diff warns on cross-stat comparisons
-        "stat": "min3-median",
-        # round 13+: the frozen round-6 51-query subtotal (see R6_SET)
-        "r6_comparable_total": r6_total,
         "max_spread": max(per_query_spread.values()),
-        # forcing probe (round 4+: full-plan hash-reduce; earlier history
-        # entries used count(), which under-measured pruned expressions)
-        "probe": "hash-force",
         "n_outliers": len(outliers),
         # round 8+: the pre-aggregated report-serving path, comparable
         # to BASELINE.md's <100 ms pre-aggregated probes (headline
@@ -705,7 +690,7 @@ def main() -> None:
     }
     if not quiet:
         # the box never went quiet: still honor the JSON-line stdout
-        # contract, but mark the record and skip the history append below
+        # contract, but mark the record
         record["contaminated"] = True
 
     print(json.dumps(detail), file=sys.stderr)
@@ -718,33 +703,6 @@ def main() -> None:
     sys.stdout.flush()
     print(emit_record(record), flush=True)
 
-    if not quiet:
-        return
-
-    # bench history: append out-of-band metadata for round-over-round diffs
-    here = os.path.dirname(os.path.abspath(__file__))
-    try:
-        rev = subprocess.run(
-            ["git", "-C", here, "rev-parse", "--short", "HEAD"],
-            capture_output=True, text=True, timeout=10,
-        ).stdout.strip() or None
-    except Exception:
-        rev = None
-    try:
-        hist = dict(
-            record,
-            **{k: v for k, v in detail.items() if k != "metric"},
-            git=rev,
-            wall_clock=time.strftime("%Y-%m-%dT%H:%M:%S"),
-            # raw per-iteration samples: history-only (keeps the stdout
-            # line slim) so spread questions are answerable after the fact
-            queries_times=raw_samples,
-        )
-        with open(os.path.join(here, "BENCH_history.jsonl"), "a") as f:
-            f.write(json.dumps(hist) + "\n")
-    except Exception:
-        pass  # history is best-effort; the stdout contract must not break
-
 
 if __name__ == "__main__":
-    main()
+    main(sys.argv[1:])

@@ -727,14 +727,12 @@ def ivf_topk(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     query_id_col: str = "query_id",
-    portable: bool = False,
 ) -> DataFrame:
     """IVF-style ANN: partition the corpus into centroid cells, probe
     only the n_probe nearest cells per query.
 
     Deterministic end-to-end (stride-sampled centroids, tie-broken
-    argmax) — ``portable=True`` merely emits the RAW cosine instead of
-    the display-rounded one so the DuckDB oracle can hash-match.
+    argmax); emits the RAW cosine so the DuckDB oracle can hash-match.
 
     Centroids are a deterministic sample of corpus vectors (every n-th by
     id — kmeans would tighten cells but sampling keeps the operator
@@ -759,11 +757,8 @@ def ivf_topk(
         F.col("neighbor_id") != F.col(query_id_col)
     )
     scored = cand.withColumn("cosine_sim", cosine(F.col("__qvec"), F.col("__cvec")))
-    sim_out = (
-        F.col("cosine_sim") if portable else F.round("cosine_sim", 4)
-    ).alias("cosine_sim")
     return _per_query_topk(scored, query_id_col, F.desc("cosine_sim"), k).select(
-        query_id_col, "neighbor_id", "rank", sim_out
+        query_id_col, "neighbor_id", "rank", "cosine_sim"
     )
 
 
@@ -858,7 +853,6 @@ def ivf_recall_at_k(
     n_probe: int = 8,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    portable: bool = False,
     sample_fraction: float | None = None,
 ) -> DataFrame:
     """Recall@k scorecard for the IVF cell-probe ANN path (ivf_topk)
@@ -880,7 +874,7 @@ def ivf_recall_at_k(
     )
     ann = ivf_topk(
         corpus, queries, k=k, n_centroids=n_centroids, n_probe=n_probe,
-        id_col=id_col, vec_col=vec_col, portable=portable,
+        id_col=id_col, vec_col=vec_col,
     )
     return _recall_accounting(bf, ann)
 

@@ -1735,9 +1735,7 @@ def x_knn_ivf_ann(spark, sf_dir):
     # tests/test_similarity_recall.py.
     emb = load_table(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < 10)
-    return S.ivf_topk(
-        emb, queries, k=5, n_centroids=32, n_probe=8, portable=True
-    )
+    return S.ivf_topk(emb, queries, k=5, n_centroids=32, n_probe=8)
 
 
 @query("x_knn_lsh_ann")  # no SQL oracle: LSH recall measured in tests
@@ -3260,8 +3258,7 @@ def x_knn_ivf_recall(spark, sf_dir):
     emb = load_table(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < 10)
     return S.ivf_recall_at_k(
-        emb, queries, k=_KNN["k"], n_centroids=32, n_probe=8,
-        portable=True,
+        emb, queries, k=_KNN["k"], n_centroids=32, n_probe=8
     )
 
 

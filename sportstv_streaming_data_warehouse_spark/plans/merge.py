@@ -1,29 +1,26 @@
 """MERGE INTO seam — the reference's upsert endpoints (additive
 ``ON DUPLICATE KEY UPDATE``, etl.R:396-413; INSERT-IGNORE dedup,
-etl.R:300-312) as one contract, compiled today to a crash-safe
-rename-aside parquet swap and written so a Delta/Iceberg backend is a
-drop-in (the same seam shape as sources/jdbc.py: full option surface,
-sandbox-honest backend).
+etl.R:300-312) as one contract, compiled to a crash-safe rename-aside
+parquet swap.
 
 Two grains:
 
 - ``merge_into`` — row-grain MERGE: ``WHEN MATCHED`` update/delete,
-  ``WHEN NOT MATCHED`` insert. On Delta this is literally ``MERGE INTO
-  target USING source ON <keys>``; here the merged result is computed
-  with anti/inner joins and swapped in atomically.
-- ``replace_partitions`` — partition-grain replacement (Delta
-  ``replaceWhere`` / dynamic partition overwrite): rewrite exactly the
-  partitions the batch touches, never the rest of the table.
+  ``WHEN NOT MATCHED`` insert (``MERGE INTO target USING source ON
+  <keys>``); the merged result is computed with anti/inner joins and
+  swapped in atomically.
+- ``replace_partitions`` — partition-grain replacement (dynamic
+  partition overwrite): rewrite exactly the partitions the batch
+  touches, never the rest of the table.
 
-Crash safety (parquet backend): every rewrite goes write-staging →
+Crash safety: every rewrite goes write-staging →
 rename-base-aside → rename-staging-in → drop-retired, so the dataset
 directory is never the only copy being deleted. ``recover_dataset``
 restores a readable base from ANY intermediate crash state and runs as
 a preamble before each merge; tests/test_merge.py kills the swap
 between every adjacent step and asserts recovery.
 
-Local-filesystem paths only (os.rename/shutil semantics). On an object
-store, swap in the table-format MERGE this stands in for.
+Local-filesystem paths only (os.rename/shutil semantics).
 """
 
 from __future__ import annotations
@@ -36,132 +33,6 @@ from pyspark.sql import functions as F
 
 STAGING_SUFFIX = "__staging"
 RETIRED_SUFFIX = "__old"
-
-
-def delta_available() -> bool:
-    """Probe for the delta-spark package (round-7 verdict task #3: the
-    backend seam auto-activates when the sandbox ever gains the jar).
-    Import-only — cheap, and exactly the condition under which
-    ``DeltaTable`` can exist."""
-    try:
-        import delta  # noqa: F401  (delta-spark)
-
-        return True
-    except ImportError:
-        return False
-
-
-def merge_backend() -> str:
-    """Which backend ``merge_into`` compiles to: ``"delta"`` when
-    delta-spark is importable (real ``MERGE INTO`` with table-format
-    ACID), else ``"parquet_swap"`` (the crash-safe rename-aside swap
-    this module implements). tests/test_delta_backend.py pins the
-    selection both ways — the Delta leg is skip-marked until the
-    package lands."""
-    return "delta" if delta_available() else "parquet_swap"
-
-
-def _merge_into_delta(
-    spark: SparkSession,
-    target_path: str,
-    source: DataFrame,
-    on: list[str],
-    when_matched: str | dict[str, Column] | None,
-    when_not_matched: str | None,
-) -> None:
-    """The drop-in mapping this module's docstring promises, compiled
-    for real: each ``when_matched`` mode to its Delta MERGE clause.
-    Unreachable in this sandbox (no delta-spark) — dispatch is pinned by
-    tests/test_delta_backend.py and the semantics by the parquet twin,
-    which tests/test_merge.py sweeps per crash point."""
-    # validate BOTH clause arguments before any branch (and before the
-    # delta import, so the check is testable without the package),
-    # exactly like the parquet backend — a typo must raise, never
-    # silently write an empty table on the missing-target path
-    # (round-8 review finding)
-    if when_matched not in ("update_all", "delete", None) and not isinstance(
-        when_matched, dict
-    ):
-        raise ValueError(f"unsupported when_matched: {when_matched!r}")
-    if when_not_matched not in ("insert_all", None):
-        raise ValueError(f"unsupported when_not_matched: {when_not_matched!r}")
-
-    # A NON-EMPTY directory without a _delta_log is a dataset the
-    # parquet_swap backend built before delta-spark became importable —
-    # treating it as "missing" would CREATE a fresh Delta table alongside
-    # the old files and silently drop every pre-existing row from the
-    # merge (round-8 advice). Migration is a deliberate one-time step,
-    # never an implicit branch. Checked BEFORE the delta import so the
-    # guard is pinned even where the package is absent.
-    if _non_delta_dataset_at(spark, target_path):
-        raise ValueError(
-            f"target {target_path!r} holds a non-Delta dataset "
-            "(parquet_swap-era files, no _delta_log); refusing to "
-            "CREATE over it. Convert it first — read the parquet and "
-            "write.format('delta').save() to a fresh path, or use "
-            "delta.DeltaTable.convertToDelta — then re-run the merge."
-        )
-
-    from delta.tables import DeltaTable
-
-    if not DeltaTable.isDeltaTable(spark, target_path):
-        # missing target behaves as an empty table (CREATE TABLE AS
-        # merge) — same contract as the parquet backend
-        inserts = source if when_not_matched == "insert_all" else source.limit(0)
-        inserts.write.format("delta").save(target_path)
-        return
-    t = DeltaTable.forPath(spark, target_path).alias("t")
-    cond = " AND ".join(f"t.{k} <=> s.{k}" for k in on)
-    m = t.merge(source.alias("s"), cond)
-    if when_matched == "update_all":
-        m = m.whenMatchedUpdateAll()
-    elif when_matched == "delete":
-        m = m.whenMatchedDelete()
-    elif isinstance(when_matched, dict):
-        m = m.whenMatchedUpdate(set={c: expr for c, expr in when_matched.items()})
-    if when_not_matched == "insert_all":
-        m = m.whenNotMatchedInsertAll()
-    m.execute()
-
-
-def _non_delta_dataset_at(spark, target_path: str) -> bool:
-    """True when ``target_path`` holds a non-empty dataset (ignoring
-    underscore marker files) with no ``_delta_log`` — the round-8-advice
-    data-loss hazard. Whenever a session is available, EVERY path —
-    URI (s3a://, hdfs://, file:) and schemeless alike — goes through
-    the Hadoop FileSystem API: a schemeless path is resolved against
-    ``fs.defaultFS``, exactly where Spark/Delta will write it, so on a
-    cluster whose defaultFS is HDFS the guard inspects the HDFS
-    directory rather than a same-named path on the driver's local disk
-    (round-9 ADVICE: the os.path branch silently never fired for
-    schemeless targets off-box). The stdlib branch remains only as the
-    no-session fallback (local defaultFS assumption, which is what
-    no-session implies), keeping the guard testable without a session
-    or the delta package."""
-    if spark is None:
-        return _non_delta_dataset_local(target_path)
-    jvm = spark._jvm
-    path = jvm.org.apache.hadoop.fs.Path(target_path)
-    fs = path.getFileSystem(spark._jsc.hadoopConfiguration())
-    # resolve schemeless against defaultFS + working dir, like a write
-    path = fs.makeQualified(path)
-    if not fs.exists(path):
-        return False
-    names = [st.getPath().getName() for st in fs.listStatus(path)]
-    return (
-        any(not n.startswith("_") for n in names) and "_delta_log" not in names
-    )
-
-
-def _non_delta_dataset_local(target_path: str) -> bool:
-    """Driver-local stdlib variant of the guard — the no-session
-    fallback only (assumes defaultFS is the local filesystem, which is
-    what having no session implies)."""
-    return (
-        os.path.isdir(target_path)
-        and any(not e.startswith("_") for e in os.listdir(target_path))
-        and not os.path.isdir(os.path.join(target_path, "_delta_log"))
-    )
 
 
 def _paths(target_path: str) -> tuple[str, str, str]:
@@ -232,8 +103,8 @@ def merge_into(
     ``when_matched``:
       - ``"update_all"`` — matched target rows are replaced by the
         source rows for their key (key-replacement: with one source row
-        per key this is Delta's ``UPDATE SET *``; with several, all of
-        them land — replays converge, where Delta would error);
+        per key this is ``UPDATE SET *``; with several, all of them
+        land, so replays converge);
       - ``"delete"`` — matched target rows are removed;
       - a dict ``{col: Column}`` — matched rows are rewritten with the
         given expressions over aliases ``t`` (target) and ``s``
@@ -250,22 +121,9 @@ def merge_into(
     yields the same dataset — the exactly-once guarantee foreachBatch
     sinks need.
 
-    Backend selection (merge_backend()): with delta-spark installed this
-    compiles to a real ``MERGE INTO`` (_merge_into_delta); otherwise to
-    the crash-safe parquet swap below. Key comparison is NULL-SAFE on
-    both backends (``<=>`` in the Delta condition, eqNullSafe joins
-    here), so NULL-keyed rows merge idempotently rather than
-    re-inserting per replay. One difference is deliberate: the parquet
-    backend's ``update_all`` is key-replacement (several source rows
-    per key all land), where Delta errors on multiple matches —
-    deterministic-single-row-per-key sources behave identically on
-    both.
+    Key comparison is NULL-SAFE (eqNullSafe joins), so NULL-keyed rows
+    merge idempotently rather than re-inserting per replay.
     """
-    if merge_backend() == "delta":
-        _merge_into_delta(
-            spark, target_path, source, on, when_matched, when_not_matched
-        )
-        return
     recover_dataset(target_path)
     base, _, _ = _paths(target_path)
     try:
@@ -275,12 +133,9 @@ def merge_into(
         has_target = False
 
     def _null_safe_anti_or_semi(left, right_keys, how):
-        # NULL-SAFE key joins throughout (round-8 review finding): the
-        # Delta backend's MERGE condition is `t.k <=> s.k`, so a
-        # NULL-keyed row MATCHES its twin there — plain equality here
-        # would instead re-insert it on every replay, and the two
-        # backends would converge to different datasets. eqNullSafe
-        # keeps the key-replacement merge idempotent for NULL keys too
+        # NULL-SAFE key joins throughout: plain equality would
+        # re-insert a NULL-keyed row on every replay. eqNullSafe keeps
+        # the key-replacement merge idempotent for NULL keys too
         # (tests/test_merge.py pins the replay).
         r = right_keys
         for k in on:
@@ -348,8 +203,7 @@ def replace_partitions(
     df: DataFrame, target_path: str, partition_cols: list[str]
 ) -> None:
     """Partition-grain MERGE: overwrite exactly the partitions present
-    in ``df`` (Delta ``replaceWhere`` / Spark dynamic partition
-    overwrite), leaving every other partition untouched — the 100 TB
+    in ``df`` (Spark dynamic partition overwrite), leaving every other partition untouched — the 100 TB
     shape for incremental fact maintenance: work scales with the
     affected partitions, not the table.
     """

@@ -17,10 +17,8 @@ exactly what Structured Streaming provides natively (SURVEY.md §2.10):
 
 Scale posture: state is bounded by the watermark (late data beyond it is
 dropped and state evicted); the sink merge touches only the grain keys
-present in each micro-batch. On a real deployment the sink would be Delta
-``MERGE INTO`` — this container has no Delta, so the merge is implemented
-as read-existing → anti-join on batch keys → union → atomic swap, which
-has the same semantics on parquet.
+present in each micro-batch. The sink merge is ``MERGE INTO`` semantics
+on parquet: read-existing → anti-join on batch keys → union → atomic swap.
 """
 
 from __future__ import annotations
@@ -88,8 +86,7 @@ def _merge_batch(batch: DataFrame, out_path: str) -> None:
     present in the batch are replaced wholesale, so replays converge to
     the same state — exactly ``MERGE INTO fact USING batch ON (day,
     sport) WHEN MATCHED THEN UPDATE SET * WHEN NOT MATCHED THEN INSERT
-    *``, routed through the plans.merge seam (crash-safe rename-aside
-    swap today; a Delta/Iceberg backend is a drop-in there)."""
+    *``, routed through plans.merge's crash-safe rename-aside swap."""
     from ..plans.merge import merge_into
 
     merge_into(

@@ -9,15 +9,16 @@ the tiers and `cores` describe the session that ran, whatever
 BENCH_history.jsonl holds. An 8-core run's 32-way `mt_speed_probe`
 reads about 4x a 32-core run's by design; the record must still carry
 the 8-core numbers, so core-count scaling is visible rather than
-overwritten by another run's. The end-to-end case drives `bench.main`
-with a stand-in session whose queries cost a fixed few milliseconds, so
-it needs no real query work."""
+overwritten by another run's, and the run leaves the history file
+beside bench.py byte-identical. Given query names, `bench.main` times
+exactly those. The end-to-end cases drive `bench.main` with a stand-in
+session whose queries cost a fixed few milliseconds, so they need no
+real query work."""
 
 from __future__ import annotations
 
 import collections
 import json
-import subprocess
 import time
 
 import pytest
@@ -115,49 +116,10 @@ class _Session:
         pass
 
 
-def _git_checkout(path) -> str:
-    """A one-commit repository at `path`; returns its short HEAD."""
-    def git(*args):
-        return subprocess.run(
-            ["git", "-C", str(path), "-c", "user.name=bench",
-             "-c", "user.email=bench@example.com", *args],
-            check=True, capture_output=True, text=True,
-        ).stdout.strip()
-
-    git("init", "-q")
-    git("commit", "-q", "--allow-empty", "-m", "bench")
-    return git("rev-parse", "--short", "HEAD")
-
-
-def test_eight_core_run_reports_its_own_numbers(spark, tmp_path, monkeypatch, capsys):
-    # `spark` only makes pyspark.sql.functions usable: hash_force builds
-    # its real hash expression, which the stand-in frame then ignores
-    import bench
+def _stub_bench(bench, monkeypatch, tmp_path) -> None:
+    """Point bench.main at the 8-core stand-in session, with bench's
+    module file inside tmp_path so any file it wrote would land there."""
     from sportstv_streaming_data_warehouse_spark.sources import fixtures
-
-    rev = _git_checkout(tmp_path)
-    history = tmp_path / "BENCH_history.jsonl"
-    # three quiet same-commit 32-core runs, every query 4x faster
-    hist_lines = [
-        json.dumps({
-            "metric": "headline_queries_total",
-            "value": round(HISTORY_SEC * len(bench.HEADLINE), 3),
-            "unit": "sec",
-            "queries": {n: HISTORY_SEC for n in bench.HEADLINE},
-            "sf": 0.1,
-            "stat": "min3-median",
-            "probe": "hash-force",
-            "cores": 32,
-            "empty_job_ms": 77.0 + i,
-            "cpu_speed_probe": 0.44,
-            "ref_query_probe": 0.30,
-            "mt_speed_probe": HISTORY_MT,
-            "git": rev,
-            "wall_clock": f"2026-10-0{i + 1}T12:00:00",
-        }) + "\n"
-        for i in range(3)
-    ]
-    history.write_text("".join(hist_lines))
 
     monkeypatch.setattr(bench, "__file__", str(tmp_path / "bench.py"))
     monkeypatch.setenv("SPARK_GRAFT_SF_DIR", str(tmp_path / "sf0.1"))
@@ -174,6 +136,35 @@ def test_eight_core_run_reports_its_own_numbers(spark, tmp_path, monkeypatch, ca
     monkeypatch.setattr(bench, "spark_ref_probe", lambda spark, sf_dir: 0.30)
     monkeypatch.setattr(bench, "mt_speed_probe", lambda spark: 4 * HISTORY_MT)
 
+
+def test_eight_core_run_reports_its_own_numbers(spark, tmp_path, monkeypatch, capsys):
+    # `spark` only makes pyspark.sql.functions usable: hash_force builds
+    # its real hash expression, which the stand-in frame then ignores
+    import bench
+
+    history = tmp_path / "BENCH_history.jsonl"
+    # three quiet same-commit 32-core runs, every query 4x faster
+    hist_lines = [
+        json.dumps({
+            "metric": "headline_queries_total",
+            "value": round(HISTORY_SEC * len(bench.HEADLINE), 3),
+            "unit": "sec",
+            "queries": {n: HISTORY_SEC for n in bench.HEADLINE},
+            "sf": 0.1,
+            "cores": 32,
+            "empty_job_ms": 77.0 + i,
+            "cpu_speed_probe": 0.44,
+            "ref_query_probe": 0.30,
+            "mt_speed_probe": HISTORY_MT,
+            "git": "abc1234",
+            "wall_clock": f"2026-10-0{i + 1}T12:00:00",
+        }) + "\n"
+        for i in range(3)
+    ]
+    history.write_text("".join(hist_lines))
+    before = history.read_bytes()
+    _stub_bench(bench, monkeypatch, tmp_path)
+
     bench.main()
 
     record = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
@@ -184,10 +175,28 @@ def test_eight_core_run_reports_its_own_numbers(spark, tmp_path, monkeypatch, ca
     assert all(v >= QUERY_SEC for v in record["queries"].values())
     assert record["value"] == pytest.approx(sum(record["queries"].values()), abs=0.01)
     assert record["value"] > 2 * HISTORY_SEC * len(bench.HEADLINE)
-    # a quiet run appends its own raw record; history is never rewritten
-    lines = history.read_text().splitlines(keepends=True)
-    assert lines[:3] == hist_lines and len(lines) == 4
-    appended = json.loads(lines[3])
-    assert appended["git"] == rev and appended["cores"] == 8
-    assert appended["value"] == record["value"]
-    assert appended["queries"] == record["queries"]
+    # the bench neither reads nor writes the history beside it
+    assert history.read_bytes() == before
+
+
+def test_main_with_names_times_exactly_those_names(spark, tmp_path, monkeypatch, capsys):
+    import bench
+
+    _stub_bench(bench, monkeypatch, tmp_path)
+    timed = []
+    time_query = bench.time_query
+
+    def spy(spark, sf_dir, name, iters):
+        timed.append(name)
+        return time_query(spark, sf_dir, name, iters)
+
+    monkeypatch.setattr(bench, "time_query", spy)
+
+    bench.main(["x_sample_exact_k", "a4_global_summary"])
+
+    record = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    assert timed == ["x_sample_exact_k", "a4_global_summary"]
+    assert list(record["queries"]) == timed
+    # the rollup was not timed, so there is no rollup throughput
+    assert record["rollup_rows_per_sec"] is None
+    assert record["iters"] == 3 and record["cores"] == 8

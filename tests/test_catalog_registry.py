@@ -54,23 +54,6 @@ def test_window_is_the_registry_prefix():
     assert names[: len(window)] == window
 
 
-def test_window_oracle_entries_first_rows_only_smoke_tail():
-    """Oracle-backed entries fill the window head; rows-only entries are
-    permitted ONLY as a contiguous smoke tail (round-7 policy change:
-    rows-only queries get one driver rows/err record each, per the
-    round-6 verdict, by borrowing window slots for a round)."""
-    window = correctness_window()
-    oracles = all_oracles()
-    tail_start = min(
-        (i for i, n in enumerate(window) if n not in oracles),
-        default=len(window),
-    )
-    offenders = [n for n in window[tail_start:] if n in oracles]
-    assert not offenders, (
-        f"oracle-backed window entries after the rows-only smoke tail: {offenders}"
-    )
-
-
 def test_rows_only_queries_come_last():
     """Rows-only queries NOT borrowed into the window must form a
     contiguous tail of the registry, so the driver's oracle-compare

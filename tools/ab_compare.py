@@ -1,21 +1,24 @@
-"""Controlled same-box A/B of two checkouts — alternating worker runs.
+"""Controlled same-box A/B of two checkouts — alternating bench runs.
 
 Usage:  python tools/ab_compare.py REPO_A REPO_B [--rounds 3]
+                                   [--queries q1,q2,...]
                                    [--out /tmp/ab_results.jsonl]
 
-Runs tools/ab_worker.py alternately against the two checkouts (A B,
-B A, A B, ...: pair i runs A first when i is even, B first when odd) so
-box drift decorrelates from the code difference: a code regression
-shows up as a CONSISTENT A-vs-B gap across adjacent pairs, while box
-inflation moves both sides of a pair together — and drift WITHIN a
-pair lands on each side equally often. This is the
-methodology that exonerated compact_index in round 12 (SCALE.md) and
-the one the round-12 verdict (task 2) prescribes for attributing the
-48.6-vs-37.8 s suite delta between round-12 HEAD and 9a82b1c.
+Runs each checkout's own `bench.py` (with cwd at the checkout, so it
+imports that checkout's package) alternately (A B, B A, A B, ...: pair i
+runs A first when i is even, B first when odd) so box drift
+decorrelates from the code difference: a code regression shows up as a
+CONSISTENT A-vs-B gap across adjacent pairs, while box inflation moves
+both sides of a pair together — and drift WITHIN a pair lands on each
+side equally often. Each side is therefore the same measurement as a
+plain bench run: same timing loop, statistic and box probes.
+
+`--queries` passes a subset to bench.py (default: its HEADLINE set).
+The bench's environment passes through, so SPARK_GRAFT_BENCH_GOLDEN=0
+skips the golden tier and SPARK_GRAFT_BENCH_ITERS sets the iterations.
 
 Prints a per-pair table plus probe-normalized ratios, and appends every
-worker record to --out for later inspection. Never writes
-BENCH_history.jsonl (the workers don't call bench.main).
+bench record to --out for later inspection.
 """
 
 from __future__ import annotations
@@ -27,26 +30,18 @@ import statistics
 import subprocess
 import sys
 
-HERE = os.path.dirname(os.path.abspath(__file__))
 
-
-def run_worker(repo: str, out_path: str, queries: str | None = None,
-               golden: int = 1) -> dict:
-    cmd = [sys.executable, os.path.join(HERE, "ab_worker.py"), "--repo", repo,
-           "--golden", str(golden)]
-    if queries:
-        cmd += ["--queries", queries]
+def run_bench(repo: str, out_path: str, names: list[str]) -> dict:
+    """One `bench.py` run in checkout `repo`; returns its stdout record."""
     proc = subprocess.run(
-        cmd,
-        capture_output=True, text=True, timeout=3600,
+        [sys.executable, os.path.join(repo, "bench.py"), *names],
+        cwd=repo, capture_output=True, text=True,
     )
     if proc.returncode != 0:
-        raise SystemExit(
-            f"worker failed for {repo}:\n{proc.stderr[-2000:]}"
-        )
+        raise SystemExit(f"bench failed for {repo}:\n{proc.stderr[-2000:]}")
     rec = json.loads(proc.stdout.strip().splitlines()[-1])
     with open(out_path, "a") as f:
-        f.write(json.dumps(rec) + "\n")
+        f.write(json.dumps(dict(rec, repo=repo)) + "\n")
     return rec
 
 
@@ -57,40 +52,33 @@ def main() -> None:
     ap.add_argument("--rounds", type=int, default=3)
     ap.add_argument("--out", default="/tmp/ab_results.jsonl")
     ap.add_argument(
-        "--queries", default=None,
-        help="comma-separated query subset (default: the frozen R6 set)",
+        "--queries", default="",
+        help="comma-separated query subset (default: bench.py's HEADLINE)",
     )
-    ap.add_argument("--golden", type=int, default=1)
     args = ap.parse_args()
+    names = [n for n in args.queries.split(",") if n]
 
     by_side: dict[str, list[dict]] = {"A": [], "B": []}
-    repos = {"A": args.repo_a, "B": args.repo_b}
+    repos = {"A": os.path.abspath(args.repo_a), "B": os.path.abspath(args.repo_b)}
     for i in range(args.rounds):
         # pair i runs A first when i is even, B first when odd
         for side in ("AB" if i % 2 == 0 else "BA"):
             print(f"--- pair {i + 1}/{args.rounds}: {side} ---", flush=True)
-            by_side[side].append(
-                run_worker(repos[side], args.out, args.queries, args.golden)
-            )
+            by_side[side].append(run_bench(repos[side], args.out, names))
             print(json.dumps(_brief(by_side[side][-1])), flush=True)
     runs_a, runs_b = by_side["A"], by_side["B"]
 
     print("\n=== summary ===")
     for side, runs in (("A", runs_a), ("B", runs_b)):
-        totals = [r["total_min"] for r in runs]
-        goldens = [
-            r["golden_tier"]["etl_sec"]
-            for r in runs
-            if isinstance(r.get("golden_tier"), dict)
-            and "etl_sec" in r["golden_tier"]
-        ]
+        totals = [r["value"] for r in runs]
+        goldens = [r["golden_tier"].get("etl_sec") for r in runs]
         print(
-            f"{side} {runs[0]['git']}: totals={totals} "
+            f"{side} {repos[side]}: totals={totals} "
             f"median={statistics.median(totals):.2f} "
             f"goldens={goldens}"
         )
-    med_a = statistics.median([r["total_min"] for r in runs_a])
-    med_b = statistics.median([r["total_min"] for r in runs_b])
+    med_a = statistics.median([r["value"] for r in runs_a])
+    med_b = statistics.median([r["value"] for r in runs_b])
     print(f"A/B total ratio: {med_a / med_b:.3f}")
     # probe-normalized: divide by the ref-probe ratio so a box that
     # drifted between the two sides' sample windows doesn't masquerade
@@ -104,13 +92,10 @@ def main() -> None:
             f"probe-normalized total ratio: {med_a / med_b / probe_ratio:.3f}"
         )
     # the per-query view: biggest same-pair deltas, medians across pairs
-    names = runs_a[0]["queries"].keys()
     deltas = []
-    for n in names:
-        # skip queries either side lacks BEFORE the median: a NaN in
-        # the list breaks statistics.median's sort and can yield a
-        # wrong FINITE number the qb == qb guard cannot catch
-        # (round-13 ADVICE)
+    for n in runs_a[0]["queries"]:
+        # skip queries either side lacks (two commits whose HEADLINE
+        # sets differ) rather than take a median over a partial list
         vals_a = [r["queries"][n] for r in runs_a if n in r["queries"]]
         vals_b = [r["queries"][n] for r in runs_b if n in r["queries"]]
         if not vals_a or not vals_b:
@@ -129,16 +114,15 @@ def main() -> None:
 
 
 def _brief(r: dict) -> dict:
-    g = r.get("golden_tier") or {}
+    g = r["golden_tier"]
     return {
-        "git": r["git"],
-        "total_min": r["total_min"],
+        "value": r["value"],
         "golden_etl": g.get("etl_sec"),
         "golden_stages": g.get("stage_sec"),
         "ref_probe": r.get("ref_query_probe"),
         "mt_probe": r.get("mt_speed_probe"),
         "empty_job_ms": r.get("empty_job_ms"),
-        "load": r.get("loadavg_1m"),
+        "contaminated": r.get("contaminated", False),
     }
 
 

@@ -1,13 +1,12 @@
 """Per-query plan capture and timing for optimization work.
 
 Captures `.explain("formatted")` for headline queries into
-<outdir>/<name>_<tag>.txt and times each with the bench's own
-hash-force probe (same methodology as bench.py: discarded warm-up, N
-timed iterations, min3-median). Usage:
+<outdir>/<name>_<tag>.txt and times each through bench.time_query, the
+bench's own timing loop (discarded warm-up, $SPARK_GRAFT_BENCH_ITERS
+timed iterations with the bench's top-ups, min3-median). Usage:
 
     python tools/measure.py plans/r15 before              # all headline queries
     python tools/measure.py plans/r15 after q1 q2 ...     # a subset, tagged 'after'
-    python tools/measure.py --iters 5 plans/r15 before
 
 `--conf JSON` adds session confs (get_spark's extra_conf). A config
 A/B alternates the two sides in fresh processes, so box drift falls on
@@ -25,9 +24,7 @@ import argparse
 import json
 import os
 import re
-import statistics
 import sys
-import time
 from contextlib import redirect_stdout
 import io
 
@@ -67,11 +64,10 @@ def main() -> None:
     p.add_argument("outdir", help="directory for the captured plans")
     p.add_argument("tag", nargs="?", default="before")
     p.add_argument("queries", nargs="*", help="default: the headline set")
-    p.add_argument("--iters", type=int, default=3)
     p.add_argument("--conf", type=json.loads, default={},
                    help="extra session confs as a JSON object")
     a = p.parse_args()
-    tag, iters, outdir = a.tag, a.iters, a.outdir
+    tag, outdir = a.tag, a.outdir
     names = a.queries or bench.HEADLINE
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     os.makedirs(outdir, exist_ok=True)
@@ -79,11 +75,8 @@ def main() -> None:
     spark = get_spark(app_name="measure", extra_conf=a.conf)
     spark.sparkContext.setLogLevel("ERROR")
 
-    # same warmup as bench.py
+    # JVM warm-up outside the timed region
     spark.range(1_000_000).selectExpr("sum(id)").collect()
-
-    def run_full(name: str) -> None:
-        bench.hash_force(QUERIES[name](spark, sf_dir))
 
     results: dict[str, float] = {}
     shapes: dict[str, dict] = {}
@@ -94,13 +87,8 @@ def main() -> None:
         with open(os.path.join(outdir, f"{name}_{tag}.txt"), "w") as f:
             f.write(text)
         shapes[name] = plan_shape(text)
-        run_full(name)  # warm-up, discarded
-        times = []
-        for _ in range(iters):
-            t0 = time.perf_counter()
-            run_full(name)
-            times.append(time.perf_counter() - t0)
-        results[name] = round(statistics.median(sorted(times)[:3]), 3)
+        times = bench.time_query(spark, sf_dir, name, bench.bench_iters())
+        results[name] = round(bench.robust_stat(times), 3)
         print(
             json.dumps({"q": name, "sec": results[name], "shape": shapes[name]}),
             file=sys.stderr,
