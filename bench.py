@@ -96,7 +96,7 @@ HEADLINE = [
     "x_bigram_surprisal",      # bigram-LM typicality scoring (r5)
     "x_weighted_sample",       # E-S weighted top-k sampling (r5)
     "x_anomaly_zscore",        # exact-variance anomaly flags (r5)
-    "x_sample_exact_k",        # keep_count per-stratum sampler (r5)
+    "x_sample_exact_k",        # per-stratum row_number() <= k window (r5)
     "x_salted_skew_join",      # hot-key salted enrichment join (r6)
     "x_heavy_hitters",         # two-round Misra-Gries exact heavy hitters (r6)
     "h_sketch_rollup_hll",     # mergeable HLL weekly rollup (r6)

@@ -349,10 +349,9 @@ def grouped_top_fraction(
     group_col: str,
     order_col: str,
     id_col: str,
-    keep_permille: int | None = None,
+    keep_permille: int,
     n_buckets: int = 64,
     accuracy: int = 10000,
-    keep_count: int | None = None,
 ) -> DataFrame:
     """Exact per-group top-fraction selection without a per-group sort.
 
@@ -361,9 +360,6 @@ def grouped_top_fraction(
     ``ROW_NUMBER() OVER (PARTITION BY g ORDER BY v DESC, id) <= k_g``. The
     quota is integer arithmetic (``(n*p + 999) // 1000``) so engines
     can't disagree on a float-times-count ulp at the ceil boundary.
-    Alternatively pass ``keep_count=k`` for an EXACT per-group k
-    (capped at the group size) — the "exactly k docs per language"
-    eval-set builder; everything else is identical.
 
     ``Window.partitionBy(group)`` would sort each whole group in ONE task
     — the grouped analog of the unpartitioned-window scale-killer (a
@@ -389,12 +385,8 @@ def grouped_top_fraction(
     null group values are not supported. For unbounded group keys use
     with_global_row_number over a composite surrogate instead.
     """
-    if (keep_permille is None) == (keep_count is None):
-        raise ValueError("pass exactly one of keep_permille / keep_count")
-    if keep_permille is not None and not 0 < keep_permille <= 1000:
+    if not 0 < keep_permille <= 1000:
         raise ValueError("keep_permille must be in (0, 1000]")
-    if keep_count is not None and keep_count <= 0:
-        raise ValueError("keep_count must be positive")
     # persist once: feeds the bounds pass, the histogram pass, and the
     # returned plan (same LRU-1 discipline as _stats)
     bucketed = _persist_and_bucket(df, order_col, n_buckets, accuracy)
@@ -410,13 +402,8 @@ def grouped_top_fraction(
     boundary: dict[object, int] = {}  # the one bucket needing ranking
     remainder: dict[object, int] = {}  # rows still owed from boundary
     for g, per_bkt in hist.items():
-        n_g = sum(per_bkt.values())
-        # fractional quota (ceil in exact integer math) or exact-k
-        # (capped at the group size) — same walk either way
-        if keep_count is not None:
-            k = min(keep_count, n_g)
-        else:
-            k = (n_g * keep_permille + 999) // 1000
+        # fractional quota, ceil in exact integer math
+        k = (sum(per_bkt.values()) * keep_permille + 999) // 1000
         taken = 0
         for b in sorted(per_bkt, reverse=True):
             if taken + per_bkt[b] <= k:

@@ -497,15 +497,39 @@ def ja_orphan_anti_join(spark, sf_dir):
 )
 def a4_global_summary(spark, sf_dir):
     # A4 (etl.R:632-644): executive summary over the fact.
+    # The three distinct counts are one (key set, key) dedup with the
+    # key sets numbered here, not three countDistincts in one agg:
+    # Spark's distinct-aggregate rewrite orders its Expand groups by
+    # expression-id hashes, so each build would pick one of six plans
+    # and compile new classes for it instead of reusing cached ones.
     li = load_table(spark, sf_dir, "lineitem")
-    return li.agg(
+    counted = {
+        "unique_orders": "l_orderkey",
+        "unique_parts": "l_partkey",
+        "unique_suppliers": "l_suppkey",
+    }
+    pairs = li.select(
+        F.inline(
+            F.array(
+                *[
+                    F.struct(F.lit(i).alias("key_set"), F.col(c).alias("key"))
+                    for i, c in enumerate(counted.values())
+                ]
+            )
+        )
+    ).filter(F.col("key").isNotNull())
+    distinct = pairs.distinct().agg(
+        *[F.count_if(F.col("key_set") == i).alias(n) for i, n in enumerate(counted)]
+    )
+    totals = li.agg(
         F.count("*").alias("total_rows"),
         _dsum("l_quantity").alias("total_qty"),
-        F.countDistinct("l_orderkey").alias("unique_orders"),
-        F.countDistinct("l_partkey").alias("unique_parts"),
-        F.countDistinct("l_suppkey").alias("unique_suppliers"),
         F.date_format(F.min(F.to_date("l_shipdate")), "yyyy-MM-dd").alias("min_ship"),
         F.date_format(F.max(F.to_date("l_shipdate")), "yyyy-MM-dd").alias("max_ship"),
+    )
+    return totals.crossJoin(distinct).select(
+        "total_rows", "total_qty", "unique_orders", "unique_parts",
+        "unique_suppliers", "min_ship", "max_ship",
     )
 
 
@@ -6186,24 +6210,22 @@ def x_sample_exact_k(spark, sf_dir):
     # eval sets need an exact count). Order within each language is the
     # content fingerprint (content-addressed: the sample is stable under
     # row reordering and ingestion-time changes), ties broken by doc_id.
-    # Selection runs through grouped_top_fraction's histogram-refinement
-    # ranker in keep_count mode — the per-language quota is exact-k with
-    # NO per-group sort window, so a 30-TB language costs one
-    # boundary-bucket rank, not a single-task sort. The ranker keeps
-    # top-by-DESC, so the ascending fingerprint order rides a negated
-    # key column.
-    from ..operators.ranking import grouped_top_fraction
-
+    # The row_number() <= 20 filter plans as a Partial WindowGroupLimit
+    # below the Exchange and a Final one above it: each map task keeps
+    # only its own top 20 per language, so a 30-TB language is never
+    # sorted in one task, and building the plan runs no Spark job.
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id",
         "lang",
         "n_chars",
-        (-T.fingerprint(F.col("text"))).alias("neg_fp"),
+        T.fingerprint(F.col("text")).alias("fp"),
     )
-    kept = grouped_top_fraction(
-        docs, "lang", "neg_fp", "doc_id", keep_count=20
+    w = Window.partitionBy("lang").orderBy("fp", "doc_id")
+    return (
+        docs.withColumn("__rn", F.row_number().over(w))
+        .filter(F.col("__rn") <= 20)
+        .select("lang", "doc_id", "n_chars")
     )
-    return kept.select("lang", "doc_id", "n_chars")
 
 
 @query(

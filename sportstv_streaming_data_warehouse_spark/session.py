@@ -17,6 +17,14 @@ on a 1000-executor cluster against ~100 TB:
 - session timezone pinned to UTC so date/calendar semantics are
   deterministic and match the DuckDB oracle.
 - Arrow enabled for any pandas_udf path (vectorized Python transfer).
+- ``codegen.cache.maxEntries`` 1000: the generated-class cache is a
+  Guava cache split into 4 segments that each evict on their own, so
+  Spark's default of 100 holds about 25 classes per segment. One pass
+  over perfbench's six-query catalog mix needs about 150 classes: at
+  the default every pass recompiled about 110 of them (83-142 per
+  pass on a 4-core box at sf0.01), and every warehouse reload cycle
+  21, while a query repeated on its own compiled none. With 250 per
+  segment a steady pass or cycle compiles 0.
 
 Local-mode Python workers start through the package's own daemon module
 (``daemon.py``), which drops Spark's ``pyspark.zip``, ``py4j-*-src.zip``
@@ -86,6 +94,7 @@ def get_spark(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.files.maxPartitionBytes", "134217728")
+        .config("spark.sql.codegen.cache.maxEntries", "1000")
         .config("spark.sql.parquet.compression.codec", "snappy")
         .config("spark.ui.enabled", "false")
         .config("spark.driver.host", "127.0.0.1")

@@ -57,3 +57,46 @@ def test_pairs_alternate_which_side_runs_first(monkeypatch, tmp_path, capsys):
     # the summary still attributes each run to its own side
     assert "A/B total ratio: 0.500" in capsys.readouterr().out
     assert len((tmp_path / "ab.jsonl").read_text().splitlines()) == 8
+
+
+def _summary(monkeypatch, tmp_path, capsys, per_query_b):
+    """ab_compare's printed summary for one pair in which side A takes
+    1 s per query and side B ``per_query_b[q]``."""
+    ab = _load_ab_compare()
+    repo_a, repo_b = str(tmp_path / "repo_a"), str(tmp_path / "repo_b")
+
+    def fake_run(cmd, cwd, **kwargs):
+        times = per_query_b if cwd == repo_b else dict.fromkeys(per_query_b, 1.0)
+        record = {
+            "value": sum(times.values()),
+            "queries": times,
+            "golden_tier": {},
+            "ref_query_probe": 0.3,
+        }
+        return subprocess.CompletedProcess(cmd, 0, stdout=json.dumps(record), stderr="")
+
+    monkeypatch.setattr(ab.subprocess, "run", fake_run)
+    monkeypatch.setattr(
+        sys, "argv",
+        ["ab_compare.py", repo_a, repo_b, "--rounds", "1",
+         "--out", str(tmp_path / "ab.jsonl")],
+    )
+    ab.main()
+    return capsys.readouterr().out
+
+
+def test_three_queries_are_listed_once(monkeypatch, tmp_path, capsys):
+    out = _summary(monkeypatch, tmp_path, capsys, {"q1": 2.0, "q2": 4.0, "q3": 0.5})
+    for q in ("q1", "q2", "q3"):
+        assert out.count(f"  {q}: ") == 1
+    assert "smallest:" not in out
+
+
+def test_smallest_never_repeats_largest(monkeypatch, tmp_path, capsys):
+    times = {f"q{i}": 1.0 + i / 10 for i in range(10)}
+    out = _summary(monkeypatch, tmp_path, capsys, times)
+    largest, smallest = out.split("smallest:")
+    listed = [l.split(":")[0].strip() for l in smallest.splitlines() if l.strip()]
+    # 10 queries: the 8 largest A/B ratios, then the 2 not yet shown
+    assert listed == ["q8", "q9"]
+    assert all(f"  {q}: " not in largest for q in listed)

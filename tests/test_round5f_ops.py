@@ -1,45 +1,54 @@
 """Semantics tests for the round-5 sixth-batch operators: exact-k
-per-stratum sampling (keep_count mode of the histogram ranker) and RFM
+per-stratum sampling (a row_number() <= k window per language) and RFM
 quintile segmentation (distributed NTILE chain)."""
 
+import os
+import random
+
+import pandas as pd
 from pyspark.sql import functions as F
 
+from sportstv_streaming_data_warehouse_spark.functions import text as T
 from sportstv_streaming_data_warehouse_spark.operators.ranking import (
     distributed_ntile,
     grouped_top_fraction,
 )
 from sportstv_streaming_data_warehouse_spark.plans.catalog import QUERIES
+from sportstv_streaming_data_warehouse_spark.sources.fixtures import load_table
 
 from .conftest import SF01
 
 
-def test_keep_count_exact_quota_and_cap(spark):
-    rows = [("a", float(v), v) for v in range(30)] + [
-        ("b", float(v), 100 + v) for v in range(3)
-    ]
-    df = spark.createDataFrame(rows, ["g", "v", "rid"])
-    kept = grouped_top_fraction(df, "g", "v", "rid", keep_count=5).collect()
-    by_g = {}
-    for r in kept:
-        by_g.setdefault(r["g"], []).append(r["v"])
-    # group a: exactly 5, and they are the top-5 by value
-    assert sorted(by_g["a"], reverse=True) == [29.0, 28.0, 27.0, 26.0, 25.0]
-    # group b: only 3 rows exist -> quota capped at group size
-    assert sorted(by_g["b"], reverse=True) == [2.0, 1.0, 0.0]
+def _write_documents(sf_dir, rows):
+    """A one-table fixture directory holding ``documents.parquet``."""
+    os.makedirs(sf_dir)
+    pd.DataFrame(rows, columns=["doc_id", "text", "lang", "n_chars"]).to_parquet(
+        os.path.join(sf_dir, "documents.parquet"), index=False
+    )
+    return sf_dir
+
+
+def _planted_docs():
+    # 'en' holds more than the quota, 'fr' exactly the quota, 'de' fewer
+    rows = []
+    for lang, n in (("en", 45), ("fr", 20), ("de", 7)):
+        for i in range(n):
+            doc_id = len(rows)
+            text = f"{lang} doc {doc_id} body {'x' * (doc_id % 11)}"
+            rows.append((doc_id, text, lang, len(text)))
+    return rows
 
 
 def test_keep_count_validation(spark):
+    # keep_permille is the ranker's only mode: required, in (0, 1000]
     df = spark.createDataFrame([("a", 1.0, 1)], ["g", "v", "rid"])
     import pytest
 
-    with pytest.raises(ValueError):
-        grouped_top_fraction(df, "g", "v", "rid")  # neither mode
-    with pytest.raises(ValueError):
-        grouped_top_fraction(
-            df, "g", "v", "rid", keep_permille=10, keep_count=5
-        )  # both modes
-    with pytest.raises(ValueError):
-        grouped_top_fraction(df, "g", "v", "rid", keep_count=0)
+    with pytest.raises(TypeError):
+        grouped_top_fraction(df, "g", "v", "rid")
+    for bad in (0, 1001):
+        with pytest.raises(ValueError):
+            grouped_top_fraction(df, "g", "v", "rid", keep_permille=bad)
 
 
 def test_sample_exact_k_catalog_contract(spark):
@@ -48,29 +57,59 @@ def test_sample_exact_k_catalog_contract(spark):
         r["lang"]: r["n"]
         for r in out.groupBy("lang").agg(F.count("*").alias("n")).collect()
     }
-    # every language contributes min(20, n_lang) docs, no dups
+    n_lang = {
+        r["lang"]: r["n"]
+        for r in load_table(spark, SF01, "documents")
+        .groupBy("lang")
+        .agg(F.count("*").alias("n"))
+        .collect()
+    }
+    # every language contributes exactly min(20, n_lang) docs, no dups
     assert out.count() == out.select("doc_id").distinct().count()
-    for lang, n in counts.items():
-        assert n <= 20
+    assert counts == {lang: min(20, n) for lang, n in n_lang.items()}
 
 
-def test_sample_exact_k_content_addressed_stability(spark):
-    # shuffling input row order must not change the selected set
-    from sportstv_streaming_data_warehouse_spark.functions import text as T
-
-    docs = [(i, f"doc number {i} text {'x' * (i % 7)}", "en") for i in range(60)]
-    a = spark.createDataFrame(docs, ["doc_id", "text", "lang"])
-    b = spark.createDataFrame(list(reversed(docs)), ["doc_id", "text", "lang"])
-
-    def pick(df):
-        keyed = df.select(
-            "doc_id", "lang", (-T.fingerprint(F.col("text"))).alias("neg_fp")
+def test_sample_exact_k_exact_quota_per_language(spark, tmp_path):
+    rows = _planted_docs()
+    sf_dir = _write_documents(str(tmp_path / "sf"), rows)
+    got = QUERIES["x_sample_exact_k"](spark, sf_dir).collect()
+    by_lang = {}
+    for r in got:
+        by_lang.setdefault(r["lang"], set()).add(r["doc_id"])
+    assert {g: len(ids) for g, ids in by_lang.items()} == {
+        "en": 20, "fr": 20, "de": 7
+    }
+    # the kept docs are the lowest (fingerprint, doc_id) of each language
+    fp = {
+        r["doc_id"]: r["fp"]
+        for r in load_table(spark, sf_dir, "documents")
+        .select("doc_id", T.fingerprint(F.col("text")).alias("fp"))
+        .collect()
+    }
+    for lang, ids in by_lang.items():
+        ranked = sorted(
+            (fp[d], d) for d, _, g, _ in rows if g == lang
         )
-        kept = grouped_top_fraction(keyed, "lang", "neg_fp", "doc_id", keep_count=10)
-        return {r["doc_id"] for r in kept.collect()}
+        assert ids == {d for _, d in ranked[:20]}
 
-    assert pick(a) == pick(b)
-    assert len(pick(a)) == 10
+
+def test_sample_exact_k_stable_under_row_reordering(spark, tmp_path):
+    # content-addressed: the selected set does not depend on row order
+    rows = _planted_docs()
+    shuffled = list(rows)
+    random.Random(7).shuffle(shuffled)
+
+    def pick(name, table):
+        sf_dir = _write_documents(str(tmp_path / name), table)
+        return {
+            (r["lang"], r["doc_id"], r["n_chars"])
+            for r in QUERIES["x_sample_exact_k"](spark, sf_dir).collect()
+        }
+
+    a = pick("as_written", rows)
+    assert a == pick("reversed", list(reversed(rows)))
+    assert a == pick("shuffled", shuffled)
+    assert len(a) == 47
 
 
 def test_rfm_quintile_semantics(spark):

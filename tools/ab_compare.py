@@ -108,8 +108,11 @@ def main() -> None:
     print("largest A/B per-query ratios (median across pairs):")
     for ratio, n, qa, qb in deltas[:8]:
         print(f"  {n}: {qa:.2f}s vs {qb:.2f}s = {ratio:.2f}x")
-    print("smallest:")
-    for ratio, n, qa, qb in deltas[-4:]:
+    # the smallest four not already listed as largest
+    smallest = deltas[8:][-4:]
+    if smallest:
+        print("smallest:")
+    for ratio, n, qa, qb in smallest:
         print(f"  {n}: {qa:.2f}s vs {qb:.2f}s = {ratio:.2f}x")
 
 
